@@ -1085,7 +1085,12 @@ def prefix_filter_pairs(
     aggregate proves the hash is injective ON THIS TOKEN SET
     (count distinct tokens == count distinct hashes); the ~2⁻⁶⁴·|V|²
     collision case falls back to the original string path, so the
-    operator is exact on EVERY input, not almost-every. Under a
+    operator is exact on EVERY input, not almost-every (the string
+    path is pinned by a forced-collision test). NULL tokens are
+    dropped up front, so they cannot disable the fast path. The probe
+    is an eager job over ``tokens``, which must be deterministic
+    between the probe and the plan's execution (callers read
+    fingerprint-memoized parquet). Under a
     bijection |A∩B| and |A∪B| are unchanged, and any consistent total
     order supports the prefix theorem, so ordering positions by
     (df, hash) instead of (df, token) moves WHICH tokens form each
@@ -1101,6 +1106,10 @@ def prefix_filter_pairs(
     Output: (id_a, id_b, inter_size, union_size, jaccard), id_a < id_b.
     """
     tid, tok = F.col(id_col), F.col(token_col)
+    # a NULL token is no token: countDistinct skips it but counts its
+    # hash (xxhash64(NULL) = 42), and collect_set keeps the hash but
+    # drops the string — drop it once, before the probe and the plan
+    tokens = tokens.filter(tok.isNotNull())
     probe = tokens.agg(
         F.countDistinct(tok).alias("__nt"),
         F.countDistinct(F.xxhash64(tok)).alias("__nh"),

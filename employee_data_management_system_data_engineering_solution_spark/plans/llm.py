@@ -5357,7 +5357,7 @@ def phash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "strike_stream_stateful",
-    # The per-key fold (streaming/strikes._strike_state_fn) is
+    # The per-key fold (streaming/strikes._fold_employee) is
     # deterministic in event-time order, so it has a closed form the
     # oracle can replay: with monthly flag counts c_1..c_k (ascending
     # months), strikes reset at each month boundary while the running
@@ -5367,11 +5367,12 @@ def phash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     #   else c_k (the last month's count),
     # PLUS the employee's NULL-ts flagged count: a month-less strike is
     # PERMANENT (the r14 timeless-strike contract at
-    # streaming/strikes._strike_state_fn) — it belongs to no month, so
+    # streaming/strikes._fold_employee) — it belongs to no month, so
     # no month's cooldown can reset it, and only that choice gives the
     # fold a batch-order-independent closed form at all.
     # Employees present in the stream with no flagged messages hold
-    # state 0 / ACTIVE.
+    # state 0 / ACTIVE. A NULL emp_id is one employee, as Spark's
+    # groupBy keys it, so every join on emp_id is null-safe.
     """
     WITH f AS (
       SELECT user_id AS emp_id, strftime(ts, '%Y-%m') AS month, count(*) AS c
@@ -5392,7 +5393,7 @@ def phash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                   THEN sum(f.c) FILTER (WHERE f.month >= fb.m0)
                   ELSE arg_max(f.c, f.month)
              END AS strikes
-      FROM f LEFT JOIN fb ON f.emp_id = fb.emp_id
+      FROM f LEFT JOIN fb ON f.emp_id IS NOT DISTINCT FROM fb.emp_id
       GROUP BY f.emp_id, fb.m0
     ),
     everyone AS (SELECT DISTINCT user_id AS emp_id FROM events)
@@ -5402,8 +5403,8 @@ def phash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 THEN 'INACTIVE' ELSE 'ACTIVE' END
              AS status
     FROM everyone e
-    LEFT JOIN agg a ON e.emp_id = a.emp_id
-    LEFT JOIN tl ON e.emp_id = tl.emp_id
+    LEFT JOIN agg a ON e.emp_id IS NOT DISTINCT FROM a.emp_id
+    LEFT JOIN tl ON e.emp_id IS NOT DISTINCT FROM tl.emp_id
     """,
 )
 def strike_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:

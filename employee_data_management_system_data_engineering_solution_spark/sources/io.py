@@ -208,15 +208,14 @@ _ARROW_BATCH_CONF = "spark.sql.execution.arrow.maxRecordsPerBatch"
 
 def arrow_batch_defaults(spark: SparkSession) -> None:
     """Apply the engine's Arrow batch-size default to ``spark`` unless
-    the session carries an explicit non-default value (a deployment
-    that tuned the knob keeps its setting). Called at the entry of
-    every Python-boundary operator so the optimization is a property
-    of the ENGINE, not of whichever harness built the session (r16
-    verdict item 2 — previously only bench.py's session had it, and
-    any other deployment ran 10k-row batches). Runtime-settable SQL
-    conf; idempotent."""
+    the session sets the conf explicitly — to any value, Spark's own
+    default of 10000 included (a deployment that tuned the knob keeps
+    its setting). Called at the entry of every Python-boundary operator
+    so the optimization is a property of the ENGINE, not of whichever
+    harness built the session. Runtime-settable SQL conf; idempotent."""
     try:
-        if spark.conf.get(_ARROW_BATCH_CONF, "10000") == "10000":
+        # a None default reads back None only while the conf is unset
+        if spark.conf.get(_ARROW_BATCH_CONF, None) is None:
             spark.conf.set(_ARROW_BATCH_CONF, str(ARROW_BATCH_ROWS))
     except Exception:
         pass  # a read-only/conf-locked session keeps its defaults

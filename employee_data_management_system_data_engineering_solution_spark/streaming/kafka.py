@@ -176,7 +176,7 @@ def run_strike_stream_from_wire(
     """The COMPLETE production Kafka topology in one call: wire frames →
     ``parse_kafka_events`` → reserved-word ``flag_messages`` over the
     message payload (the production path, not the ``event_type``
-    stand-in) → the per-employee stateful strike machine → final state
+    stand-in) → the bucketed stateful strike machine → final state
     (emp_id, strike_count, status).
 
     ``wire_dir`` holds parquet files of ``KAFKA_WIRE_SCHEMA`` rows —
@@ -187,61 +187,36 @@ def run_strike_stream_from_wire(
     multi-file dir exercises cross-batch state continuation exactly as
     a long-lived topic would.
     """
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    from .replay import stream_confs
+    from .strikes import _latest_state, _strike_states, flag_messages
 
-    from .strikes import (
-        _OUTPUT_SCHEMA,
-        _STATE_SCHEMA,
-        _strike_state_fn,
-        flag_messages,
-    )
-
-    prior_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     name = "kafka_wire_strikes_sink"
     q = None
     try:
-        wire = (
-            spark.readStream.schema(KAFKA_WIRE_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(wire_dir)
-        )
-        parsed = parse_kafka_events(wire)
-        prepared = flag_messages(parsed, "props").select(
-            F.col("user_id").alias("emp_id"),
-            "flagged",
-            F.date_format("ts", "yyyy-MM").alias("month"),
-        )
-        result = prepared.groupBy("emp_id").applyInPandasWithState(
-            _strike_state_fn,
-            outputStructType=_OUTPUT_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        q = (
-            result.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        out = spark.table(name)
-        out = spark.createDataFrame(out.collect(), schema=out.schema)
+        with stream_confs(spark, state_partitions):
+            wire = (
+                spark.readStream.schema(KAFKA_WIRE_SCHEMA)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(wire_dir)
+            )
+            prepared = flag_messages(parse_kafka_events(wire), "props").select(
+                F.col("user_id").alias("emp_id"),
+                "flagged",
+                F.date_format("ts", "yyyy-MM").alias("month"),
+            )
+            q = (
+                _strike_states(prepared)
+                .writeStream.outputMode("update")
+                .format("memory")
+                .queryName(name)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+            out = spark.table(name)
+            out = spark.createDataFrame(out.collect(), schema=out.schema)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior_parts)
         if q is not None:
             q.stop()
         spark.catalog.dropTempView(name)
-
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("emp_id").orderBy(
-        F.col("month").desc(), F.col("strike_count").desc()
-    )
-    return (
-        out.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("emp_id", "strike_count", "status")
-    )
+    return _latest_state(out)

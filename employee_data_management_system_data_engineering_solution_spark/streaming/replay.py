@@ -43,6 +43,34 @@ ROCKSDB_PROVIDER = (
 
 _PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
 
+
+@contextmanager
+def stream_confs(
+    spark: SparkSession, state_partitions: int, state_store_provider: str | None = None
+) -> Iterator[None]:
+    """Session confs every stream run pins: NANOS-safe parquet reads,
+    the stateful exchange's partition count, and (optionally) the
+    state-store provider. Each is restored to its prior value — or
+    unset, if it had none — on exit."""
+    pinned = {
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+        "spark.sql.shuffle.partitions": str(state_partitions),
+    }
+    if state_store_provider is not None:
+        pinned[_PROVIDER_CONF] = state_store_provider
+    prior = {k: spark.conf.get(k, None) for k in pinned}
+    for k, v in pinned.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 #: Event-time for watermark-advancing sentinel batches — far past any
 #: real event so `sentinel_ts(k) - delay` finalizes every data window.
 _SENTINEL_BASE_NS = 4_102_444_800 * 1_000_000_000  # 2100-01-01 UTC
@@ -121,61 +149,50 @@ def replayed_events(
     ``state_store_provider``: fully-qualified provider class for the
     stateful operators' state store (``ROCKSDB_PROVIDER`` for the
     at-scale RocksDB store); ``None`` keeps the session default
-    (HDFS-backed in-memory). Restored on exit either way."""
+    (HDFS-backed in-memory). Every conf is restored on exit
+    (:func:`stream_confs`)."""
     from ..sources.io import normalize_nanos
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    prior_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    prior_provider = spark.conf.get(_PROVIDER_CONF, None)
-    if state_store_provider is not None:
-        spark.conf.set(_PROVIDER_CONF, state_store_provider)
 
     stage_dir = tempfile.mkdtemp(prefix="eds_stream_")
     queries = []
     names = []
     try:
-        src = f"{sf_dir}/events.parquet"
-        os.symlink(src, f"{stage_dir}/events.parquet")
-        base_mtime = os.path.getmtime(f"{stage_dir}/events.parquet")
-        for i, rows in enumerate(sentinel_batches):
-            p = os.path.join(stage_dir, f"z_sentinel_{i}.parquet")
-            _write_sentinel_file(src, p, rows, _SENTINEL_BASE_NS + i * _SENTINEL_STEP_NS)
-            os.utime(p, (base_mtime + 60 * (i + 1), base_mtime + 60 * (i + 1)))
-        reader = spark.readStream.schema(events_schema(spark, src))
-        if max_files_per_trigger is not None:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        stream = reader.parquet(stage_dir)
+        with stream_confs(spark, state_partitions, state_store_provider):
+            src = f"{sf_dir}/events.parquet"
+            os.symlink(src, f"{stage_dir}/events.parquet")
+            base_mtime = os.path.getmtime(f"{stage_dir}/events.parquet")
+            for i, rows in enumerate(sentinel_batches):
+                p = os.path.join(stage_dir, f"z_sentinel_{i}.parquet")
+                _write_sentinel_file(src, p, rows, _SENTINEL_BASE_NS + i * _SENTINEL_STEP_NS)
+                os.utime(p, (base_mtime + 60 * (i + 1), base_mtime + 60 * (i + 1)))
+            reader = spark.readStream.schema(events_schema(spark, src))
+            if max_files_per_trigger is not None:
+                reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+            stream = reader.parquet(stage_dir)
 
-        def run(result: DataFrame, name: str, output_mode: str = "update") -> DataFrame:
-            q = (
-                result.writeStream.outputMode(output_mode)
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .start()
-            )
-            queries.append(q)
-            names.append(name)
-            q.awaitTermination()
-            out = spark.table(name)
-            # DRIVER-BOUNDED collect: the memory sink already holds the
-            # result on the driver, and every carrier aggregates before
-            # sinking (per-key/window counts, <= a few thousand rows at
-            # any tested sf). The round-trip only detaches the frame
-            # from the temp view dropped below. Do NOT lift this into a
-            # production sink path — raw/unaggregated streams must go
-            # to a file/Kafka sink instead.
-            return spark.createDataFrame(out.collect(), schema=out.schema)
+            def run(result: DataFrame, name: str, output_mode: str = "update") -> DataFrame:
+                q = (
+                    result.writeStream.outputMode(output_mode)
+                    .format("memory")
+                    .queryName(name)
+                    .trigger(availableNow=True)
+                    .start()
+                )
+                queries.append(q)
+                names.append(name)
+                q.awaitTermination()
+                out = spark.table(name)
+                # DRIVER-BOUNDED collect: the memory sink already holds the
+                # result on the driver, and every carrier aggregates before
+                # sinking (per-key/window counts, <= a few thousand rows at
+                # any tested sf). The round-trip only detaches the frame
+                # from the temp view dropped below. Do NOT lift this into a
+                # production sink path — raw/unaggregated streams must go
+                # to a file/Kafka sink instead.
+                return spark.createDataFrame(out.collect(), schema=out.schema)
 
-        yield normalize_nanos(stream), run
+            yield normalize_nanos(stream), run
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior_parts)
-        if state_store_provider is not None:
-            if prior_provider is None:
-                spark.conf.unset(_PROVIDER_CONF)
-            else:
-                spark.conf.set(_PROVIDER_CONF, prior_provider)
         for q in queries:
             q.stop()
         for name in names:

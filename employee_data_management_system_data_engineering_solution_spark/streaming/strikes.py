@@ -11,22 +11,33 @@ standing in for the Kafka feed (``user_id``→emp_id, ``event_type`` ==
 'error' → flagged message; a reserved-word ``rlike`` over a message
 column is the production path and is exposed via ``flag_messages``).
 
-Scale notes: the stateful path keeps one small state row per employee
-(``applyInPandasWithState``), partitioned by key — state size is
-O(#employees), not O(#messages). The batch-equivalent aggregation is a
+Scale notes: the stateful path (``applyInPandasWithState``) groups by
+a fixed key bucket, ``pmod(xxhash64(emp_id), STATE_BUCKETS)``, not by
+employee. Each bucket's state row holds parallel arrays with one slot
+per employee, so the state store holds at most ``STATE_BUCKETS`` rows
+and each micro-batch makes at most that many Python group calls,
+however many employees it touches — per-group Arrow slicing and pandas
+conversion, not the fold, dominated the per-employee layout. State
+size is still O(#employees), not O(#messages). The trade-off shows at
+large key counts: every bucket a batch touches is rewritten whole (all
+of its employees), so per-batch state-store writes grow with
+#employees / STATE_BUCKETS per touched bucket instead of with the
+employees actually updated. The batch-equivalent aggregation is a
 single partial-agg shuffle used for the DuckDB oracle and backfills.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 from typing import Any
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
+    ArrayType,
     IntegerType,
     LongType,
     StringType,
@@ -78,11 +89,32 @@ def strike_report(events: DataFrame, emp_col: str = "user_id") -> DataFrame:
     )
 
 
+#: Key buckets of the applyInPandasWithState strike operator: it groups
+#: by ``pmod(xxhash64(emp_id), STATE_BUCKETS)``, so one Python group
+#: call folds every employee of a bucket and the state store holds at
+#: most this many rows. A module constant, not a parameter: the
+#: checkpoint pins the grouping key the same way it pins the
+#: shuffle-partition count, so a different value needs a fresh
+#: checkpoint.
+STATE_BUCKETS = 64
+
+#: Per-employee strike state, as the transformWithState tier
+#: (:class:`StrikeProcessor`) stores it.
 _STATE_SCHEMA = StructType(
     [
         StructField("strikes", IntegerType()),
         StructField("month", StringType()),
         StructField("timeless", IntegerType()),
+    ]
+)
+#: Per-bucket state of the applyInPandasWithState tier: parallel
+#: arrays holding one slot per employee ever seen in the bucket.
+_BUCKET_STATE_SCHEMA = StructType(
+    [
+        StructField("emp_id", ArrayType(LongType())),
+        StructField("strikes", ArrayType(IntegerType())),
+        StructField("month", ArrayType(StringType())),
+        StructField("timeless", ArrayType(IntegerType())),
     ]
 )
 _OUTPUT_SCHEMA = StructType(
@@ -96,98 +128,214 @@ _OUTPUT_SCHEMA = StructType(
 
 
 def _coerce_state(raw) -> tuple[int, str, int]:
-    """Normalize a stored strike-state tuple to the 3-field r14 shape.
+    """Normalize a stored per-employee strike tuple to the 3-field
+    ``_STATE_SCHEMA`` shape.
 
-    ``_STATE_SCHEMA`` widened from 2 fields (strikes, month) to 3
-    (+timeless) in r14. A checkpoint written under the old schema
-    cannot be restored by the state store itself — Spark's
-    schema-compatibility check rejects it before Python sees a row
-    (observed as STRUCT_ARRAY_LENGTH_MISMATCH when old/new trees were
-    mixed in the r14 A/B), so pre-r14 strike checkpoints MUST be
-    discarded and the stream replayed from the source. This coercion
-    is defense-in-depth for the tiers whose state handle is not
-    schema-checked by a JVM state store (the fake typed-state handle
-    in the transformWithState parity tests, any future handle that
-    round-trips python tuples): a legacy 2-tuple loads as
-    (strikes, month, timeless=0) instead of failing to unpack.
+    Strike checkpoints are not portable across state-layout changes:
+    Spark's state-store schema check rejects a checkpoint whose key or
+    value schema differs before Python sees a row (observed as
+    STRUCT_ARRAY_LENGTH_MISMATCH when the value widened from 2 fields
+    to 3). Two such changes happened: the value gained the timeless
+    counter, and the applyInPandasWithState tier moved from one state
+    row per employee to one :data:`_BUCKET_STATE_SCHEMA` row per key
+    bucket (key and value both changed). A checkpoint written before
+    either change MUST be discarded and the stream replayed from the
+    source. This coercion is defense in depth for the one tier that
+    still stores per-employee tuples, on handles that round-trip
+    python tuples without a JVM schema check (the fake typed-state
+    handle in the transformWithState parity tests, any future such
+    handle): a legacy (strikes, month) pair loads as timeless=0
+    instead of failing to unpack.
     """
     if raw is None:
         return 0, "", 0
     vals = tuple(raw)
-    if len(vals) == 2:  # pre-r14 checkpoint shape: no timeless counter
+    if len(vals) == 2:  # legacy shape: no timeless counter
         return int(vals[0]), vals[1], 0
     strikes, month, timeless = vals
     return int(strikes), month, int(timeless)
 
 
-def _fold_flagged_batch(
-    pdf: pd.DataFrame, strikes: int, month: str, timeless: int
+def _fold_employee(
+    strikes: int,
+    month: str,
+    timeless: int,
+    month_counts: Iterable[tuple[str, int]],
+    n_timeless: int,
 ) -> tuple[int, str, int]:
-    """One micro-batch of prepared rows folded into the strike state —
-    the ONE fold every stateful API tier runs
-    (``applyInPandasWithState`` via :func:`_strike_state_fn`, the
-    Spark-4 ``transformWithStateInPandas`` twin via
-    :class:`StrikeProcessor`), so the tiers cannot drift.
+    """One micro-batch of ONE employee's flagged rows folded into its
+    strike state — the fold every stateful API tier runs (the bucketed
+    applyInPandasWithState machine, :func:`_strike_state_fn`, and the
+    transformWithState twin, :class:`StrikeProcessor`), so the tiers
+    cannot drift. ``month_counts`` are the batch's (month, flagged
+    count) pairs; ``n_timeless`` counts its flagged rows with no month.
 
-    NULL robustness: a NULL flagged (NULL event_type upstream) is
-    "not flagged" — the batch twin's filter(flagged_expr()) drops it
-    the same way. A flagged row with NULL ts has no month, so it
-    counts as a strike WITHOUT touching the cooldown machine (feeding
-    a sentinel month into the reset comparison would wipe accumulated
-    strikes); one malformed row can never kill the streaming query.
+    Three rules, all here:
 
-    TIMELESS-STRIKE ORDERING CONTRACT (r14, closes advisor r12's open
-    item): a month-less strike is PERMANENT. It carries no position in
-    event time, so no month's cooldown can claim it — it accumulates
-    in its own state counter, immune to the monthly reset, and the
-    reported strike_count/status are computed on dated + timeless.
-    This is the one choice whose final state is independent of how the
-    feed is split into micro-batches (crediting the strike to any
-    month makes the answer depend on WHICH batch the malformed row
-    lands in relative to a month transition); the closed-form oracle
-    adds the per-employee NULL-ts flagged count the same way. The
-    monthly reset itself keys on the DATED count only — also
-    batch-order-independence: a reset gated on the total would fire or
-    not depending on how early the timeless rows arrive. Pinned by
-    test_timeless_strike_survives_cross_batch_reset
-    (tests/test_streaming.py) and the single-batch cases in
-    tests/test_empty_inputs.py; the batch twin counts flagged rows
-    unconditionally (no cooldown), so dated-vs-timeless cannot diverge
-    there."""
-    flagged = pdf[pdf["flagged"].eq(True)]
-    timeless += int(flagged["month"].isna().sum())
-    flagged = flagged[flagged["month"].notna()]
-    for m in sorted(flagged["month"].unique()):
+    * Months are folded in ascending order within a batch. A new month
+      resets the strikes unless they already reached STRIKE_LIMIT
+      (the monthly cooldown, ``README.md:105``).
+    * The cooldown reset keys on the DATED count only. A reset gated on
+      the total would fire or not depending on how early the timeless
+      rows arrive.
+    * The timeless counter is never reset. A flagged row with NULL ts
+      carries no position in event time, so no month's cooldown can
+      claim it; the reported strike_count/status are computed on dated
+      + timeless. This is the one choice whose final state is
+      independent of how the feed is split into micro-batches
+      (crediting the strike to any month makes the answer depend on
+      WHICH batch the malformed row lands in relative to a month
+      transition), and one malformed row can never kill the query. The
+      closed-form oracle adds the per-employee NULL-ts flagged count
+      the same way. Pinned by
+      test_timeless_strike_survives_cross_batch_reset
+      (tests/test_streaming.py) and the single-batch cases in
+      tests/test_empty_inputs.py; the batch twin counts flagged rows
+      unconditionally (no cooldown), so dated-vs-timeless cannot
+      diverge there.
+    """
+    timeless += n_timeless
+    for m, c in sorted(month_counts):
         if m != month and strikes < STRIKE_LIMIT:
             strikes = 0  # cooldown: new month, threshold not hit
         month = max(month, m)
-        strikes += int((flagged["month"] == m).sum())
+        strikes += c
     return strikes, month, timeless
 
 
-def _emit_state_row(emp_id, strikes: int, month: str, timeless: int) -> pd.DataFrame:
-    total = strikes + timeless
-    status = "INACTIVE" if total >= STRIKE_LIMIT else "ACTIVE"
-    return pd.DataFrame(
-        [{"emp_id": emp_id, "strike_count": total, "status": status, "month": month}]
-    )
+def _flagged_counts(pdf: pd.DataFrame) -> tuple[list[tuple[str, int]], int]:
+    """(month, count) pairs and the month-less count of one employee's
+    flagged rows. A NULL flagged (NULL event_type upstream) is "not
+    flagged" — the batch twin's filter(flagged_expr()) drops it the
+    same way."""
+    months = pdf.loc[pdf["flagged"].eq(True), "month"]
+    dated = months[months.notna()].value_counts()
+    return [(m, int(c)) for m, c in dated.items()], int(months.isna().sum())
 
 
 def _strike_state_fn(
     key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
-    """Per-employee strike accumulator with monthly cooldown: strikes
-    reset at a new month unless the INACTIVE threshold was already hit
-    (``README.md:105``); contract details at
-    :func:`_fold_flagged_batch`."""
-    (emp_id,) = key
-    strikes, month, timeless = _coerce_state(state.get if state.exists else None)
-    for pdf in pdfs:
-        strikes, month, timeless = _fold_flagged_batch(
-            pdf, strikes, month, timeless
-        )
-    state.update((strikes, month, timeless))
-    yield _emit_state_row(emp_id, strikes, month, timeless)
+    """The strike machine for one key bucket: folds the micro-batch
+    rows of every employee in the bucket, then emits ONE frame holding
+    only the employees that are new or whose state changed — an
+    unchanged employee's last emission is still its state. Flagged
+    counts per (employee, month) come from numpy; the Python loop runs
+    only over employees with flagged rows, through
+    :func:`_fold_employee` (the per-employee contract).
+
+    Rows arrive as :func:`_strike_states` prepares them: ``emp_id``
+    with NULL coalesced to 0 plus an ``emp_null`` flag, so NULL stays a
+    key of its own and no id is widened to float64."""
+    frames = list(pdfs)
+    pdf = frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
+    ids, strikes, months, timeless = (
+        [list(v) for v in state.get] if state.exists else [[], [], [], []]
+    )
+    slot = {e: i for i, e in enumerate(ids)}
+
+    emp = pdf["emp_id"].to_numpy(np.int64)
+    is_null = pdf["emp_null"].to_numpy(bool)
+    uniq, inv = np.unique(emp[~is_null], return_inverse=True)
+    code = np.full(len(emp), len(uniq))  # NULL emp_id: the last key
+    code[~is_null] = inv
+    changed = set()
+    at = []  # state slot per key code
+    for k in uniq.tolist() + ([None] if is_null.any() else []):
+        if k not in slot:  # first sighting emits, strike or not
+            slot[k] = len(ids)
+            changed.add(len(ids))
+            ids.append(k)
+            strikes.append(0)
+            months.append("")
+            timeless.append(0)
+        at.append(slot[k])
+
+    flagged = pdf["flagged"].eq(True).to_numpy()
+    month = pdf["month"].to_numpy(object)
+    has_month = pd.notna(month)
+    n_timeless = np.bincount(code[flagged & ~has_month], minlength=len(at))
+    dated = flagged & has_month
+    names, m_code = np.unique(month[dated].astype(str), return_inverse=True)
+    names = names.tolist()
+    nm = max(len(names), 1)
+    pairs, counts = np.unique(code[dated] * nm + m_code, return_counts=True)
+    per_key: dict[int, list[tuple[str, int]]] = {}
+    for p, c in zip(pairs.tolist(), counts.tolist()):
+        per_key.setdefault(p // nm, []).append((names[p % nm], c))
+
+    for c in per_key.keys() | set(np.flatnonzero(n_timeless).tolist()):
+        i = at[c]
+        old = (strikes[i], months[i], timeless[i])
+        new = _fold_employee(*old, per_key.get(c, ()), int(n_timeless[c]))
+        if new != old:
+            strikes[i], months[i], timeless[i] = new
+            changed.add(i)
+
+    if not changed:
+        return
+    state.update((ids, strikes, months, timeless))
+    rows = sorted(changed)
+    total = np.array([strikes[i] + timeless[i] for i in rows], np.int32)
+    yield pd.DataFrame(
+        {
+            "emp_id": pd.array([ids[i] for i in rows], dtype="Int64"),
+            "strike_count": total,
+            "status": np.where(total >= STRIKE_LIMIT, "INACTIVE", "ACTIVE").astype(object),
+            "month": [months[i] for i in rows],
+        }
+    )
+
+
+def _prepared_events(stream: DataFrame) -> DataFrame:
+    """Events-shaped frame → the strike operator's input (emp_id,
+    flagged, month) with the ``event_type`` flag stand-in."""
+    return stream.select(
+        F.col("user_id").alias("emp_id"),
+        flagged_expr().alias("flagged"),
+        F.date_format("ts", "yyyy-MM").alias("month"),
+    )
+
+
+def _strike_states(prepared: DataFrame) -> DataFrame:
+    """The stateful strike operator over ``prepared`` (emp_id, flagged,
+    month): one applyInPandasWithState group per key bucket
+    (:data:`STATE_BUCKETS`). Update-mode output in ``_OUTPUT_SCHEMA``:
+    per micro-batch, one row per employee that is new or whose state
+    changed."""
+    emp = F.col("emp_id")
+    keyed = prepared.select(
+        # pandas widens a NULL-bearing long column to float64, which
+        # rounds ids above 2**53: ship a non-NULL id plus a NULL flag
+        F.coalesce(emp, F.lit(0).cast("long")).alias("emp_id"),
+        emp.isNull().alias("emp_null"),
+        "flagged",
+        "month",
+        F.pmod(F.xxhash64(emp), F.lit(STATE_BUCKETS)).alias("bucket"),
+    )
+    return keyed.groupBy("bucket").applyInPandasWithState(
+        _strike_state_fn,
+        outputStructType=_OUTPUT_SCHEMA,
+        stateStructType=_BUCKET_STATE_SCHEMA,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+def _latest_state(out: DataFrame) -> DataFrame:
+    """Final per-employee state from update-mode strike emissions in a
+    memory sink, which carry no batch id: per employee, the emission
+    with the latest (month, strike_count) wins."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("emp_id").orderBy(
+        F.col("month").desc(), F.col("strike_count").desc()
+    )
+    return (
+        out.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .select("emp_id", "strike_count", "status")
+    )
 
 
 def run_windowed_flag_stream(
@@ -418,11 +566,13 @@ def run_strike_stream(
 
     ``state_partitions`` sizes the stateful exchange: each shuffle
     partition carries an HDFS-backed state store + an Arrow python
-    worker, a fixed per-partition setup cost that dwarfs per-row work
-    on all but huge key spaces (32 partitions measured 5× slower than
-    8 on a 1,500-key batch; 4 is another ~15-30% cheaper across the
-    carriers at sf0.1 with identical results). Size it to key
-    cardinality / executor count in production.
+    worker, a fixed per-partition setup cost. The strike operator
+    groups by ``STATE_BUCKETS`` key buckets, so at most that many
+    groups spread over the partitions whatever the key count; more
+    partitions than buckets leave some idle. 32 partitions measured 5×
+    slower than 8 on a 1,500-key batch, and 4 is another ~15-30%
+    cheaper across the carriers at sf0.1 with identical results. Size
+    it to executor count in production (at most ``STATE_BUCKETS``).
 
     ``state_store_provider``: state-store implementation for the
     stateful operator (``replay.ROCKSDB_PROVIDER`` is the at-scale
@@ -433,31 +583,8 @@ def run_strike_stream(
     with replayed_events(
         spark, sf_dir, state_partitions, state_store_provider=state_store_provider
     ) as (stream, run):
-        prepared = stream.select(
-            F.col("user_id").alias("emp_id"),
-            flagged_expr().alias("flagged"),
-            F.date_format("ts", "yyyy-MM").alias("month"),
-        )
-        result = prepared.groupBy("emp_id").applyInPandasWithState(
-            _strike_state_fn,
-            outputStructType=_OUTPUT_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        out = run(result, "strikes_stream_sink")
-
-    # latest state per employee (update mode may emit once per batch)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("emp_id").orderBy(
-        F.col("month").desc(), F.col("strike_count").desc()
-    )
-    return (
-        out.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("emp_id", "strike_count", "status")
-    )
+        out = run(_strike_states(_prepared_events(stream)), "strikes_stream_sink")
+    return _latest_state(out)
 
 
 class StrikeProcessor:
@@ -465,9 +592,10 @@ class StrikeProcessor:
     (StatefulProcessor) — the successor API to
     ``applyInPandasWithState``: typed state handles (ValueState /
     ListState / MapState) with per-state TTL, timers, and schema
-    evolution, instead of one opaque state tuple. Runs the SAME fold
-    (:func:`_fold_flagged_batch`) as the legacy-API machine, so the
-    two tiers cannot drift; tier parity is pinned in
+    evolution, instead of one opaque state tuple. Keeps one state per
+    employee and runs the SAME per-employee fold
+    (:func:`_fold_employee`) as the bucketed legacy-API machine, so
+    the two tiers cannot drift; tier parity is pinned in
     tests/test_streaming.py by driving this processor's
     init/handleInputRows against a fake typed-state handle.
 
@@ -484,13 +612,20 @@ class StrikeProcessor:
         self._state = handle.getValueState("strike", _STATE_SCHEMA)
 
     def handleInputRows(self, key, rows, timerValues):
-        strikes, month, timeless = _coerce_state(self._state.get())
-        for pdf in rows:
-            strikes, month, timeless = _fold_flagged_batch(
-                pdf, strikes, month, timeless
-            )
+        strikes, month, timeless = _fold_employee(
+            *_coerce_state(self._state.get()),
+            *_flagged_counts(pd.concat(list(rows), ignore_index=True)),
+        )
         self._state.update((strikes, month, timeless))
-        yield _emit_state_row(key[0], strikes, month, timeless)
+        total = strikes + timeless
+        yield pd.DataFrame(
+            {
+                "emp_id": [key[0]],
+                "strike_count": [total],
+                "status": ["INACTIVE" if total >= STRIKE_LIMIT else "ACTIVE"],
+                "month": [month],
+            }
+        )
 
     def close(self) -> None:
         pass
@@ -531,29 +666,14 @@ def run_strike_stream_tws(
     with replayed_events(
         spark, sf_dir, state_partitions, state_store_provider=ROCKSDB_PROVIDER
     ) as (stream, run):
-        prepared = stream.select(
-            F.col("user_id").alias("emp_id"),
-            flagged_expr().alias("flagged"),
-            F.date_format("ts", "yyyy-MM").alias("month"),
-        )
-        result = prepared.groupBy("emp_id").transformWithStateInPandas(
+        result = _prepared_events(stream).groupBy("emp_id").transformWithStateInPandas(
             proc,
             outputStructType=_OUTPUT_SCHEMA,
             outputMode="Update",
             timeMode="None",
         )
         out = run(result, "strikes_tws_sink")
-
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("emp_id").orderBy(
-        F.col("month").desc(), F.col("strike_count").desc()
-    )
-    return (
-        out.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("emp_id", "strike_count", "status")
-    )
+    return _latest_state(out)
 
 
 def run_stream_stream_join(
@@ -733,28 +853,22 @@ def _run_checkpointed_pass(
     plan_fn,
     state_partitions: int = 4,
     state_store_provider: str | None = None,
-) -> None:
+) -> dict | None:
     """Shared scaffolding for every durable-checkpoint availableNow
-    pass: conf save/juggle/restore (nanos read, state-partition count,
-    optional state-store provider), staged-file gate, schema-pinned
-    file stream, batch-id-tagged parquet ``foreachBatch`` sink, and
-    checkpointed trigger. ``plan_fn(stream) -> DataFrame`` supplies the
-    per-carrier streaming plan — the ONLY part that differs between
-    the stateful strike pass and the windowed-aggregation pass, so the
-    restart/recovery contract cannot drift between them."""
+    pass: pinned stream confs (:func:`replay.stream_confs`), staged-file
+    gate, schema-pinned file stream, batch-id-tagged parquet
+    ``foreachBatch`` sink, and checkpointed trigger. ``plan_fn(stream)
+    -> DataFrame`` supplies the per-carrier streaming plan — the ONLY
+    part that differs between the stateful strike pass and the
+    windowed-aggregation pass, so the restart/recovery contract cannot
+    drift between them. Returns the query's ``lastProgress``."""
+    import glob as _glob
+    import os as _os
+
     from ..sources.io import normalize_nanos
-    from .replay import _PROVIDER_CONF, events_schema
+    from .replay import events_schema, stream_confs
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    prior_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    prior_provider = spark.conf.get(_PROVIDER_CONF, None)
-    if state_store_provider is not None:
-        spark.conf.set(_PROVIDER_CONF, state_store_provider)
-    try:
-        import glob as _glob
-        import os as _os
-
+    with stream_confs(spark, state_partitions, state_store_provider):
         staged = sorted(_glob.glob(_os.path.join(stage_dir, "*.parquet")))
         if not staged:
             raise ValueError(f"no parquet files staged in {stage_dir}")
@@ -778,13 +892,7 @@ def _run_checkpointed_pass(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior_parts)
-        if state_store_provider is not None:
-            if prior_provider is None:
-                spark.conf.unset(_PROVIDER_CONF)
-            else:
-                spark.conf.set(_PROVIDER_CONF, prior_provider)
+        return q.lastProgress
 
 
 def _latest_per_key(df: DataFrame, key_cols: list, out_cols: list) -> DataFrame:
@@ -806,7 +914,7 @@ def run_strike_pass(
     out_dir: str,
     state_partitions: int = 4,
     state_store_provider: str | None = None,
-) -> None:
+) -> dict | None:
     """ONE availableNow pass of the stateful strike pipeline over the
     files currently staged in ``stage_dir``, with a DURABLE checkpoint.
 
@@ -824,30 +932,25 @@ def run_strike_pass(
     invocation, and the state store restores the last committed
     version — exactly-once state, at-least-once sink appends
     deduplicated by batch id downstream.
-    """
-    def _plan(stream: DataFrame) -> DataFrame:
-        prepared = stream.select(
-            F.col("user_id").alias("emp_id"),
-            flagged_expr().alias("flagged"),
-            F.date_format("ts", "yyyy-MM").alias("month"),
-        )
-        return prepared.groupBy("emp_id").applyInPandasWithState(
-            _strike_state_fn,
-            outputStructType=_OUTPUT_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
 
-    _run_checkpointed_pass(
-        spark, stage_dir, ckpt_dir, out_dir, _plan,
+    A batch appends rows only for employees that are new or whose
+    state changed; the newest row per key is its state either way.
+    Returns the pass's ``lastProgress`` (a dict-like
+    ``StreamingQueryProgress``); its
+    ``stateOperators[0].numRowsTotal`` is the bucket-row count, at
+    most ``STATE_BUCKETS``.
+    """
+    return _run_checkpointed_pass(
+        spark, stage_dir, ckpt_dir, out_dir,
+        lambda stream: _strike_states(_prepared_events(stream)),
         state_partitions, state_store_provider,
     )
 
 
 def strike_final_state(spark: SparkSession, out_dir: str) -> DataFrame:
     """Latest per-employee state from a :func:`run_strike_pass` output
-    directory: one emission per key per batch, newest batch wins."""
+    directory: at most one emission per key per batch, newest batch
+    wins."""
     return _latest_per_key(
         spark.read.parquet(out_dir),
         ["emp_id"],

@@ -458,12 +458,23 @@ def test_prefix_filter_pairs_equals_brute_force(spark):
     Jaccard >= theta (no false negatives), verified against an
     all-pairs brute force over deterministic random token sets with
     deliberate near-dup plants and frequency ties."""
-    import itertools
-    import random
-
     from employee_data_management_system_data_engineering_solution_spark.operators.dedup import (
         prefix_filter_pairs,
     )
+
+    sets = _planted_token_sets()
+    rows = [(i, t) for i, toks in sets.items() for t in toks]
+    df = spark.createDataFrame(rows, "id LONG, tok STRING")
+    for tn, td in ((2, 3), (4, 5), (1, 2)):
+        got = {
+            (r.id_a, r.id_b): (r.inter_size, r.union_size, r.jaccard)
+            for r in prefix_filter_pairs(df, "id", "tok", tn, td).collect()
+        }
+        assert got == _jaccard_brute_force(sets, tn, td), f"theta={tn}/{td}"
+
+
+def _planted_token_sets():
+    import random
 
     rng = random.Random(7)
     vocab = [f"t{i:02d}" for i in range(30)]
@@ -474,20 +485,59 @@ def test_prefix_filter_pairs_equals_brute_force(spark):
     sets[100] = set(sets[0])
     sets[101] = set(sets[1]) | {"t99"}
     sets[102] = set(list(sets[2])[:max(1, len(sets[2]) - 1)])
+    return sets
+
+
+def _jaccard_brute_force(sets, tn, td):
+    import itertools
+
+    want = {}
+    for a, b in itertools.combinations(sorted(sets), 2):
+        i = len(sets[a] & sets[b])
+        u = len(sets[a] | sets[b])
+        if td * i >= tn * u:
+            want[(a, b)] = (i, u, round(i / u, 4))
+    return want
+
+
+def test_prefix_filter_pairs_string_fallback_on_hash_collision(spark, monkeypatch):
+    """The injectivity probe's fallback: with xxhash64 stubbed to
+    collide (every 3-char token hashes alike) the probe must reject the
+    hash path, and the string path must still equal brute force — the
+    hash path would collapse every set to one token. NULL tokens ride
+    along on both runs and count as no token; unstubbed, they leave the
+    fast (hashed) path in the plan."""
+    from employee_data_management_system_data_engineering_solution_spark.operators.dedup import (
+        prefix_filter_pairs,
+    )
+
+    sets = _planted_token_sets()
     rows = [(i, t) for i, toks in sets.items() for t in toks]
+    rows += [(i, None) for i in (0, 5, 100)]
     df = spark.createDataFrame(rows, "id LONG, tok STRING")
-    for tn, td in ((2, 3), (4, 5), (1, 2)):
-        got = {
+    want = _jaccard_brute_force(sets, 4, 5)
+
+    def pairs(out):
+        return {
             (r.id_a, r.id_b): (r.inter_size, r.union_size, r.jaccard)
-            for r in prefix_filter_pairs(df, "id", "tok", tn, td).collect()
+            for r in out.collect()
         }
-        want = {}
-        for a, b in itertools.combinations(sorted(sets), 2):
-            i = len(sets[a] & sets[b])
-            u = len(sets[a] | sets[b])
-            if td * i >= tn * u:
-                want[(a, b)] = (i, u, round(i / u, 4))
-        assert got == want, f"theta={tn}/{td}"
+
+    fast = prefix_filter_pairs(df, "id", "tok", 4, 5)
+    assert "xxhash64" in fast._jdf.queryExecution().optimizedPlan().toString()
+    assert pairs(fast) == want
+
+    calls = []
+
+    def colliding(c):
+        calls.append(c)
+        return F.length(c).cast("long")
+
+    monkeypatch.setattr(F, "xxhash64", colliding)
+    slow = prefix_filter_pairs(df, "id", "tok", 4, 5)
+    assert calls
+    assert "xxhash64" not in slow._jdf.queryExecution().optimizedPlan().toString()
+    assert pairs(slow) == want
 
 
 def test_substring_span_report_matches_bruteforce_lcs(spark):

@@ -231,7 +231,7 @@ def test_flagged_event_with_null_ts_counts_without_reset(spark, tmp_path):
 
 
 def test_timeless_strike_with_month_transition_in_one_batch(spark, tmp_path):
-    """Timeless-strike contract (r14, documented at _strike_state_fn):
+    """Timeless-strike contract (documented at _fold_employee):
     a NULL-ts strike is PERMANENT — it accumulates in its own state
     counter, immune to every monthly cooldown, so its survival does
     not depend on where the malformed row sits relative to a month

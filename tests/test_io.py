@@ -308,3 +308,28 @@ def test_fs_seam_degrades_for_jvmless_sessions(tmp_path, monkeypatch):
     assert fs.exists(str(tmp_path / "a.csv"), spark=FakeConnectSession())
     assert fs.list_dir("s3a://bucket/nope", spark=FakeConnectSession()) is None
     assert not fs.delete("s3a://bucket/nope", spark=FakeConnectSession())
+
+
+def test_arrow_batch_defaults_fills_unset_and_keeps_explicit(spark):
+    """The engine default applies only while the conf is unset; an
+    explicit value survives, Spark's own default of 10000 included."""
+    from employee_data_management_system_data_engineering_solution_spark.sources.io import (
+        _ARROW_BATCH_CONF,
+        ARROW_BATCH_ROWS,
+        arrow_batch_defaults,
+    )
+
+    prior = spark.conf.get(_ARROW_BATCH_CONF, None)
+    try:
+        spark.conf.unset(_ARROW_BATCH_CONF)
+        arrow_batch_defaults(spark)
+        assert spark.conf.get(_ARROW_BATCH_CONF) == str(ARROW_BATCH_ROWS)
+        for explicit in ("10000", "2048"):
+            spark.conf.set(_ARROW_BATCH_CONF, explicit)
+            arrow_batch_defaults(spark)
+            assert spark.conf.get(_ARROW_BATCH_CONF) == explicit
+    finally:
+        if prior is None:
+            spark.conf.unset(_ARROW_BATCH_CONF)
+        else:
+            spark.conf.set(_ARROW_BATCH_CONF, prior)

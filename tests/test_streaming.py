@@ -14,7 +14,9 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from employee_data_management_system_data_engineering_solution_spark.streaming.strikes import (
+    STATE_BUCKETS,
     STRIKE_LIMIT,
+    StrikeProcessor,
     _coerce_state,
     _strike_state_fn,
     flag_messages,
@@ -32,11 +34,15 @@ def test_coerce_state_pads_legacy_two_field_checkpoint():
     assert _coerce_state(None) == (0, "", 0)
     assert _coerce_state((4, "2021-02")) == (4, "2021-02", 0)
     assert _coerce_state((4, "2021-02", 2)) == (4, "2021-02", 2)
-    # a legacy tuple resumes correctly through the state fn itself
-    st = _FakeState((3, "2021-01"))
+    # a legacy tuple resumes correctly through the per-employee tier
+    # (the bucketed tier's state is schema-checked by the JVM store)
+    handle = _FakeHandle()
+    handle.getValueState("strike", None).update((3, "2021-01"))
+    proc = StrikeProcessor()
+    proc.init(handle)
     pdf = pd.DataFrame({"flagged": [True], "month": ["2021-01"]})
-    row = list(_strike_state_fn((7,), iter([pdf]), st))[0].iloc[0]
-    assert row.strike_count == 4 and st._v == (4, "2021-01", 0)
+    row = next(iter(proc.handleInputRows((7,), iter([pdf]), None))).iloc[0]
+    assert row.strike_count == 4 and handle.states["strike"]._v == (4, "2021-01", 0)
 
 
 def test_flag_messages_word_boundary(spark):
@@ -83,13 +89,26 @@ class _FakeState:
         self._v = tuple(v)
 
 
-def _run_state(months_flags, state=None):
-    pdf = pd.DataFrame(
-        {"flagged": [f for _, f in months_flags], "month": [m for m, _ in months_flags]}
+def _bucket_rows(emp_months_flags):
+    """Bucket-fn input rows as _strike_states ships them."""
+    return pd.DataFrame(
+        {
+            "emp_id": [0 if e is None else e for e, _, _ in emp_months_flags],
+            "emp_null": [e is None for e, _, _ in emp_months_flags],
+            "flagged": [f for _, _, f in emp_months_flags],
+            "month": [m for _, m, _ in emp_months_flags],
+        }
     )
-    st = _FakeState(state)
-    out = list(_strike_state_fn((7,), iter([pdf]), st))
-    return out[0].iloc[0], st._v
+
+
+def _run_state(months_flags, state=None):
+    """Employee 7 alone in its bucket through the bucket state fn;
+    ``state`` in and out is 7's per-employee (strikes, month, timeless)."""
+    pdf = _bucket_rows([(7, m, f) for m, f in months_flags])
+    st = _FakeState(None if state is None else tuple([v] for v in (7, *state)))
+    out = list(_strike_state_fn((0,), iter([pdf]), st))
+    ids, strikes, months, timeless = st._v
+    return out[0].iloc[0], (strikes[0], months[0], timeless[0])
 
 
 def test_state_fn_accumulates_within_month(erase=None):
@@ -283,7 +302,7 @@ class _FakeHandle:
 
 def test_tws_processor_matches_legacy_state_fn_across_batches():
     """API-tier parity: Spark 4's transformWithState StrikeProcessor
-    and the applyInPandasWithState fold share _fold_flagged_batch —
+    and the bucketed applyInPandasWithState fn share _fold_employee —
     this drives both through the same three-batch feed (two months, a
     timeless strike, an INACTIVE latch) and pins identical emissions
     and state. The full streaming run is cluster-only (TWS needs the
@@ -536,3 +555,209 @@ def test_strike_pass_recovery_under_rocksdb_store(spark, tmp_path):
         for r in strike_final_state(spark, out).collect()
     }
     assert got == {1: (2, "ACTIVE"), 2: (15, "INACTIVE"), 3: (1, "ACTIVE")}
+
+
+_EVENTS_DDL = "user_id LONG, event_type STRING, ts TIMESTAMP"
+
+
+def _stage_events(spark, tmp_path, rows, dest):
+    """Stage (user_id, event_type, ts) tuples as one parquet file."""
+    work = str(tmp_path / "__writer")
+    spark.createDataFrame(rows, _EVENTS_DDL).coalesce(1).write.mode("overwrite").parquet(work)
+    shutil.move(glob.glob(os.path.join(work, "part-*.parquet"))[0], dest)
+
+
+def _oracle_state(stage_dir):
+    """The strike_stream_stateful DuckDB oracle over every staged file,
+    as exact (emp_id, strike_count, status) tuples."""
+    import duckdb
+
+    from employee_data_management_system_data_engineering_solution_spark.plans import REGISTRY
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM read_parquet('{stage_dir}/*.parquet')"
+    )
+    return set(con.execute(REGISTRY["strike_stream_stateful"].oracle_sql).fetchall())
+
+
+def _final_state(spark, out):
+    from employee_data_management_system_data_engineering_solution_spark.streaming.strikes import (
+        strike_final_state,
+    )
+
+    return {tuple(r) for r in strike_final_state(spark, out).collect()}
+
+
+def test_strike_pass_null_and_huge_emp_ids_match_oracle(spark, tmp_path):
+    """Bucketed state keeps every key exact. pandas widens an int64
+    column holding a NULL to float64, which rounds ids above 2**53, so
+    a NULL emp_id and two such ids are planted in ONE key bucket: the
+    NULL stays an employee of its own (apart from emp 0) and the big
+    ids survive to the output bit for bit. Both passes must equal the
+    strike_stream_stateful oracle, compared as exact ints."""
+    from employee_data_management_system_data_engineering_solution_spark.streaming.strikes import (
+        run_strike_pass,
+    )
+
+    bucket = F.pmod(F.xxhash64("id"), F.lit(STATE_BUCKETS))
+    null_bucket = spark.createDataFrame([(None,)], "id LONG").select(bucket).first()[0]
+    big = [
+        r.id
+        for r in spark.range(2**60, 2**60 + 4096)
+        .filter(bucket == null_bucket)
+        .limit(2)
+        .collect()
+    ]
+    assert len(big) == 2 and all(b > 2**53 for b in big)
+    jan, feb = dt.datetime(2021, 1, 5), dt.datetime(2021, 2, 5)
+    batch1 = (
+        [(None, "error", jan)] * 3
+        + [(big[0], "error", jan)] * 2
+        + [(big[0], "click", jan), (0, "error", jan)]
+        + [(big[1], "error", jan)] * 12
+    )
+    batch2 = [
+        (None, "error", feb),  # cooldown: 3 → 1
+        (None, "error", None),  # + 1 timeless
+        (big[0], "error", feb),
+        (big[1], "error", feb),  # INACTIVE latch: 12 → 13
+    ]
+    stage_dir = tmp_path / "stage"
+    stage_dir.mkdir()
+    ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
+    for name, rows in (("a.parquet", batch1), ("b.parquet", batch2)):
+        _stage_events(spark, tmp_path, rows, str(stage_dir / name))
+        run_strike_pass(spark, str(stage_dir), ckpt, out, state_partitions=2)
+        assert _final_state(spark, out) == _oracle_state(stage_dir), name
+    assert _final_state(spark, out) == {
+        (None, 2, "ACTIVE"),
+        (0, 1, "ACTIVE"),
+        (big[0], 1, "ACTIVE"),
+        (big[1], 13, "INACTIVE"),
+    }
+
+
+def test_strike_pass_emits_only_new_or_changed_employees(spark, tmp_path):
+    """A batch writes rows only for employees that are new or whose
+    state changed: emp 1's unflagged-only batch writes no row and
+    leaves its final state as it was, emp 2 gains a strike, and emp 3
+    (new, unflagged) emits its 0-strike state."""
+    from employee_data_management_system_data_engineering_solution_spark.streaming.strikes import (
+        run_strike_pass,
+    )
+
+    jan, feb = dt.datetime(2021, 1, 5), dt.datetime(2021, 2, 5)
+    batch1 = [(1, "error", jan)] * 2 + [(2, "error", jan)]
+    batch2 = [(1, "click", feb)] * 3 + [(2, "error", jan), (3, "click", feb)]
+    stage_dir = tmp_path / "stage"
+    stage_dir.mkdir()
+    ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
+    _stage_events(spark, tmp_path, batch1, str(stage_dir / "a.parquet"))
+    run_strike_pass(spark, str(stage_dir), ckpt, out, state_partitions=2)
+    before = _final_state(spark, out)
+    _stage_events(spark, tmp_path, batch2, str(stage_dir / "b.parquet"))
+    run_strike_pass(spark, str(stage_dir), ckpt, out, state_partitions=2)
+
+    emitted = spark.read.parquet(out).filter(F.col("__batch_id") == 1)
+    assert {r.emp_id for r in emitted.collect()} == {2, 3}
+    after = {r[0]: r for r in _final_state(spark, out)}
+    assert after[1] == {r[0]: r for r in before}[1] == (1, 2, "ACTIVE")
+    assert after[2] == (2, 2, "ACTIVE") and after[3] == (3, 0, "ACTIVE")
+    assert set(after.values()) == _oracle_state(stage_dir)
+
+
+def test_strike_pass_state_rows_bounded_by_buckets(spark, tmp_path):
+    """1,500 employees in one pass leave at most STATE_BUCKETS state
+    rows — one per key bucket, not one per employee — while every
+    employee still reaches the final state."""
+    from employee_data_management_system_data_engineering_solution_spark.streaming.strikes import (
+        run_strike_pass,
+    )
+
+    stage_dir = tmp_path / "stage"
+    stage_dir.mkdir()
+    work = str(tmp_path / "__writer")
+    spark.range(3000).select(
+        (F.col("id") % 1500).alias("user_id"),
+        F.when(F.col("id") % 3 == 0, "error").otherwise("click").alias("event_type"),
+        F.lit(dt.datetime(2021, 1, 5)).alias("ts"),
+    ).coalesce(1).write.parquet(work)
+    shutil.move(
+        glob.glob(os.path.join(work, "part-*.parquet"))[0], str(stage_dir / "a.parquet")
+    )
+    ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
+    progress = run_strike_pass(spark, str(stage_dir), ckpt, out, state_partitions=2)
+    assert progress["numInputRows"] == 3000
+    assert 0 < progress["stateOperators"][0]["numRowsTotal"] <= STATE_BUCKETS
+    final = _final_state(spark, out)
+    assert len(final) == 1500 and final == _oracle_state(stage_dir)
+
+
+def test_stream_confs_restore_prior_values(spark):
+    """Every conf a stream run pins is put back on exit: prior values
+    restored, previously-unset keys unset again."""
+    from employee_data_management_system_data_engineering_solution_spark.streaming.replay import (
+        ROCKSDB_PROVIDER,
+        _PROVIDER_CONF,
+        stream_confs,
+    )
+
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    assert spark.conf.get(_PROVIDER_CONF, None) is None
+    with stream_confs(spark, 3, ROCKSDB_PROVIDER):
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+        assert spark.conf.get(_PROVIDER_CONF) == ROCKSDB_PROVIDER
+    assert spark.conf.get("spark.sql.shuffle.partitions") == parts
+    assert spark.conf.get(_PROVIDER_CONF, None) is None
+
+
+def test_bucket_fold_matches_per_employee_processor():
+    """The vectorized bucket fold against the per-employee reference
+    (StrikeProcessor: pandas counts, one state per key) over random
+    multi-batch feeds with many employees per bucket, a NULL emp_id,
+    NULL flags, NULL months and out-of-order months: every employee's
+    state must match after every batch, and each batch must emit
+    exactly the new or changed employees, with the reference's row."""
+    import random
+
+    rng = random.Random(11)
+    emps = [None, 0, 2**60 + 3] + list(range(1, 40))
+    months = ["2021-01", "2021-02", "2021-03", None]
+    st = _FakeState()
+    ref: dict = {}
+    for _ in range(25):
+        batch = [
+            (
+                rng.choice(emps),
+                rng.choice(months),
+                rng.choice([True, True, False, None]),
+            )
+            for _ in range(rng.randint(1, 120))
+        ]
+        want = {}
+        for e in dict.fromkeys(e for e, _, _ in batch):
+            proc = ref.setdefault(e, StrikeProcessor())
+            if not hasattr(proc, "_state"):
+                proc.init(_FakeHandle())
+            before = proc._state.get()
+            rows = pd.DataFrame(
+                {
+                    "flagged": [f for k, _, f in batch if k == e],
+                    "month": [m for k, m, _ in batch if k == e],
+                }
+            )
+            row = next(iter(proc.handleInputRows((e,), iter([rows]), None))).iloc[0]
+            if before is None or proc._state.get() != before:
+                want[e] = (row.strike_count, row.status, row.month)
+        out = list(_strike_state_fn((0,), iter([_bucket_rows(batch)]), st))
+        got = {}
+        for frame in out:
+            for r in frame.itertuples(index=False):
+                e = None if pd.isna(r.emp_id) else int(r.emp_id)
+                got[e] = (r.strike_count, r.status, r.month)
+        assert got == want
+        ids, strikes, ms, timeless = st._v
+        assert {
+            e: (s, m, t) for e, s, m, t in zip(ids, strikes, ms, timeless)
+        } == {e: p._state.get() for e, p in ref.items()}

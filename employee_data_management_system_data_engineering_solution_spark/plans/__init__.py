@@ -208,7 +208,7 @@ from .registry import REGISTRY, register
 #       riding stale evidence): semantic_prune +
 #       semantic_prune_scorecard (k now derives from corpus size,
 #       verdict ask 2 — sf0.01 output unchanged by the survivor-set
-#       k-invariance), dedup_recall_report (_FULL_RECALL_CACHE memo,
+#       k-invariance), dedup_recall_report (_full_recall_frames memo,
 #       verdict ask 3 — hash unchanged).
 #   IN (family keepers — the FAMILY_CARRIERS audit requires every
 #       operator family in-window and the r11 cohort carries none of

@@ -10,16 +10,15 @@ double precision on both sides and rounded to 6 dp before ranking.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as tx
 from ..operators import dedup, modeleval, multimodal, quality, similarity
 from ..operators.graph import connected_components
-from ..sources.io import read_table, table_fingerprint, unpersist_checkpoint
+from ..sources.io import read_table, unpersist_checkpoint
 from ..streaming.strikes import run_strike_stream
+from .memo import session_memo
 from .registry import REGISTRY, register
 
 
@@ -238,46 +237,23 @@ _GATE_CTE = _GATE_STATS_CTE + r""",
 """
 
 
-#: (applicationId, sf_dir, fingerprint) -> pinned gate feature frame.
-#: EIGHT registered queries consume the identical regex-heavy feature
-#: scan (the X143-X145/X155 serving stack via _gate_scored, the X177
-#: trainer, the X178 eval, the X206 RHO-loss selector, the X210 DoReMi
-#: reweighter) — before this memo each ran its own pass of five regex
-#: evaluations over every document. Same timing semantics as
-#: _PAIRS_CACHE: bench.py clears it before each timed pass and hoists
-#: quality_gate_logistic as the canonical payer.
-_GATE_FEATS_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def clear_gate_feats_cache() -> None:
-    """Drop the memoized gate feature frames and their checkpoint
-    blocks (bench resets per pass; unpersist_checkpoint frees the
-    LogicalRDD blocks df.unpersist() silently left to GC — r17)."""
-    for df in _GATE_FEATS_CACHE.values():
-        unpersist_checkpoint(df)
-    _GATE_FEATS_CACHE.clear()
-
-
+@session_memo("documents")
 def _gate_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, label, f1..f4) — the four exact-ratio text features and
     the relevance label, shared by the X143-X145 serving/eval stack and
     the X177 trainer (which re-scales f3 into [0, 1] before descending
     on it). Session-memoized + pinned: the regex feature extraction is
-    the family's dominant cost and is identical across all consumers."""
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        table_fingerprint(sf_dir, "documents"),
-    )
-    cached = _GATE_FEATS_CACHE.get(key)
-    if cached is not None:
-        return cached
+    the family's dominant cost and is identical across EIGHT registered
+    consumers (the X143-X145/X155 serving stack via _gate_scored, the
+    X177 trainer, the X178 eval, the X206 RHO-loss selector, the X210
+    DoReMi reweighter); bench.py hoists quality_gate_logistic as the
+    payer."""
     docs = read_table(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull()  # gate-family NULL contract (see CTE)
     )
     t = F.col("text")
     wc = tx.word_count(t)
-    cached = docs.select(
+    return docs.select(
         "doc_id",
         t.rlike(r"\bspark\b").cast("int").alias("label"),
         (tx.stopword_hits(t) / F.greatest(wc, F.lit(1))).alias("f1"),
@@ -290,8 +266,6 @@ def _gate_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("f3"),
         F.least(wc / F.lit(100.0), F.lit(1.0)).alias("f4"),
     ).localCheckpoint(eager=True)
-    _GATE_FEATS_CACHE[key] = cached
-    return cached
 
 
 def _gate_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -638,7 +612,7 @@ def gate_training_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     rows = _gd_rounds(feats)
-    feats.unpersist()
+    unpersist_checkpoint(feats)
     return spark.createDataFrame(
         rows,
         "step INT, b0 DOUBLE, w1 DOUBLE, w2 DOUBLE, w3 DOUBLE, w4 DOUBLE,"
@@ -790,7 +764,7 @@ def gate_trained_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     rows = _gd_rounds(train)
-    train.unpersist()
+    unpersist_checkpoint(train)
     _, b0, w1, w2, w3, w4, _, _ = rows[-1]
     # eager=False: materialized on first action, then BOTH model arms
     # read the checkpointed 1/5-corpus features instead of re-scanning
@@ -920,7 +894,7 @@ def rho_loss_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     rows = _gd_rounds(train)
-    train.unpersist()
+    unpersist_checkpoint(train)
     _, b0, w1, w2, w3, w4, _, _ = rows[-1]
     z_p = (
         F.lit(-2.2)
@@ -1110,7 +1084,7 @@ def doremi_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     rows = _gd_rounds(train)
-    train.unpersist()
+    unpersist_checkpoint(train)
     _, b0, w1, w2, w3, w4, _, _ = rows[-1]
     z_p = (
         F.lit(-2.2)
@@ -1794,65 +1768,27 @@ def ppjoin_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ppjoin_pairs(spark, sf_dir)
 
 
-#: session-scoped memo of the exact PPJoin J >= 0.9 pair frame — the
-#: dedup family's ground truth. TWO registered queries consume it
-#: (ppjoin_neardup_pairs, dedup_recall_report); same timing semantics
-#: as _PAIRS_CACHE (bench.py hoists ppjoin_neardup_pairs as the
-#: canonical payer); keyed by (application, data dir).
-_PPJOIN_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-#: Per-memo build locks (ADVICE r16): the §2.6 thread pools submit
-#: builders that populate module-level memos; today's builders touch
-#: disjoint memos, but nothing ENFORCED that — a future builder pair
-#: sharing a memo would race get→build→store, duplicating the build
-#: and leaking the losing eager checkpoint. Double-checked locking per
-#: memo keeps same-memo first requests single-build while leaving
-#: cross-memo parallelism (the whole point of the pools) untouched.
-_PPJOIN_LOCK = threading.Lock()
-_PAIRS_LOCK = threading.Lock()
-
-
-def clear_ppjoin_cache() -> None:
-    """Drop the memoized exact pair frames and their checkpoint blocks."""
-    for df in _PPJOIN_CACHE.values():
-        unpersist_checkpoint(df)
-    _PPJOIN_CACHE.clear()
-
-
+@session_memo("documents")
 def _ppjoin_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fingerprint: rewriting documents.parquet in-place within one
-    # application must invalidate the memo (advisor finding, r12)
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        table_fingerprint(sf_dir, "documents"),
-    )
-    cached = _PPJOIN_CACHE.get(key)
-    if cached is None:
-        with _PPJOIN_LOCK:
-            cached = _PPJOIN_CACHE.get(key)
-            if cached is None:
-                from ..operators.dedup import char_ngram_rows, prefix_filter_pairs
+    """The exact PPJoin J >= 0.9 pair frame, pinned — the dedup
+    family's ground truth. TWO registered queries consume it
+    (ppjoin_neardup_pairs, dedup_recall_report); bench.py hoists
+    ppjoin_neardup_pairs as the payer."""
+    from ..operators.dedup import char_ngram_rows, prefix_filter_pairs
 
-                docs = read_table(spark, sf_dir, "documents").filter(
-                    F.col("text").isNotNull()  # dedup-family NULL contract
-                )
-                # NOTE (r16 optimization round): two restructures were
-                # tried and A/B-REJECTED — (a) map-side array_distinct
-                # sets feeding a pinned set-input PPJoin (drops the
-                # distinct() exchange but loses the collect_set output
-                # partitioning the verify joins reuse: 8.9 s -> 24.7 s
-                # at sf0.1) and (b) pinned exploded token rows (same
-                # loss: 24.7 s). The distinct() exchange is
-                # load-bearing: its shuffle output is REUSED by every
-                # downstream reference and keeps the verification frame
-                # id-partitioned.
-                toks = char_ngram_rows(docs, "doc_id", "text", 5).distinct()
-                cached = prefix_filter_pairs(
-                    toks, "doc_id", "gram", 9, 10
-                ).localCheckpoint(eager=True)
-                _PPJOIN_CACHE[key] = cached
-    return cached
+    docs = read_table(spark, sf_dir, "documents").filter(
+        F.col("text").isNotNull()  # dedup-family NULL contract
+    )
+    # NOTE (r16 optimization round): two restructures were tried and
+    # A/B-REJECTED — (a) map-side array_distinct sets feeding a pinned
+    # set-input PPJoin (drops the distinct() exchange but loses the
+    # collect_set output partitioning the verify joins reuse: 8.9 s ->
+    # 24.7 s at sf0.1) and (b) pinned exploded token rows (same loss:
+    # 24.7 s). The distinct() exchange is load-bearing: its shuffle
+    # output is REUSED by every downstream reference and keeps the
+    # verification frame id-partitioned.
+    toks = char_ngram_rows(docs, "doc_id", "text", 5).distinct()
+    return prefix_filter_pairs(toks, "doc_id", "gram", 9, 10).localCheckpoint(eager=True)
 
 
 @register(
@@ -2376,74 +2312,51 @@ def _dedup_recall_sql() -> str:
     """
 
 
-#: Full-scorecard memo (r14 verdict ask 3 — the _SAMPLED_CACHE
-#: pattern applied to the #1 suite cost): the exact PPJoin truth and
-#: the three detector pair frames over the FULL corpus, each
-#: localCheckpointed once per (application, corpus snapshot). Like
-#: _SAMPLED_CACHE — and unlike _PAIRS_CACHE/_PPJOIN_CACHE — this memo
-#: is deliberately NOT reset between bench passes: the frames are a
-#: fixed deterministic artifact of the documents table (thresholds
-#: and band parameters are constants), so at 100 TB they are computed
-#: once per snapshot and every scorecard pass after that is a warm
-#: read of four duplicate-bounded pair frames; bench.py charges the
-#: one-time computation to pass 1 and reports it as memo_exempt_cold.
-_FULL_RECALL_CACHE: dict[tuple[str, str, str], dict[str, DataFrame]] = {}
-
-
-def clear_full_recall_cache() -> None:
-    """Drop the full-scorecard frames and free their checkpoint blocks
-    (long-lived sessions juggling many sf dirs)."""
-    for frames in _FULL_RECALL_CACHE.values():
-        for df in frames.values():
-            unpersist_checkpoint(df)
-    _FULL_RECALL_CACHE.clear()
-
-
+@session_memo("documents", snapshot=True)
 def _full_recall_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """The X176 truth + detector pair pipelines over the full corpus,
-    memoized: keys ``truth`` and one per detector method."""
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        table_fingerprint(sf_dir, "documents"),
+    memoized: keys ``truth`` and one per detector method, each
+    localCheckpointed once per corpus snapshot. A ``snapshot`` memo
+    (the sampled twin's pattern applied to the #1 suite cost): the
+    frames are a fixed deterministic artifact of the documents table
+    (thresholds and band parameters are constants), so at 100 TB they
+    are computed once per snapshot and every scorecard pass after that
+    is a warm read of four duplicate-bounded pair frames; bench.py
+    charges the one-time computation to pass 1 and reports it as
+    memo_exempt_cold."""
+    docs = read_table(spark, sf_dir, "documents").filter(
+        F.col("text").isNotNull()  # dedup-family NULL contract
     )
-    cached = _FULL_RECALL_CACHE.get(key)
-    if cached is None:
-        docs = read_table(spark, sf_dir, "documents").filter(
-            F.col("text").isNotNull()  # dedup-family NULL contract
-        )
-        base = docs.select("doc_id", "text")
-        # the four pair pipelines are mutually independent (they touch
-        # disjoint session memos) — overlap their materializations
-        # (guide §2.6): each is a multi-stage job with idle tails, and
-        # sequential eager checkpoints were the dominant cold cost
-        from concurrent.futures import ThreadPoolExecutor
+    base = docs.select("doc_id", "text")
+    # the four pair pipelines are mutually independent (they touch
+    # disjoint session memos) — overlap their materializations
+    # (guide §2.6): each is a multi-stage job with idle tails, and
+    # sequential eager checkpoints were the dominant cold cost
+    from concurrent.futures import ThreadPoolExecutor
 
-        builders = {
-            "truth": lambda: _ppjoin_pairs(spark, sf_dir)
-            .select("id_a", "id_b")
-            .localCheckpoint(eager=True),
-            "containment_c90": lambda: dedup.containment_pairs(
-                base, "doc_id", "text", n=5, min_containment=0.9,
-                n_hashes=16, bands=8,
-            )
-            .select("id_a", "id_b")
-            .localCheckpoint(eager=True),
-            "minhash_lsh_j90": lambda: _verified_pairs(spark, sf_dir)
-            .filter(F.col("jaccard") >= 0.9)
-            .select("id_a", "id_b")
-            .localCheckpoint(eager=True),
-            "simhash_h3": lambda: dedup.simhash_hamming_pairs(
-                base, "doc_id", "text"
-            )
-            .select("id_a", "id_b")
-            .localCheckpoint(eager=True),
-        }
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            futures = {k: pool.submit(fn) for k, fn in builders.items()}
-            cached = {k: f.result() for k, f in futures.items()}
-        _FULL_RECALL_CACHE[key] = cached
-    return cached
+    builders = {
+        "truth": lambda: _ppjoin_pairs(spark, sf_dir)
+        .select("id_a", "id_b")
+        .localCheckpoint(eager=True),
+        "containment_c90": lambda: dedup.containment_pairs(
+            base, "doc_id", "text", n=5, min_containment=0.9,
+            n_hashes=16, bands=8,
+        )
+        .select("id_a", "id_b")
+        .localCheckpoint(eager=True),
+        "minhash_lsh_j90": lambda: _verified_pairs(spark, sf_dir)
+        .filter(F.col("jaccard") >= 0.9)
+        .select("id_a", "id_b")
+        .localCheckpoint(eager=True),
+        "simhash_h3": lambda: dedup.simhash_hamming_pairs(
+            base, "doc_id", "text"
+        )
+        .select("id_a", "id_b")
+        .localCheckpoint(eager=True),
+    }
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        futures = {k: pool.submit(fn) for k, fn in builders.items()}
+        return {k: f.result() for k, f in futures.items()}
 
 
 @register("dedup_recall_report", _dedup_recall_sql())
@@ -2466,7 +2379,7 @@ def dedup_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     star-capped bucket pairs.
 
     Plan shape: the truth set and the three detector pair frames are
-    checkpointed ONCE per corpus snapshot in the _FULL_RECALL_CACHE
+    checkpointed ONCE per corpus snapshot in the _full_recall_frames
     session memo (thresholds and band parameters are constants, so the
     frames are a fixed deterministic artifact of the documents table —
     the 100 TB shape computes them once per snapshot and every
@@ -2512,144 +2425,90 @@ def dedup_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: session-scoped memo of the verified near-dup pair set. THREE
-#: registered queries (ngram_jaccard_pairs, dedup_clusters,
-#: dedup_clusters_star) consume the identical (n=5, j>=0.5) pair set;
-#: re-running the LSH+verify pipeline per query triples the most
-#: expensive stage in the suite. TIMING SEMANTICS: whichever consumer
-#: runs first in a session pays the full pipeline; later consumers
-#: measure amortized (memo-read) cost — bench.py documents this and
-#: charges the pipeline to the first pass. The pair frame is tiny
-#: (bucket-bounded candidates after verification), so pinning it with
-#: localCheckpoint is cheap; keyed by (Spark application, data dir) so
-#: a new session or a different scale factor recomputes from scratch.
-#: Checkpoint blocks live until the entry is dropped —
-#: :func:`clear_pairs_cache` unpersists them explicitly (bench resets
-#: between warm-up and the timed passes; long-lived sessions juggling
-#: many sf dirs should call it when done with a corpus).
-_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def clear_pairs_cache() -> None:
-    """Drop every memoized pair frame and free its checkpoint blocks."""
-    for df in _PAIRS_CACHE.values():
-        unpersist_checkpoint(df)
-    _PAIRS_CACHE.clear()
-
-
+@session_memo("documents")
 def _verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        table_fingerprint(sf_dir, "documents"),
-    )
-    cached = _PAIRS_CACHE.get(key)
-    if cached is None:
-        with _PAIRS_LOCK:
-            cached = _PAIRS_CACHE.get(key)
-            if cached is None:
-                # dedup-family NULL contract: a NULL-text doc
-                # participates in no pairs (oracle side: the mechanical
-                # rewrite at module end)
-                docs = read_table(spark, sf_dir, "documents").filter(
-                    F.col("text").isNotNull()
-                )
-                cached = dedup.ngram_jaccard_pairs(
-                    docs, "doc_id", "text", n=5, min_jaccard=0.5
-                ).localCheckpoint(eager=True)
-                _PAIRS_CACHE[key] = cached
-    return cached
+    """The verified near-dup pair set (n=5, j >= 0.5), pinned. THREE
+    registered queries (ngram_jaccard_pairs, dedup_clusters,
+    dedup_clusters_star) consume it; re-running the LSH+verify pipeline
+    per query triples the most expensive stage in the suite. Whichever
+    consumer runs first in a session pays the pipeline (bench.py hoists
+    ngram_jaccard_pairs as the payer). The pair frame is tiny
+    (bucket-bounded candidates after verification), so pinning it is
+    cheap."""
+    # dedup-family NULL contract: a NULL-text doc participates in no
+    # pairs (oracle side: the mechanical rewrite at module end)
+    docs = read_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    return dedup.ngram_jaccard_pairs(
+        docs, "doc_id", "text", n=5, min_jaccard=0.5
+    ).localCheckpoint(eager=True)
 
 
 _RECALL_SAMPLE_N = 2000
 
-#: Sampled-scorecard memo: the seeded fixed-n document sample, its
-#: exact PPJoin truth, and the three detector pair frames, each
-#: localCheckpointed once per (application, corpus snapshot). Unlike
-#: _PAIRS_CACHE this memo is deliberately NOT reset between bench
-#: passes (bench.py's clear_session_memos): the sampled truth is a
-#: fixed deterministic artifact of the corpus snapshot — seed and n
-#: are constants, so the frames depend only on the documents table —
-#: and at 100 TB it is computed ONCE per snapshot and read by every
-#: subsequent scorecard pass, so the steady-state scorecard cost IS
-#: the warm read; bench charges the one-time computation to the first
-#: pass. All five frames are bounded by the 2 000-row sample.
-_SAMPLED_CACHE: dict[tuple[str, str, str, int], dict[str, DataFrame]] = {}
 
-
-def clear_sampled_cache() -> None:
-    """Drop the sampled-scorecard frames and free their checkpoint
-    blocks (long-lived sessions juggling many sf dirs)."""
-    for frames in _SAMPLED_CACHE.values():
-        for df in frames.values():
-            unpersist_checkpoint(df)
-    _SAMPLED_CACHE.clear()
-
-
+@session_memo("documents", snapshot=True)
 def _sampled_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """The X180 pair pipelines over the seeded sample, memoized: keys
-    ``sample``, ``truth``, and one per detector method."""
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        table_fingerprint(sf_dir, "documents"),
-        _RECALL_SAMPLE_N,
-    )
-    cached = _SAMPLED_CACHE.get(key)
-    if cached is None:
-        docs = read_table(spark, sf_dir, "documents")
-        sample = (
-            # NULL ids can't key pairs; NULL text is the dedup-family
-            # NULL contract (mirrored in the sdocs CTE)
-            docs.filter(
-                F.col("doc_id").isNotNull() & F.col("text").isNotNull()
-            )
-            .select(
-                "doc_id",
-                "text",
-                F.md5(
-                    F.concat(F.lit("drs:"), F.col("doc_id").cast("string"))
-                ).alias("__rk"),
-            )
-            .orderBy(F.col("__rk").asc(), F.col("doc_id").asc())
-            .limit(_RECALL_SAMPLE_N)
-            .drop("__rk")
-            .localCheckpoint(eager=True)
+    ``sample``, ``truth``, and one per detector method, each
+    localCheckpointed once per corpus snapshot. A ``snapshot`` memo,
+    so bench passes do not reset it: the sampled truth is a fixed
+    deterministic artifact of the corpus snapshot — seed and n are
+    constants, so the frames depend only on the documents table — and
+    at 100 TB it is computed ONCE per snapshot and read by every
+    subsequent scorecard pass, so the steady-state scorecard cost IS
+    the warm read; bench charges the one-time computation to the first
+    pass. All five frames are bounded by the 2 000-row sample."""
+    docs = read_table(spark, sf_dir, "documents")
+    sample = (
+        # NULL ids can't key pairs; NULL text is the dedup-family
+        # NULL contract (mirrored in the sdocs CTE)
+        docs.filter(
+            F.col("doc_id").isNotNull() & F.col("text").isNotNull()
         )
-        toks = dedup.char_ngram_rows(sample, "doc_id", "text", 5).distinct()
-        # overlap the four independent detector materializations over
-        # the pinned sample (guide §2.6; the _full_recall_frames twin)
-        from concurrent.futures import ThreadPoolExecutor
+        .select(
+            "doc_id",
+            "text",
+            F.md5(
+                F.concat(F.lit("drs:"), F.col("doc_id").cast("string"))
+            ).alias("__rk"),
+        )
+        .orderBy(F.col("__rk").asc(), F.col("doc_id").asc())
+        .limit(_RECALL_SAMPLE_N)
+        .drop("__rk")
+        .localCheckpoint(eager=True)
+    )
+    toks = dedup.char_ngram_rows(sample, "doc_id", "text", 5).distinct()
+    # overlap the four independent detector materializations over
+    # the pinned sample (guide §2.6; the _full_recall_frames twin)
+    from concurrent.futures import ThreadPoolExecutor
 
-        builders = {
-            "truth": lambda: dedup.prefix_filter_pairs(
-                toks, "doc_id", "gram", 9, 10
-            )
-            .select("id_a", "id_b")
-            .localCheckpoint(eager=True),
-            "containment_c90": lambda: dedup.containment_pairs(
-                sample, "doc_id", "text", n=5, min_containment=0.9,
-                n_hashes=16, bands=8,
-            )
-            .select("id_a", "id_b")
-            .localCheckpoint(eager=True),
-            "minhash_lsh_j90": lambda: dedup.ngram_jaccard_pairs(
-                sample, "doc_id", "text", n=5, min_jaccard=0.5
-            )
-            .filter(F.col("jaccard") >= 0.9)
-            .select("id_a", "id_b")
-            .localCheckpoint(eager=True),
-            "simhash_h3": lambda: dedup.simhash_hamming_pairs(
-                sample, "doc_id", "text"
-            )
-            .select("id_a", "id_b")
-            .localCheckpoint(eager=True),
-        }
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            futures = {k: pool.submit(fn) for k, fn in builders.items()}
-            cached = {"sample": sample, **{k: f.result() for k, f in futures.items()}}
-        _SAMPLED_CACHE[key] = cached
-    return cached
+    builders = {
+        "truth": lambda: dedup.prefix_filter_pairs(
+            toks, "doc_id", "gram", 9, 10
+        )
+        .select("id_a", "id_b")
+        .localCheckpoint(eager=True),
+        "containment_c90": lambda: dedup.containment_pairs(
+            sample, "doc_id", "text", n=5, min_containment=0.9,
+            n_hashes=16, bands=8,
+        )
+        .select("id_a", "id_b")
+        .localCheckpoint(eager=True),
+        "minhash_lsh_j90": lambda: dedup.ngram_jaccard_pairs(
+            sample, "doc_id", "text", n=5, min_jaccard=0.5
+        )
+        .filter(F.col("jaccard") >= 0.9)
+        .select("id_a", "id_b")
+        .localCheckpoint(eager=True),
+        "simhash_h3": lambda: dedup.simhash_hamming_pairs(
+            sample, "doc_id", "text"
+        )
+        .select("id_a", "id_b")
+        .localCheckpoint(eager=True),
+    }
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        futures = {k: pool.submit(fn) for k, fn in builders.items()}
+        return {"sample": sample, **{k: f.result() for k, f in futures.items()}}
 
 
 def _dedup_recall_sampled_sql(n: int = 2000) -> str:
@@ -2741,7 +2600,7 @@ def dedup_recall_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape: one global top-2000 TakeOrdered (ids + 32-hex ranks
     only); the sample, the truth, and the three detector pair frames
-    are checkpointed ONCE per corpus snapshot in the _SAMPLED_CACHE
+    are checkpointed ONCE per corpus snapshot in the _sampled_frames
     session memo (seed and n are constants, so the frames are a fixed
     deterministic artifact of the documents table — the 100 TB shape
     computes them once per snapshot and every scorecard read after
@@ -3853,120 +3712,48 @@ _IDCG_10 = 4.54356
 _DCG_W_SQL = "[" + ", ".join(str(w) for w in _DCG_W) + "]::DOUBLE[]"
 
 
-#: (applicationId, sf_dir) -> (truth, ranked-methods union). The two
-#: measurement queries (recall, rank quality) grade the SAME pinned
-#: index, so the harness — IVF assignment, PQ codebook training +
-#: encoding, exact ground truth, and all six searches — materializes
-#: once per (session, sf); same discipline as _PAIRS_CACHE and the
-#: co-supply backbone memo. bench.py clears it before each timed pass
-#: so whichever measurement query runs first pays the build.
-_ANN_EVAL_CACHE: dict[tuple[str, str], tuple] = {}
-
-
-def clear_ann_eval_cache() -> None:
-    """Drop memoized ANN-evaluation frames and their checkpoint blocks
-    (the shared pinned index memo clears with them — same lifecycle).
-    Entries are (truth, union, per-method frames): the per-method list
-    holds the actual checkpoint blocks (the union owns none), so each
-    frame unpersists individually (ADVICE r16)."""
-    for entry in _ANN_EVAL_CACHE.values():
-        truth, un, mats = entry
-        for df in (truth, un, *mats):
-            unpersist_checkpoint(df)
-    _ANN_EVAL_CACHE.clear()
-    for entry in _ANN_INDEX_CACHE.values():
-        for piece in ("assigned", "codes", "truth"):
-            frame = entry.get(piece)
-            if frame is None:
-                continue
-            unpersist_checkpoint(frame)
-    _ANN_INDEX_CACHE.clear()
-
-
-#: (applicationId, sf_dir, fingerprint) -> the SHARED PINNED ANN index
-#: pieces over the live embeddings: the vec_id<8 IVF inverted list
-#: ("assigned", eager checkpoint), the m=8 PQ codebooks ("codebooks",
-#: a driver dict), and the PQ code table riding the assignment scan
-#: ("codes", eager checkpoint, carries cluster_id). An ANN index is
-#: built ONCE and served to every search — before this memo the
-#: standalone queries (ivf_topk, ivf_topk_multiprobe,
-#: quantized_ivf_topk, binary_ivf_topk, matryoshka_ivf_topk,
-#: pq_adc_search, pq_ivf_search, ann_cost_frontier) each rebuilt their
-#: own assignment pass and/or retrained the identical PQ codebooks
-#: (3× Lloyd's per bench pass, measured 3.5 s each at sf0.1). Same
-#: timing semantics as _ANN_EVAL_CACHE: bench.py clears it before each
-#: timed pass and the hoisted payer (ann_recall_report) pays the
-#: build; each piece builds lazily on first request.
-_ANN_INDEX_CACHE: dict[tuple[str, str, str], dict] = {}
-
-#: Pieces an index entry can hold, each with its own build lock: the
-#: harness pool builds truth ∥ assigned ∥ codebooks CONCURRENTLY, so a
-#: single entry-wide lock would serialize them; per-piece
-#: double-checked locks keep concurrent first requests for the SAME
-#: piece single-build (r16 verdict item 5: the unlocked get→create→
-#: store raced and a loser's pinned frames were rebuilt — a duplicate
-#: Lloyd's barrier) while leaving cross-piece overlap intact.
-_ANN_PIECES = ("assigned", "codebooks", "codes", "truth")
-_ANN_ENTRY_LOCK = threading.Lock()
-
-
-def _ann_index_entry(spark: SparkSession, sf_dir: str) -> dict:
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        table_fingerprint(sf_dir, "embeddings"),
-    )
-    with _ANN_ENTRY_LOCK:
-        entry = _ANN_INDEX_CACHE.get(key)
-        if entry is None:
-            entry = {"__locks": {p: threading.Lock() for p in _ANN_PIECES}}
-            _ANN_INDEX_CACHE[key] = entry
-        return entry
-
-
+# The SHARED PINNED ANN index over the live embeddings, one memo per
+# piece: the vec_id<8 IVF inverted list, the m=8 PQ codebooks (a driver
+# dict), the PQ code table riding the assignment scan, and the exact
+# truth. An ANN index is built ONCE and served to every search — before
+# these memos the standalone queries (ivf_topk, ivf_topk_multiprobe,
+# quantized_ivf_topk, binary_ivf_topk, matryoshka_ivf_topk,
+# pq_adc_search, pq_ivf_search, ann_cost_frontier) each rebuilt their
+# own assignment pass and/or retrained the identical PQ codebooks (3×
+# Lloyd's per bench pass, measured 3.5 s each at sf0.1). bench.py
+# clears them before each timed pass and the hoisted payer
+# (ann_recall_report) pays the build. Each piece has its own memo lock,
+# so the harness pool builds truth ∥ assigned ∥ codebooks concurrently
+# while concurrent first requests for the SAME piece build once.
+@session_memo("embeddings")
 def _ann_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The pinned vec_id<8 IVF assignment (id, embedding, __vnorm,
     cluster_id) — eager checkpoint, built once per (session, corpus)."""
-    entry = _ann_index_entry(spark, sf_dir)
-    if "assigned" not in entry:
-        with entry["__locks"]["assigned"]:
-            if "assigned" not in entry:
-                emb = _live_embeddings(spark, sf_dir)
-                pivots = emb.filter(F.col("vec_id") < 8)
-                entry["assigned"] = similarity.assign_clusters(
-                    emb, pivots
-                ).localCheckpoint(eager=True)
-    return entry["assigned"]
+    emb = _live_embeddings(spark, sf_dir)
+    pivots = emb.filter(F.col("vec_id") < 8)
+    return similarity.assign_clusters(emb, pivots).localCheckpoint(eager=True)
 
 
+@session_memo("embeddings")
 def _ann_codebooks(spark: SparkSession, sf_dir: str) -> dict:
     """The trained m=8 PQ codebooks — one Lloyd's barrier per
     (session, corpus), shared by every PQ consumer."""
-    entry = _ann_index_entry(spark, sf_dir)
-    if "codebooks" not in entry:
-        with entry["__locks"]["codebooks"]:
-            if "codebooks" not in entry:
-                emb = _live_embeddings(spark, sf_dir)
-                entry["codebooks"] = similarity.pq_train_codebooks(emb, m=8)
-    return entry["codebooks"]
+    return similarity.pq_train_codebooks(_live_embeddings(spark, sf_dir), m=8)
 
 
+@session_memo("embeddings")
 def _ann_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The pinned PQ code table (id, codes, cluster_id) riding the
     shared assignment scan — eager checkpoint, built once."""
-    entry = _ann_index_entry(spark, sf_dir)
-    if "codes" not in entry:
-        with entry["__locks"]["codes"]:
-            if "codes" not in entry:
-                entry["codes"] = similarity.pq_encode(
-                    _ann_assigned(spark, sf_dir),
-                    _ann_codebooks(spark, sf_dir),
-                    m=8,
-                    keep=("cluster_id",),
-                ).localCheckpoint(eager=True)
-    return entry["codes"]
+    return similarity.pq_encode(
+        _ann_assigned(spark, sf_dir),
+        _ann_codebooks(spark, sf_dir),
+        m=8,
+        keep=("cluster_id",),
+    ).localCheckpoint(eager=True)
 
 
+@session_memo("embeddings")
 def _ann_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The pinned EXACT brute-force top-10 for the shared query batch
     (vec_id 100–105 over the live embeddings): (query_id, neighbor_id,
@@ -3974,48 +3761,35 @@ def _ann_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus). FOUR measurement consumers graded against this identical
     frame (the harness truth, the MMR relevance pool, the Matryoshka
     truncation baseline) each re-ran the corpus scan before r16."""
-    entry = _ann_index_entry(spark, sf_dir)
-    if "truth" not in entry:
-        with entry["__locks"]["truth"]:
-            if "truth" not in entry:
-                emb = _live_embeddings(spark, sf_dir)
-                queries = emb.filter(
-                    (F.col("vec_id") >= 100) & (F.col("vec_id") < 105)
-                )
-                entry["truth"] = similarity.cosine_topk_bruteforce(
-                    queries, emb, k=10
-                ).localCheckpoint(eager=True)
-    return entry["truth"]
+    emb = _live_embeddings(spark, sf_dir)
+    queries = emb.filter((F.col("vec_id") >= 100) & (F.col("vec_id") < 105))
+    return similarity.cosine_topk_bruteforce(queries, emb, k=10).localCheckpoint(
+        eager=True
+    )
 
 
+@session_memo("embeddings")
 def _ann_truth_and_ranked_methods(spark: SparkSession, sf_dir: str):
     """Shared ANN evaluation harness: the exact top-10 ground truth
-    (``__hit`` marker) and the union of every method's RANKED top-10
-    ``(method, query_id, neighbor_id, rank)``. The IVF inverted list is
-    built and pinned ONCE and served to all four index-based methods
+    (``__hit`` marker), the union of every method's RANKED top-10
+    ``(method, query_id, neighbor_id, rank)``, and the per-method
+    frames the union is built from. The IVF inverted list is built
+    and pinned ONCE and served to all four index-based methods
     (an ANN index is built once, not per search method); the PQ
     codebooks likewise train ONCE in their bounded Lloyd's barrier and
     serve both the flat-ADC and IVF-PQ searches. Both measurement
     queries (recall, rank quality) consume this one harness, and the
-    session memo above makes the sharing real at runtime — the second
+    session memo makes the sharing real at runtime — the second
     consumer reads materialized frames instead of re-running the
-    index build."""
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        table_fingerprint(sf_dir, "embeddings"),
-    )
-    cached = _ANN_EVAL_CACHE.get(key)
-    if cached is not None:
-        return cached[0], cached[1]
+    index build; bench.py clears it before each timed pass so
+    whichever measurement query runs first pays the build."""
     emb = _live_embeddings(spark, sf_dir)
     pivots = emb.filter(F.col("vec_id") < 8)
     queries = emb.filter((F.col("vec_id") >= 100) & (F.col("vec_id") < 105))
-    # the index pieces come from the SHARED pinned-index memo
-    # (_ANN_INDEX_CACHE): the exact truth, the inverted list, the
-    # trained PQ codebooks, and the encoded-corpus table are built once
-    # per (session, corpus) and served to this harness AND the
-    # standalone search queries. Truth, assignment, and PQ training are
+    # the index pieces come from the SHARED pinned-index memos: the
+    # exact truth, the inverted list, the trained PQ codebooks, and the
+    # encoded-corpus table are built once per (session, corpus) and
+    # served to this harness AND the standalone search queries. Truth, assignment, and PQ training are
     # mutually independent — overlap their builds (guide §2.6); the
     # code table needs the latter two and builds after.
     from concurrent.futures import ThreadPoolExecutor as _TPE
@@ -4137,12 +3911,10 @@ def _ann_truth_and_ranked_methods(spark: SparkSession, sf_dir: str):
         un = un.unionByName(cur)
     # truth and every method frame are already pinned; the union of ten
     # ~50-row checkpoints needs no further materialization. The mats
-    # list rides in the cache entry so clear_ann_eval_cache() can
-    # unpersist the TEN per-method checkpoints deterministically —
-    # unpersisting only the union frees nothing, it owns no blocks
-    # (ADVICE r16).
-    _ANN_EVAL_CACHE[key] = (truth, un, mats)
-    return truth, un
+    # list rides in the memo value so clearing the memo frees the TEN
+    # per-method checkpoints deterministically — unpersisting only the
+    # union frees nothing, it owns no blocks (ADVICE r16).
+    return truth, un, mats
 
 
 #: Coarse-stage prefix width for the X191 Matryoshka funnel (defined
@@ -4379,7 +4151,7 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     searches; each method is then its own bounded search over the
     broadcast query batch, and the report join touches only
     10 methods x |queries| x k rows."""
-    truth, un = _ann_truth_and_ranked_methods(spark, sf_dir)
+    truth, un, _ = _ann_truth_and_ranked_methods(spark, sf_dir)
     return (
         un.join(F.broadcast(truth), ["query_id", "neighbor_id"], "left")
         .groupBy("method", "query_id")
@@ -4436,7 +4208,7 @@ def ann_rank_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the metric join touches 10 methods x |queries| x k rows —
     independent of corpus size; everything corpus-sized happened once
     in the shared index build."""
-    truth, un = _ann_truth_and_ranked_methods(spark, sf_dir)
+    truth, un, _ = _ann_truth_and_ranked_methods(spark, sf_dir)
     w = F.element_at(F.array(*[F.lit(x) for x in _DCG_W]), F.col("rank"))
     rel = F.col("__hit").isNotNull()
     perq = (
@@ -4492,7 +4264,7 @@ def ann_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the curve join touches methods × |queries| × k rows ×
     3 thresholds — independent of corpus size; everything
     corpus-sized happened once in the shared index build."""
-    truth, un = _ann_truth_and_ranked_methods(spark, sf_dir)
+    truth, un, _ = _ann_truth_and_ranked_methods(spark, sf_dir)
     ks = F.explode(F.array(F.lit(1), F.lit(5), F.lit(10))).alias("k")
     j = (
         un.join(F.broadcast(truth), ["query_id", "neighbor_id"], "left")
@@ -4624,7 +4396,7 @@ def ann_cost_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     |queries| x nprobe join against it, and 10 x |queries| rows of
     arithmetic — the frontier costs nothing beyond the harness it
     measures."""
-    truth, un = _ann_truth_and_ranked_methods(spark, sf_dir)
+    truth, un, _ = _ann_truth_and_ranked_methods(spark, sf_dir)
     emb = _live_embeddings(spark, sf_dir)
     pivots = emb.filter(F.col("vec_id") < 8)
     queries = emb.filter((F.col("vec_id") >= 100) & (F.col("vec_id") < 105))
@@ -6847,38 +6619,20 @@ def _bpe_merge_table_sql(k: int) -> str:
 
 _BPE_ROUNDS = 10
 
-#: session-scoped memo of the learned merge list — bpe_merge_table and
-#: bpe_encode_stats consume the identical 10-round training run, and
-#: re-running it per query doubles the 10-collect driver loop. Same
-#: timing semantics as _PAIRS_CACHE: the first consumer in a session
-#: pays training (bench.py hoists bpe_merge_table as the canonical
-#: payer); keyed by (application, data dir) so new sessions / other
-#: scale factors retrain.
-_BPE_CACHE: dict[tuple[str, str], list[tuple[int, str, str, str, int]]] = {}
-
-
-def clear_bpe_cache() -> None:
-    """Drop the memoized BPE merge tables (driver-side lists only —
-    ``_bpe_merges`` unpersists each round's localCheckpoint as soon as
-    the next round's is materialized, and the final one before
-    returning, so no checkpoint blocks outlive the call)."""
-    _BPE_CACHE.clear()
-
-
+@session_memo("documents")
 def _bpe_merges(
     spark: SparkSession, sf_dir: str
 ) -> list[tuple[int, str, str, str, int]]:
-    """Run (or recall) the k-round Sennrich training loop; returns the
-    ordered merge list [(rank, pair_a, pair_b, merged, weighted_count)].
-    See bpe_merge_table for the plan-shape discussion."""
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        table_fingerprint(sf_dir, "documents"),
-    )
-    cached = _BPE_CACHE.get(key)
-    if cached is not None:
-        return cached
+    """Run the k-round Sennrich training loop; returns the ordered
+    merge list [(rank, pair_a, pair_b, merged, weighted_count)]. See
+    bpe_merge_table for the plan-shape discussion. Session-memoized:
+    bpe_merge_table and bpe_encode_stats consume the identical
+    10-round training run, and re-running it per query doubles the
+    10-collect driver loop (bench.py hoists bpe_merge_table as the
+    payer). Only the driver-side list is stored: each round's
+    checkpoint is freed once the next one is materialized, and the
+    last one before returning, so no checkpoint blocks outlive the
+    call."""
     docs = read_table(spark, sf_dir, "documents")
     live = docs.filter(F.length(F.trim("text")) > 0)
     w = live.select(
@@ -6934,11 +6688,10 @@ def _bpe_merges(
             ).alias("spine"),
             "wc",
         ).localCheckpoint()  # eager: materialized before prev is freed
-        prev.unpersist()
+        unpersist_checkpoint(prev)
     # only the merge LIST is memoized — free the last round's blocks
     # too (advisor finding, r12: they used to linger until driver GC)
-    vocab.unpersist()
-    _BPE_CACHE[key] = merges
+    unpersist_checkpoint(vocab)
     return merges
 
 
@@ -7282,8 +7035,8 @@ def bpe_merge_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         prev = vocab
         vocab = prev.select(spine.alias("spine"), "wc").localCheckpoint()
-        prev.unpersist()
-    vocab.unpersist()
+        unpersist_checkpoint(prev)
+    unpersist_checkpoint(vocab)
     return spark.createDataFrame(
         rows,
         "round INT, slot INT, pair_a STRING, pair_b STRING, merged STRING,"
@@ -8429,60 +8182,31 @@ def _kmeans_trained_ctes() -> str:
 
 _SEM_PAIR_COS = _COS.replace("qv", "a.e").replace("cv", "b.e")
 
-#: Trained-centroid memo for the semantic-dedup family: both X188 and
-#: X189 train the SAME corpus-k (:func:`_semantic_k`) / iters=2
-#: Lloyd's centroids on the live embeddings; the result is a k-row
-#: driver-materialized frame, so the memo stores it directly (no
-#: checkpoint blocks to free). Payer in a bench pass is deterministic:
-#: semantic_prune precedes the scorecard in the registry order.
-_KMEANS_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
-
-def clear_kmeans_cache() -> None:
-    """Drop the memoized trained centroids (bench resets per pass)."""
-    _KMEANS_CACHE.clear()
-    _KMEANS8_CACHE.clear()
-
-
-#: (applicationId, sf_dir, fingerprint) -> the k=8/iters=2 trained IVF
-#: centroids over the RAW embeddings table — shared by
-#: kmeans_ivf_assign and cluster_topic_terms, which trained the
-#: identical Lloyd's rounds twice per bench pass (r16). The result is
-#: a k-row driver-materialized frame (no checkpoint blocks); cleared
-#: with the corpus-k memo above.
-_KMEANS8_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
+@session_memo("embeddings")
 def _trained_centroids_k8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        table_fingerprint(sf_dir, "embeddings"),
-    )
-    cached = _KMEANS8_CACHE.get(key)
-    if cached is None:
-        emb = read_table(spark, sf_dir, "embeddings")
-        cached = similarity.kmeans_iterate(emb, k=8, iters=2, dim=64)
-        _KMEANS8_CACHE[key] = cached
-    return cached
+    """The k=8/iters=2 trained IVF centroids over the RAW embeddings
+    table — shared by kmeans_ivf_assign and cluster_topic_terms, which
+    trained the identical Lloyd's rounds twice per bench pass (r16).
+    The result is a k-row driver-materialized frame (no checkpoint
+    blocks)."""
+    emb = read_table(spark, sf_dir, "embeddings")
+    return similarity.kmeans_iterate(emb, k=8, iters=2, dim=64)
 
 
+@session_memo("embeddings")
 def _trained_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        table_fingerprint(sf_dir, "embeddings"),
-    )
-    cached = _KMEANS_CACHE.get(key)
-    if cached is None:
-        emb = _live_embeddings(spark, sf_dir)
-        # one bounded count per corpus snapshot (memoized with the
-        # centroids): k tracks corpus size so cluster size stays
-        # ~_SEM_TARGET_CLUSTER as the data grows
-        k = _semantic_k(emb.count())
-        cached = similarity.kmeans_iterate(emb, k=k, iters=2, dim=64)
-        _KMEANS_CACHE[key] = cached
-    return cached
+    """The semantic-dedup family's centroids: both X188 and X189 train
+    the SAME corpus-k (:func:`_semantic_k`) / iters=2 Lloyd's centroids
+    on the live embeddings; the result is a k-row driver-materialized
+    frame. bench.py hoists semantic_prune as the payer."""
+    emb = _live_embeddings(spark, sf_dir)
+    # one bounded count per corpus snapshot (memoized with the
+    # centroids): k tracks corpus size so cluster size stays
+    # ~_SEM_TARGET_CLUSTER as the data grows
+    k = _semantic_k(emb.count())
+    return similarity.kmeans_iterate(emb, k=k, iters=2, dim=64)
+
 
 _SEMANTIC_PRUNE_ORACLE = f"""
     WITH RECURSIVE {_kmeans_trained_ctes()},

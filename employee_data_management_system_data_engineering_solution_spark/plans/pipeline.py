@@ -36,7 +36,6 @@ from ..sources.io import (
     latest_file,
     read_csv,
     read_table,
-    table_fingerprint,
     write_csv,
     write_parquet,
 )
@@ -47,6 +46,7 @@ from ..streaming.strikes import (
     run_session_stream,
     run_windowed_flag_stream,
 )
+from .memo import session_memo
 from .registry import REGISTRY, register
 
 _STAGING_SCHEMA = T.StructType(
@@ -935,58 +935,36 @@ def zorder_layout_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Triangle counting over the supplier co-supply graph
 # --------------------------------------------------------------------------
-#: (applicationId, sf_dir) -> materialized top-5000 strong-ties
-#: backbone. Both graph queries (triangles, LPA communities) analyze
-#: the SAME graph; the pair-weighting self-join that builds it is their
-#: dominant cost, so it runs once per (session, sf) — the same
-#: build-the-index-once discipline as the ANN harness and the LSH pair
-#: memo (_PAIRS_CACHE). bench.py clears it before each timed pass so
-#: whichever graph query runs first pays the build.
-_BACKBONE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def clear_backbone_cache() -> None:
-    """Drop memoized backbones and free their checkpoint blocks."""
-    from ..sources.io import unpersist_checkpoint
-
-    for df in _BACKBONE_CACHE.values():
-        unpersist_checkpoint(df)
-    _BACKBONE_CACHE.clear()
-
-
+@session_memo("lineitem")
 def _co_supply_backbone(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-5000 co-supply edges by (shared-order count, pair) — see
-    supplier_triangles for why the backbone bound exists."""
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        table_fingerprint(sf_dir, "lineitem"),
+    """Top-5000 co-supply edges by (shared-order count, pair), pinned —
+    see supplier_triangles for why the backbone bound exists. Both
+    graph queries (triangles, LPA communities) analyze the SAME graph;
+    the pair-weighting self-join that builds it is their dominant cost,
+    so it runs once per (session, sf) — the build-the-index-once
+    discipline of the ANN harness and the LSH pair memo. bench.py
+    clears it before each timed pass and hoists supplier_triangles as
+    the payer."""
+    li = read_table(spark, sf_dir, "lineitem")
+    # ok-clustered dedup: one exchange serves both the distinct and
+    # the basket self-join (the part_link_prediction r16 pattern)
+    su = (
+        li.select(F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("sk"))
+        .repartition(F.col("ok"))
+        .dropDuplicates(["ok", "sk"])
     )
-    cached = _BACKBONE_CACHE.get(key)
-    if cached is None:
-        li = read_table(spark, sf_dir, "lineitem")
-        # ok-clustered dedup: one exchange serves both the distinct and
-        # the basket self-join (the part_link_prediction r16 pattern)
-        su = (
-            li.select(F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("sk"))
-            .repartition(F.col("ok"))
-            .dropDuplicates(["ok", "sk"])
-        )
-        a = su.select(F.col("ok"), F.col("sk").alias("src"))
-        b = su.select(F.col("ok"), F.col("sk").alias("dst"))
-        cached = (
-            a.join(b, "ok")
-            .filter(F.col("src") < F.col("dst"))
-            .groupBy("src", "dst")
-            .agg(F.count("*").alias("w"))
-            .orderBy(F.col("w").desc(), F.col("src").asc(), F.col("dst").asc())
-            .limit(5000)
-            .select("src", "dst")
-            .localCheckpoint(eager=True)
-        )
-        _BACKBONE_CACHE[key] = cached
-    return cached
-
+    a = su.select(F.col("ok"), F.col("sk").alias("src"))
+    b = su.select(F.col("ok"), F.col("sk").alias("dst"))
+    return (
+        a.join(b, "ok")
+        .filter(F.col("src") < F.col("dst"))
+        .groupBy("src", "dst")
+        .agg(F.count("*").alias("w"))
+        .orderBy(F.col("w").desc(), F.col("src").asc(), F.col("dst").asc())
+        .limit(5000)
+        .select("src", "dst")
+        .localCheckpoint(eager=True)
+    )
 
 
 @register(

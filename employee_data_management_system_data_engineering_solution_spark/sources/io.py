@@ -176,8 +176,8 @@ def unpersist_checkpoint(df: DataFrame) -> None:
     ONLY call this on frames with no live consumers: a checkpoint has
     no lineage to recompute from, so a reader that still references
     the RDD fails hard ("checkpoint block not found") rather than
-    recomputing. The memo clear functions qualify (every consumer
-    rebuilds through the memo getter); mid-pipeline frames must prove
+    recomputing. Session memo clears qualify (every consumer rebuilds
+    through the memo); mid-pipeline frames must prove
     the returned plan no longer references them. Py4j internals are
     version-fragile, so any failure falls back to the old
     (GC-dependent) path silently."""
@@ -223,11 +223,11 @@ def arrow_batch_defaults(spark: SparkSession) -> None:
 
 def table_fingerprint(sf_dir: str, *names: str) -> str:
     """Cheap content fingerprint of one or more warehouse tables —
-    (relative path, size, mtime_ns) of every data file, hashed. The
-    plan-level session memos (``plans/llm._PAIRS_CACHE`` and friends)
-    fold this into their keys so REWRITING the files under an sf_dir
-    within one Spark application invalidates the memo instead of
-    silently serving stale results (advisor finding, round 12).
+    (relative path, size, mtime_ns) of every data file, hashed.
+    ``plans/memo.session_memo`` folds this into every memo key so
+    REWRITING the files under an sf_dir within one Spark application
+    invalidates the memo instead of silently serving stale results
+    (advisor finding, round 12).
 
     os.stat-based: the memo callers always address local test
     warehouses; a remote (hdfs://, s3a://) sf_dir has no local stat,

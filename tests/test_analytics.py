@@ -1034,8 +1034,8 @@ def test_dedup_recall_sampled_agrees_with_full_on_planted_corpus(spark, tmp_path
             for r in REGISTRY["dedup_recall_sampled"].fn(spark, str(tmp_path)).collect()
         }
     finally:
-        _llm.clear_pairs_cache()
-        _llm.clear_ppjoin_cache()
+        _llm._verified_pairs.clear()
+        _llm._ppjoin_pairs.clear()
     assert set(samp) == set(full)
     for m in full:
         assert samp[m].n_sample == len(rows)
@@ -1113,8 +1113,8 @@ def test_dedup_recall_curve_matches_python_replay(spark, tmp_path):
             for r in REGISTRY["dedup_recall_curve"].fn(spark, str(tmp_path)).collect()
         ]
     finally:
-        _llm.clear_pairs_cache()
-        _llm.clear_ppjoin_cache()
+        _llm._verified_pairs.clear()
+        _llm._ppjoin_pairs.clear()
     assert vp and truth  # the corpus actually exercises both pipelines
     bands = Counter()
     hits = Counter()
@@ -1163,7 +1163,7 @@ def test_pair_memos_invalidate_on_corpus_rewrite(spark, tmp_path):
         df2.write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
         assert _llm._verified_pairs(spark, str(tmp_path)).count() == 0
     finally:
-        _llm.clear_pairs_cache()
+        _llm._verified_pairs.clear()
 
 
 def test_dedup_recall_report_planted_duplicates(spark, tmp_path):
@@ -1188,8 +1188,8 @@ def test_dedup_recall_report_planted_duplicates(spark, tmp_path):
             for r in REGISTRY["dedup_recall_report"].fn(spark, str(tmp_path)).collect()
         }
     finally:
-        _llm.clear_pairs_cache()
-        _llm.clear_ppjoin_cache()
+        _llm._verified_pairs.clear()
+        _llm._ppjoin_pairs.clear()
     assert set(got) == {"containment_c90", "minhash_lsh_j90", "simhash_h3"}
     # truth: 3 pairs in the triple clique + 1 pair in the double
     assert all(r.n_true == 4 for r in got.values())
@@ -1219,8 +1219,8 @@ def test_dedup_recall_report_duplicate_free_corpus(spark, tmp_path):
     try:
         got = REGISTRY["dedup_recall_report"].fn(spark, str(tmp_path)).collect()
     finally:
-        _llm.clear_pairs_cache()
-        _llm.clear_ppjoin_cache()
+        _llm._verified_pairs.clear()
+        _llm._ppjoin_pairs.clear()
     assert len(got) == 3
     for r in got:
         assert (r.n_pred, r.n_true, r.n_hit) == (0, 0, 0)
@@ -1238,7 +1238,7 @@ def test_bpe_encode_stats_empty_corpus(spark, tmp_path):
     try:
         rows = REGISTRY["bpe_encode_stats"].fn(spark, str(tmp_path)).collect()
     finally:
-        _llm.clear_bpe_cache()
+        _llm._bpe_merges.clear()
     assert rows == []
 
 
@@ -1254,8 +1254,8 @@ def test_dedup_recall_report_empty_corpus(spark, tmp_path):
     try:
         got = REGISTRY["dedup_recall_report"].fn(spark, str(tmp_path)).collect()
     finally:
-        _llm.clear_pairs_cache()
-        _llm.clear_ppjoin_cache()
+        _llm._verified_pairs.clear()
+        _llm._ppjoin_pairs.clear()
     assert len(got) == 3
     for r in got:
         assert (r.n_pred, r.n_true, r.n_hit) == (0, 0, 0)
@@ -1319,7 +1319,7 @@ def test_bpe_encode_stats_early_exhausted_training_parity(spark, tmp_path):
             for r in REGISTRY["bpe_encode_stats"].fn(spark, str(tmp_path)).collect()
         }
     finally:
-        _llm.clear_bpe_cache()
+        _llm._bpe_merges.clear()
     # training exhausted after the single possible merge
     assert [(m[1], m[2], m[3]) for m in merges] == [("a", "b", "ab")]
     # 'ab' encodes to 1 token, 'x' to 1 token

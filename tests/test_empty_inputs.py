@@ -318,7 +318,7 @@ def test_null_text_excluded_from_gate_and_dedup(spark, nullrow_wh):
     try:
         pairs = REGISTRY["ngram_jaccard_pairs"].fn(spark, nullrow_wh).collect()
     finally:
-        _llm.clear_pairs_cache()
+        _llm._verified_pairs.clear()
     injected = {500, 501}
     for r in pairs:
         assert r.id_a not in injected and r.id_b not in injected

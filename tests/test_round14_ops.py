@@ -139,28 +139,28 @@ def test_semantic_prune_k_invariance(spark):
 
 
 # ---------------------------------------------------------------------------
-# sampled-scorecard memo (_SAMPLED_CACHE)
+# sampled-scorecard memo (_sampled_frames)
 # ---------------------------------------------------------------------------
 def test_sampled_scorecard_warm_read_is_identical(spark):
     """The memo is a pure cache: a cold pass and a warm pass on the
     same corpus return identical rows, and the warm pass reuses the
     checkpointed frames (one cache entry per corpus)."""
-    llm.clear_sampled_cache()
+    llm._sampled_frames.clear()
     fn = REGISTRY["dedup_recall_sampled"].fn
     cold = _sorted_rows(fn(spark, SF_SMOKE))
-    assert len(llm._SAMPLED_CACHE) == 1
+    assert len(llm._sampled_frames._values) == 1
     warm = _sorted_rows(fn(spark, SF_SMOKE))
-    assert len(llm._SAMPLED_CACHE) == 1
+    assert len(llm._sampled_frames._values) == 1
     assert cold == warm
-    llm.clear_sampled_cache()
-    assert not llm._SAMPLED_CACHE
+    llm._sampled_frames.clear()
+    assert not llm._sampled_frames._values
 
 
 def test_sampled_scorecard_cache_keys_by_corpus(spark, tmp_path):
     """Two different corpora must not share frames: a 3-doc planted
     corpus after a real-smoke pass gets its own entry and its own
     (tiny) sample count."""
-    llm.clear_sampled_cache()
+    llm._sampled_frames.clear()
     fn = REGISTRY["dedup_recall_sampled"].fn
     fn(spark, SF_SMOKE).collect()
     rows = [
@@ -172,9 +172,9 @@ def test_sampled_scorecard_cache_keys_by_corpus(spark, tmp_path):
         rows, "doc_id LONG, text STRING, source STRING"
     ).write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
     small = fn(spark, str(tmp_path)).collect()
-    assert len(llm._SAMPLED_CACHE) == 2
+    assert len(llm._sampled_frames._values) == 2
     assert all(r["n_sample"] == 3 for r in small)
     # docs 1 and 2 are verbatim duplicates: the truth on this corpus
     # is exactly one pair, and every detector should recall it
     assert all(r["n_true"] == 1 and r["n_hit"] == 1 for r in small)
-    llm.clear_sampled_cache()
+    llm._sampled_frames.clear()

@@ -1,6 +1,6 @@
 """Round-15 pins: the full dedup scorecard's memo must be a pure
 cache (same rows warm as cold, distinct corpora keyed apart — the
-_FULL_RECALL_CACHE twin of the r14 sampled-scorecard pins), and the
+_full_recall_frames twin of the r14 sampled-scorecard pins), and the
 Matryoshka funnel (X191) must agree with the exact full-dimension
 search whenever the truncated-prefix coarse stage recalls the true
 top-k."""
@@ -14,6 +14,7 @@ import pyspark.sql.functions as F
 
 from employee_data_management_system_data_engineering_solution_spark.operators import similarity
 from employee_data_management_system_data_engineering_solution_spark.plans import llm
+from employee_data_management_system_data_engineering_solution_spark.plans.memo import clear_session_memos
 from employee_data_management_system_data_engineering_solution_spark.plans.registry import REGISTRY
 
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -24,21 +25,21 @@ def _sorted_rows(df):
 
 
 # ---------------------------------------------------------------------------
-# _FULL_RECALL_CACHE (r14 verdict ask 3)
+# _full_recall_frames memo (r14 verdict ask 3)
 # ---------------------------------------------------------------------------
 def test_full_scorecard_warm_read_is_identical(spark):
     """The memo is a pure cache: a cold pass and a warm pass on the
     same corpus return identical rows, and the warm pass reuses the
     checkpointed frames (one cache entry per corpus)."""
-    llm.clear_full_recall_cache()
+    llm._full_recall_frames.clear()
     fn = REGISTRY["dedup_recall_report"].fn
     cold = _sorted_rows(fn(spark, SF_SMOKE))
-    assert len(llm._FULL_RECALL_CACHE) == 1
+    assert len(llm._full_recall_frames._values) == 1
     warm = _sorted_rows(fn(spark, SF_SMOKE))
-    assert len(llm._FULL_RECALL_CACHE) == 1
+    assert len(llm._full_recall_frames._values) == 1
     assert cold == warm
-    llm.clear_full_recall_cache()
-    assert not llm._FULL_RECALL_CACHE
+    llm._full_recall_frames.clear()
+    assert not llm._full_recall_frames._values
 
 
 # ---------------------------------------------------------------------------
@@ -100,7 +101,7 @@ def test_funnel_plan_broadcasts_queries_no_shuffle_of_corpus(spark):
 
 
 def test_ann_eval_harness_includes_funnel_methods(spark):
-    llm.clear_ann_eval_cache()
+    clear_session_memos()
     methods = {
         r.method
         for r in REGISTRY["ann_recall_report"].fn(spark, SF_SMOKE)
@@ -158,7 +159,7 @@ def test_full_scorecard_cache_keys_by_corpus(spark, tmp_path):
     corpus after a real-smoke pass gets its own entry, its own truth
     (exactly the one verbatim-duplicate pair), and full recall on it
     from every detector."""
-    llm.clear_full_recall_cache()
+    llm._full_recall_frames.clear()
     fn = REGISTRY["dedup_recall_report"].fn
     fn(spark, SF_SMOKE).collect()
     rows = [
@@ -170,9 +171,9 @@ def test_full_scorecard_cache_keys_by_corpus(spark, tmp_path):
         rows, "doc_id LONG, text STRING, source STRING"
     ).write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
     small = fn(spark, str(tmp_path)).collect()
-    assert len(llm._FULL_RECALL_CACHE) == 2
+    assert len(llm._full_recall_frames._values) == 2
     assert all(r["n_true"] == 1 and r["n_hit"] == 1 for r in small)
-    llm.clear_full_recall_cache()
+    llm._full_recall_frames.clear()
 
 
 # ---------------------------------------------------------------------------
@@ -569,7 +570,7 @@ def test_recall_curve_consistent_with_recall_report(spark):
     """The curve's k=10 row must equal the @10 report's per-method
     mean recall (same harness frames, same truth), every method holds
     all three k rows, and recall@k is monotone-safe in bounds."""
-    llm.clear_ann_eval_cache()
+    clear_session_memos()
     curve = REGISTRY["ann_recall_curve"].fn(spark, SF_SMOKE).collect()
     report = REGISTRY["ann_recall_report"].fn(spark, SF_SMOKE).collect()
     by_m = {}

@@ -14,6 +14,7 @@ import math
 import pyspark.sql.functions as F
 
 from employee_data_management_system_data_engineering_solution_spark.plans import llm
+from employee_data_management_system_data_engineering_solution_spark.plans.memo import clear_session_memos
 from employee_data_management_system_data_engineering_solution_spark.plans.registry import REGISTRY
 from employee_data_management_system_data_engineering_solution_spark.sources.io import read_table
 
@@ -63,8 +64,9 @@ def test_sampled_scorecard_equals_full_when_corpus_fits(spark, tmp_path):
             for r in REGISTRY["semantic_scorecard_sampled"].fn(spark, str(tmp_path)).collect()
         }
     finally:
-        llm.clear_kmeans_cache()
-        llm.clear_pairs_cache()
+        llm._trained_centroids.clear()
+        llm._trained_centroids_k8.clear()
+        llm._verified_pairs.clear()
     assert set(samp) == set(full) == {"lexical_jaccard_j50", "semantic_cosine_c40"}
     for m in full:
         assert samp[m].n_docs == len(docs)
@@ -89,8 +91,9 @@ def test_sampled_scorecard_counters_consistent_on_corpus(spark):
         full_cols = REGISTRY["semantic_prune_scorecard"].fn(spark, SF_SMOKE).columns
         rows = out.collect()
     finally:
-        llm.clear_kmeans_cache()
-        llm.clear_pairs_cache()
+        llm._trained_centroids.clear()
+        llm._trained_centroids_k8.clear()
+        llm._verified_pairs.clear()
     assert out.columns == full_cols
     assert len(rows) == 2
     for r in rows:
@@ -108,13 +111,13 @@ def test_cost_frontier_byte_accounting_is_exact(spark):
     table and the candidate counts, its method list must be exactly
     the harness's, and its recall axis must equal the recall report's
     per-method mean."""
-    llm.clear_ann_eval_cache()
+    clear_session_memos()
     try:
         frontier = {r.method: r for r in REGISTRY["ann_cost_frontier"].fn(spark, SF_SMOKE).collect()}
         report = REGISTRY["ann_recall_report"].fn(spark, SF_SMOKE).collect()
         n = llm._live_embeddings(spark, SF_SMOKE).count()
     finally:
-        llm.clear_ann_eval_cache()
+        clear_session_memos()
     spec = {m: (np_, cb, cap) for m, np_, cb, cap in llm._ANN_COST_SPEC}
     assert set(frontier) == set(spec) == {r.method for r in report}
     hits_by_m: dict[str, int] = {}
@@ -328,13 +331,13 @@ def test_ann_index_memo_shares_one_pinned_frame_and_clears(spark):
     sharing is real (second request returns the identical object, so
     no consumer can silently rebuild the index), (b) the truth frame's
     values equal a fresh brute-force pass (the memo changes cost, not
-    results), and (c) clear_ann_eval_cache() really drops the memo so
+    results), and (c) clear_session_memos() really drops the memo so
     a bench pass can never read a stale index."""
     from employee_data_management_system_data_engineering_solution_spark.operators import (
         similarity,
     )
 
-    llm.clear_ann_eval_cache()
+    clear_session_memos()
     t1 = llm._ann_truth(spark, SF_SMOKE)
     a1 = llm._ann_assigned(spark, SF_SMOKE)
     assert llm._ann_truth(spark, SF_SMOKE) is t1  # shared, not rebuilt
@@ -347,7 +350,7 @@ def test_ann_index_memo_shares_one_pinned_frame_and_clears(spark):
     want = {tuple(r) for r in fresh.collect()}
     assert got == want  # memoization changes cost, never values
 
-    llm.clear_ann_eval_cache()
+    clear_session_memos()
     assert llm._ann_truth(spark, SF_SMOKE) is not t1  # genuinely cleared
 
 
@@ -359,9 +362,9 @@ def test_full_recall_frames_parallel_build_matches_oracle_keys(spark):
         dedup,
     )
 
-    llm.clear_full_recall_cache()
-    llm.clear_ppjoin_cache()
-    llm.clear_pairs_cache()
+    llm._full_recall_frames.clear()
+    llm._ppjoin_pairs.clear()
+    llm._verified_pairs.clear()
     frames = llm._full_recall_frames(spark, SF_SMOKE)
     assert set(frames) == {
         "truth", "containment_c90", "minhash_lsh_j90", "simhash_h3",

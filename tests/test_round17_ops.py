@@ -1,9 +1,9 @@
 """Round-17 pins: the optimization round's internal invariants.
 
 The r16 verdict's item 5 (the unlocked ANN index memo get→create→store
-raced under the §2.6 thread pools) is closed by per-memo /per-piece
-locks; these tests pin that concurrent first requests share ONE entry
-and run ONE build. The ADVICE r16 multimodal guards (int64 overflow
+raced under the §2.6 thread pools) is closed by the per-memo lock of
+``plans/memo.session_memo``, one memo per ANN index piece; these tests
+pin that concurrent first requests share ONE frame and run ONE build. The ADVICE r16 multimodal guards (int64 overflow
 fallback, non-divisible band reshape) are pinned alongside.
 """
 
@@ -19,6 +19,7 @@ from employee_data_management_system_data_engineering_solution_spark.operators i
     similarity,
 )
 from employee_data_management_system_data_engineering_solution_spark.plans import llm
+from employee_data_management_system_data_engineering_solution_spark.plans.memo import clear_session_memos
 
 
 def _write_embeddings(spark, path, n=32):
@@ -40,31 +41,39 @@ def _write_embeddings(spark, path, n=32):
 # ANN index memo: concurrent builders share one entry / one build
 # ---------------------------------------------------------------------------
 def test_ann_index_entry_concurrent_requests_share_one_entry(spark, tmp_path):
-    """16 threads racing the first _ann_index_entry call must all get
-    the IDENTICAL dict (the r16 race orphaned a loser's entry, whose
-    pinned frames were then rebuilt)."""
+    """16 threads racing the first _ann_truth request must all get the
+    IDENTICAL pinned frame from ONE build (the r16 race orphaned a
+    loser's entry, whose pinned frames were then rebuilt)."""
     _write_embeddings(spark, tmp_path)
-    llm.clear_ann_eval_cache()
+    clear_session_memos()
+    calls = []
+    lock = threading.Lock()
+    real = similarity.cosine_topk_bruteforce
+
+    def counting(*args, **kwargs):
+        with lock:
+            calls.append(1)
+        return real(*args, **kwargs)
+
+    similarity.cosine_topk_bruteforce = counting
     try:
         with ThreadPoolExecutor(max_workers=16) as pool:
-            entries = list(
-                pool.map(
-                    lambda _: llm._ann_index_entry(spark, str(tmp_path)), range(16)
-                )
+            frames = list(
+                pool.map(lambda _: llm._ann_truth(spark, str(tmp_path)), range(16))
             )
-        assert all(e is entries[0] for e in entries)
-        # the entry carries one lock per buildable piece
-        assert set(entries[0]["__locks"]) == set(llm._ANN_PIECES)
+        assert len(calls) == 1, f"cosine_topk_bruteforce ran {len(calls)} times"
+        assert all(f is frames[0] for f in frames)
     finally:
-        llm.clear_ann_eval_cache()
+        similarity.cosine_topk_bruteforce = real
+        clear_session_memos()
 
 
 def test_ann_assigned_concurrent_first_requests_build_once(spark, tmp_path):
     """8 threads requesting the pinned assignment concurrently must run
-    assign_clusters exactly once (double-checked piece lock) and all
+    assign_clusters exactly once (double-checked memo lock) and all
     receive the same pinned frame."""
     _write_embeddings(spark, tmp_path)
-    llm.clear_ann_eval_cache()
+    clear_session_memos()
     calls = []
     lock = threading.Lock()
     real = similarity.assign_clusters
@@ -85,40 +94,56 @@ def test_ann_assigned_concurrent_first_requests_build_once(spark, tmp_path):
         assert frames[0].count() == 32
     finally:
         similarity.assign_clusters = real
-        llm.clear_ann_eval_cache()
+        clear_session_memos()
 
 
-def _n_cached_rdds(spark) -> int:
-    return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+def _cached_rdd_ids(spark) -> set[int]:
+    return {r.id() for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def _rdd_id(df) -> int:
+    return df._jdf.queryExecution().analyzed().rdd().id()
 
 
 def test_ann_eval_cache_clear_frees_method_checkpoint_blocks(spark, tmp_path):
-    """clear_ann_eval_cache must free the per-method checkpoint BLOCKS
+    """clear_session_memos must free the per-method checkpoint BLOCKS
     (ADVICE r16: unpersisting only the union frees nothing — it owns no
     blocks; and r17 found Dataset.unpersist() itself never frees a
     localCheckpoint's blocks, only the LogicalRDD handle does)."""
     _write_embeddings(spark, tmp_path, n=128)
-    llm.clear_ann_eval_cache()
-    base = _n_cached_rdds(spark)
+    clear_session_memos()
+    base = len(_cached_rdd_ids(spark))
     try:
-        truth, un = llm._ann_truth_and_ranked_methods(spark, str(tmp_path))
-        (key,) = list(llm._ANN_EVAL_CACHE)
-        entry = llm._ANN_EVAL_CACHE[key]
+        entry = llm._ann_truth_and_ranked_methods(spark, str(tmp_path))
+        assert len(llm._ann_truth_and_ranked_methods._values) == 1
         assert len(entry) == 3
         mats = entry[2]
         assert len(mats) == 10  # the ten harness methods
         # the harness pinned real blocks: ten method frames + truth +
-        # the index pieces
-        assert _n_cached_rdds(spark) >= base + 10
-        # a second call reads the memoized (truth, union) pair back
-        t2, u2 = llm._ann_truth_and_ranked_methods(spark, str(tmp_path))
-        assert t2 is truth and u2 is un
+        # the index pieces (checked by RDD id, not by a count that
+        # unrelated garbage reaped by the JVM collector can lower)
+        pinned = {_rdd_id(m) for m in mats} | {
+            _rdd_id(llm._ann_truth(spark, str(tmp_path))),
+            _rdd_id(llm._ann_assigned(spark, str(tmp_path))),
+            _rdd_id(llm._ann_pq_codes(spark, str(tmp_path))),
+        }
+        assert len(pinned) == 13 and pinned <= _cached_rdd_ids(spark)
+        # a second call reads the memoized entry back
+        assert llm._ann_truth_and_ranked_methods(spark, str(tmp_path)) is entry
     finally:
-        llm.clear_ann_eval_cache()
-    assert not llm._ANN_EVAL_CACHE and not llm._ANN_INDEX_CACHE
+        clear_session_memos()
+    ann_memos = (
+        llm._ann_truth_and_ranked_methods,
+        llm._ann_truth,
+        llm._ann_assigned,
+        llm._ann_codebooks,
+        llm._ann_pq_codes,
+    )
+    assert not any(m._values for m in ann_memos)
     # the clear dropped every pinned block deterministically — no
     # waiting on the JVM garbage collector
-    assert _n_cached_rdds(spark) <= base
+    assert not pinned & _cached_rdd_ids(spark)
+    assert len(_cached_rdd_ids(spark)) <= base
 
 
 # ---------------------------------------------------------------------------

@@ -454,7 +454,7 @@ def test_ann_rank_quality_matches_python_reference(spark):
     import employee_data_management_system_data_engineering_solution_spark.plans.llm as llm
 
     sf = "/root/testdata/sf0.001"
-    truth, un = llm._ann_truth_and_ranked_methods(spark, sf)
+    truth, un, _ = llm._ann_truth_and_ranked_methods(spark, sf)
     tset = {(r.query_id, r.neighbor_id) for r in truth.collect()}
     ranked = {}
     for r in un.collect():

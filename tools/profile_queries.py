@@ -10,8 +10,10 @@ noop runs at the bench SF; prints per-run seconds and the min. With
 ``--plans DIR`` the formatted plan (built against the bench SF) is
 written to ``DIR/<query>.txt``.
 
-Session config matches bench.py exactly so the numbers are
+The session comes from bench.py's ``bench_session`` so the numbers are
 comparable; jobs are labelled with setJobDescription for UI reading.
+Every non-snapshot session memo is cleared before each run, as bench.py
+does before each pass.
 """
 
 from __future__ import annotations
@@ -38,22 +40,14 @@ def main() -> int:
     ap.add_argument("--json", default=None, help="write {query: min_sec} to this file")
     args = ap.parse_args()
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    from pyspark.sql import SparkSession
+    from bench import bench_session
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("eds-profile")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "8g")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark = bench_session("eds-profile")
 
     from __spark_entry__ import queries
+    from employee_data_management_system_data_engineering_solution_spark.plans.memo import (
+        clear_session_memos,
+    )
 
     qs = queries()
     names = list(qs) if args.all else args.queries
@@ -66,46 +60,18 @@ def main() -> int:
     if args.plans:
         os.makedirs(args.plans, exist_ok=True)
 
-    def clear_memos():
-        from employee_data_management_system_data_engineering_solution_spark.plans import (
-            llm as _llm,
-            pipeline as _pipeline,
-        )
-
-        # clear_fns, not `names`: the outer query list is also called
-        # `names`, and shadowing it here was an easy future footgun
-        # (ADVICE r16)
-        for mod, clear_fns in (
-            (
-                _llm,
-                (
-                    "clear_pairs_cache",
-                    "clear_ann_eval_cache",
-                    "clear_bpe_cache",
-                    "clear_ppjoin_cache",
-                    "clear_kmeans_cache",
-                    "clear_gate_feats_cache",
-                ),
-            ),
-            (_pipeline, ("clear_backbone_cache",)),
-        ):
-            for n in clear_fns:
-                fn = getattr(mod, n, None)  # tolerate older trees in A/B runs
-                if fn is not None:
-                    fn()
-
     out: dict[str, float] = {}
     for name in names:
         fn = qs[name]
         if not args.no_warm:
             try:
-                clear_memos()
+                clear_session_memos()
                 fn(spark, warm_sf).write.format("noop").mode("overwrite").save()
             except Exception as exc:
                 print(f"warm {name} failed: {exc}", file=sys.stderr)
         if args.plans:
             try:
-                clear_memos()
+                clear_session_memos()
                 buf = io.StringIO()
                 with redirect_stdout(buf):
                     fn(spark, args.sf).explain("formatted")
@@ -115,7 +81,7 @@ def main() -> int:
                 print(f"explain {name} failed: {exc}", file=sys.stderr)
         times = []
         for i in range(args.runs):
-            clear_memos()
+            clear_session_memos()
             spark.sparkContext.setJobDescription(f"profile:{name}#{i}")
             t0 = time.perf_counter()
             try:

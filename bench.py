@@ -39,7 +39,7 @@ Methodology (warm-cache, two-pass):
   pass with one ``clear_session_memos()`` call, and the CANONICAL
   PAYER of each memo is hoisted to the front of every timed pass
   (``_MEMO_PAYERS``) — so the memoized stage's cost lands on the same
-  query name every round regardless of registry rotation (r10's
+  query name every round whatever the registry order (r10's
   dedup_clusters 1.47→4.06 s "mover" was pure payer reassignment), and
   downstream family members read the memo within their pass — the same
   amortization the correctness gate sees.
@@ -132,13 +132,13 @@ def main() -> int:
 
     # DETERMINISTIC MEMO-PAYER ORDER: the session memos amortize a
     # shared stage across query families. Within a pass, whichever
-    # family member runs FIRST pays the memoized stage — which used to
-    # be decided by registry order, so a rotation reshuffle could move
-    # the cost between queries and masquerade as a >1.5x round-over-
-    # round mover (r10: dedup_clusters 1.47->4.06 s purely from payer
-    # reassignment). The canonical payers below are hoisted to the
-    # front of every timed pass, so the memo cost lands on the same
-    # query name every round regardless of registry order.
+    # family member runs FIRST pays the memoized stage. Left to registry
+    # order, adding or moving a query could shift the cost between
+    # queries and masquerade as a >1.5x round-over-round mover (r10:
+    # dedup_clusters 1.47->4.06 s purely from payer reassignment). The
+    # canonical payers below are hoisted by name to the front of every
+    # timed pass, so the memo cost lands on the same query name every
+    # round regardless of registry order.
     _MEMO_PAYERS = (
         "ngram_jaccard_pairs",  # pays llm._verified_pairs
         "ann_recall_report",  # pays llm._ann_truth_and_ranked_methods + the _ann_* index pieces

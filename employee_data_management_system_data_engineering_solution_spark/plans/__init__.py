@@ -1,620 +1,16 @@
 """Named query registry — the driver contract surface.
 
-Each entry maps a query name to ``(spark_fn, oracle_sql)`` where
-``spark_fn(spark, sf_dir) -> DataFrame`` and ``oracle_sql`` is the
-DuckDB-runnable ANSI SQL equivalent (or ``None`` for operators that are
-not SQL-expressible — stateful streaming, Pandas-UDF media decode —
-which get the driver's weaker rows-only check).
-
-Column-name parity rule: every computed/aggregate column is aliased
-identically in the Spark plan and the oracle SQL; DATE columns are cast
-to strings on both sides so value hashing is representation-stable;
-computed doubles are rounded on both sides so summation order can't
-flip low bits.
+``REGISTRY`` maps each query name to a spec holding ``fn(spark,
+sf_dir) -> DataFrame`` and ``oracle_sql``, its DuckDB twin (``None``
+for the rows-only queries whose output no SQL engine can reproduce).
+Entries appear in import order of the plan modules below. Computed
+columns carry the same alias on both sides, DATE columns are cast to
+strings, and computed doubles are rounded identically in both engines.
 """
 
 from __future__ import annotations
 
-import json
-import pathlib
-
 from . import core, curation, llm, pipeline, temporal  # noqa: F401  (import populates REGISTRY)
 from .registry import REGISTRY, register
 
-# ---------------------------------------------------------------------------
-# Registry ordering.
-#
-# External correctness harnesses check a bounded PREFIX of the registry
-# (observed: the first 50 entries), so registration order decides which
-# queries get an independent correctness verdict. The priority prefix
-# below is curated so every operator family — sources, all six sink
-# shapes, joins, window/dedup, every streaming carrier, temporal joins,
-# and the LLM dedup/ANN/multimodal stack — has at least one carrier
-# inside the window.
-#
-# ROTATION POLICY: any oracle-bearing query that has never held a
-# hash-green row in a driver CORRECTNESS file rotates INTO the prefix
-# next round, displacing the longest-stable carriers whose operator
-# families remain covered by other in-window entries; a full local run
-# of tools/check_oracle.py (all queries, no filter) guards the
-# displaced tail before each round's snapshot (committed as
-# CHECK_ORACLE_r{N}.txt).
-#
-# The per-query verdict history lives in driver_history.json —
-# regenerated from the CORRECTNESS_r*.json files by
-# tools/build_driver_history.py after each driver round — and the
-# policy is enforced mechanically by tests/test_entry_contract.py:
-# every registered oracle-bearing query with no recorded green round
-# must sit inside the window (rows-only-by-contract entries are
-# exempt). driver_green_rounds()/never_green() below are the audit's
-# data source.
-#
-# Round 17 rotation (r16 narrative preserved below). Executes the r16
-# verdict's recorded r17 queue (ask 8: the 35 remaining r12-green
-# queries first, then begin the r13 cohort):
-#   IN (the r17 drain head — 34 of the 35 remaining r12-green
-#       queries): brand_price_regression … weighted_sample_topk (see
-#       _PRIORITY). calendar_completeness_report (the 35th) DEFERS to
-#       lead the r18 queue: the window holds 50 slots, the other 34
-#       plus the family mechanics below need all of them, and it is
-#       the one r12-green query that carries no FAMILY_CARRIERS slot
-#       of its own, so deferring it costs no coverage.
-#   IN (the r17 drain tail — 12 of the 47-query r13-green cohort,
-#       chosen so each also restores a family the r12 drain leaves
-#       uncovered): kmeans_ivf_assign (ann_quantized_ivf; its
-#       assignment machinery was de-literalized this round — the r15
-#       changed-contract-keeper discipline), bpe_merge_batched
-#       (bpe_tokenizer), gate_trained_eval (learned_gate_curation),
-#       supplier_golden_record (merge_upsert_scd), strike_report_rlike
-#       (reference_clean_path), upcoming_leave_pct
-#       (reference_reports), hybrid_rrf_topk (retrieval_rank_eval;
-#       r16 §1 hoist touched it), bloom_pruned_join (scale_layout),
-#       format_roundtrips (sinks_roundtrip), event_sessions
-#       (temporal), text_profile (text_analysis), dedup_keep_best
-#       (window_dedup_rank).
-#   IN (family keepers — four families have NO r13-green member, so
-#       their stalest members hold the slots): supplier_communities
-#       (graph, r14), checkpoint_restart_strikes
-#       (streaming_stateful_checkpoint, r14),
-#       mmr_diversified_topk_grouped (mmr_diversification, r15),
-#       semantic_prune (semantic_dedup, r15 — and its centroid
-#       machinery was de-literalized this round, so it re-verifies
-#       in-window rather than riding stale evidence).
-# R18 QUEUE: calendar_completeness_report FIRST, then the remaining
-# 35 r13-green queries (balanced_strata_sample, benchmark_contamination,
-# bm25_topk, brand_price_theilsen, bucketed_colocated_join,
-# column_profile, dedup_recall_curve, dedup_recall_sampled,
-# discount_quantity_ab, domain_mixture_sample, embedding_neardup_pairs,
-# events_in_error_windows, forward_fill_values,
-# funnel_conversion_report, fuzzy_name_pairs, gate_calibration_bins,
-# gate_eval_report, hourly_interpolated_series, hyperplane_lsh_groups,
-# order_price_ks_drift, phash_neardup_pairs, pii_scrub,
-# price_decile_stats, quality_weighted_sample, range_partition_plan,
-# referential_integrity_audit, repeated_passages, revenue_cube_report,
-# revenue_forecast_mase, schema_evolution_read,
-# seasonal_decompose_report, snapshot_diff_orders, tfidf_top_terms,
-# train_test_split, user_value_trend — snapshot_vacuum and
-# staging_promote_roundtrip drained this round), then begin the
-# r14-green cohort; FAMILY_CARRIERS mechanics guard the reshuffle as
-# always.
-#   OUT (rotated to the tail; every one driver-green ≤ 5 rounds ago
-#       and guarded by the committed full local runs): the whole r16
-#       window — the four r16 newcomers, the 31-query r11 drain, the
-#       r16 keepers and drain tail.
-#
-# Round 16 rotation (r15 narrative preserved below). Executes the r15
-# verdict's recorded r16 queue:
-#   IN (never green — the r16 build-outs, full hash oracles):
-#       semantic_scorecard_sampled (X208 — fixed-n sampled twin of the
-#       complementarity scorecard, verdict ask 2: both detector tiers
-#       run on one seeded 1000-id spine, counters and columns match
-#       the full scorecard so agreement is a join on method),
-#       ann_cost_frontier (X209 — exact bytes-per-query cost axis over
-#       the ten-method eval harness, verdict ask 3: integer
-#       candidate/byte accounting ranked as recall-per-GB-scanned),
-#       doremi_mixture_weights (X210 — excess-loss domain reweighting
-#       over the gate stack's pinned/trained model pair, the DoReMi
-#       one-step multiplicative update normalized over an exact
-#       decimal total), aspect_ratio_buckets (X211 — SDXL-style AR
-#       bucket packing: integer-exact cross-multiplied argmin as a
-#       zero-shuffle literal-array reduction + padding-waste audit).
-#   IN (the r16 drain head — the COMPLETE 31-query r11-green cohort,
-#       verdict ask 1; 28 hold judge out-of-window re-proofs from the
-#       r14/r15 verdicts): ann_incremental_admission …
-#       value_winsorized_stats (see _PRIORITY).
-#   IN (family keepers — neither the r11 cohort nor the r12 picks
-#       carry these): epoch_status_clean (reference clean path),
-#       pct_of_quota (reference reports), keyed_upsert (MERGE upsert),
-#       mmr_diversified_topk (MMR — the grouped twin carried r15).
-#   IN (the r16 drain tail — 11 of the 46-query r12-green cohort):
-#       eight family-coverage picks, each now a named FAMILY_CARRIERS
-#       member (ivf_topk: ANN inverted list; supplier_pagerank: graph;
-#       bpe_encode_stats: tokenizer; strike_stream_stateful: stateful
-#       streaming; benford_digit_audit: analytics;
-#       rolling_user_features: temporal; orc_roundtrip: sinks;
-#       strike_window_counts: streaming windows) plus three cheap
-#       drains (exact_dedup, doc_fingerprint, text_stats).
-# R17 QUEUE: the 35 remaining r12-green queries FIRST
-# (brand_price_regression, calendar_completeness_report,
-# cluster_safe_split, column_entropy_profile,
-# customers_with_urgent_orders, dedup_last_write_wins, embedding_topk,
-# fd_violation_report, feature_drift_psi, feature_woe_iv,
-# frequent_shingles, gate_training_rounds,
-# incremental_agg_refresh_minmax, lineitem_corr_matrix,
-# longest_leave_streak, minhash_lsh_groups, multimodal_decode,
-# multimodal_profile, neardup_admission, ppjoin_neardup_pairs,
-# purchase_error_overlap, q3_shipping_priority, quality_gate_logistic,
-# revenue_cusum_shift, salary_change_deltas, salted_revenue_join,
-# simhash_hamming_pairs, snapshot_vacuum, staging_promote_roundtrip,
-# stream_purchase_view_join, union_entities, user_path_topk,
-# value_outliers_mad, weighted_median_by_flag, weighted_sample_topk),
-# then begin the 48-query r13-green cohort (stale by r17/r18 —
-# plan a 2-round drain; its families stay covered by the same
-# FAMILY_CARRIERS mechanics that guard every reshuffle).
-#   OUT (rotated to the tail; every one driver-green <= 4 rounds ago
-#       and guarded by the committed full local runs): the whole r15
-#       window except the four family-keeper SLOTS (whose occupants
-#       rotated to fresher same-family twins: keyed_upsert for
-#       scd2_merge, mmr_diversified_topk for the grouped variant).
-#
-# Round 15 rotation (r14 narrative preserved below). Executes the r14
-# verdict's recorded r15 queue:
-#   IN (never green — the r15 build-outs, full hash oracles):
-#       matryoshka_funnel_topk (X191 — truncated-prefix coarse search
-#       + exact full-dim rescore, the serving operator X190 measures
-#       for; verdict ask 4), matryoshka_ivf_topk (X192 — the funnel
-#       stacked on the IVF inverted list, making X191's composability
-#       claim a measured operator), semantic_prune_sampled_train
-#       (X193 — sampled centroid training, the bounded 100 TB
-#       training barrier; survivor set pinned identical to X188),
-#       binary_quantized_topk (X194 — sign-bit 32x quantization,
-#       Hamming coarse over packed 32-bit words + exact rescore;
-#       also the ninth eval-harness method row, bq_hamming),
-#       epoch_shuffle_shards (X195 — seeded hash-shard plan, the
-#       pre-training global shuffle), source_divergence_report
-#       (X196 — log-free Bhattacharyya/Hellinger/TV divergence matrix
-#       between per-source unigram distributions),
-#       perplexity_partition_report (X197 — CCNet per-language
-#       head/middle/tail terciles over the X68 LM score),
-#       cross_source_dup_matrix (X198 — directional exact-dup
-#       containment between sources, planted mirror source),
-#       binary_ivf_topk (X199 — the sign-bit tier composed with the
-#       inverted list, completing the flat/IVF pairing for every
-#       compression point; tenth eval-harness method row, bq_ivf),
-#       l_diversity_report (X200 — distinct l-diversity release gate,
-#       the homogeneity-attack audit k-anonymity misses),
-#       embedding_class_separation (X201 — centroid pseudo-silhouette
-#       per label, decimal-exact end to end),
-#       stream_full_join_events (X202 — FULL-outer watermarked
-#       stream-stream join, both null-emission paths hash-checked),
-#       partition_content_digest (X203 — order-independent Merkle
-#       first-level bucket digest, the replica-verification
-#       primitive), ann_recall_curve (X204 — recall@1/5/10 per
-#       method on the shared pinned harness), token_budget_waterfill
-#       (X205 — integer-exact closed-form waterfilling of a token
-#       budget across sources, the mixture EXECUTION step),
-#       rho_loss_selection (X206 — reducible-loss batch selection,
-#       deployed-vs-trained log-loss difference over the gate stack),
-#       sliding_window_counts (X207 — watermarked sliding-window
-#       counts, the overlap tier tumbling windows cannot express).
-#   IN (the recorded r15 queue head — the 4 deferred r10-green
-#       queries, verdict ask 1): ivf_topk_multiprobe,
-#       quantized_ivf_topk, quantized_topk_rescore, binary_metadata.
-#   IN (rows-only trio — rows>0 driver evidence refresh, verdict ask
-#       5): simhash_signatures, column_profile_approx,
-#       salary_percentiles_approx.
-#   IN (changed-contract keepers — r14-green but their machinery
-#       changed this round, so they re-verify in-window rather than
-#       riding stale evidence): semantic_prune +
-#       semantic_prune_scorecard (k now derives from corpus size,
-#       verdict ask 2 — sf0.01 output unchanged by the survivor-set
-#       k-invariance), dedup_recall_report (_full_recall_frames memo,
-#       verdict ask 3 — hash unchanged).
-#   IN (family keepers — the FAMILY_CARRIERS audit requires every
-#       operator family in-window and the r11 cohort carries none of
-#       these): epoch_status_clean (reference clean path + ingest
-#       gates), pct_of_quota (reference reports), mann_kendall_trend
-#       (analytics/stats), mmr_diversified_topk_grouped (MMR).
-#   IN (the r15 drain — 19 of the 50-query r11-green cohort, verdict
-#       ask 1; includes ann_recall_report + ann_rank_quality, whose
-#       HASH CHANGED this round with the mrl_funnel_p16 + bq_hamming +
-#       bq_ivf method rows, and neardup_prune, whose oracle moved to
-#       NOT EXISTS): ann_incremental_admission …
-#       top3_orders_per_customer (see _PRIORITY).
-# R16 QUEUE: the 31 deferred r11-green queries (8 of them re-proven
-# green by the judge's own out-of-window r14 oracle run:
-# quality_score, benchmark_decontamination, daily_pipeline,
-# status_pivot_report, cube_order_stats, salary_rank_analytics,
-# trailing_revenue_90d, region_supplier_volume; plus
-# top_earner_per_designation, promo_revenue_share,
-# distinct_order_supp_pairs, customers_without_urgent_orders,
-# multi_touch_attribution, incremental_agg_refresh, json_props_stats,
-# value_winsorized_stats, strike_report_batch, unicode_script_profile,
-# gopher_repetition_report, join_key_skew_report, ngram_jaccard_pairs,
-# stratified_sample, hard_negative_mining, embedding_dim_profile,
-# cross_split_leakage, ann_incremental_admission, cdc_log_replay,
-# constraint_quarantine, salary_percentiles, rollup_revenue,
-# corpus_curation_pipeline —
-# the last FOURTEEN yielded their slots to the X195–X207 newcomers.
-# Their families stayed covered in-window as follows:
-# unicode_script_profile + gopher_repetition_report (text_analysis) by
-# lang_id; join_key_skew_report (scale_layout) by
-# partition_pruned_report; ngram_jaccard_pairs (lexical_dedup) by
-# dedup_clusters_star; stratified_sample (learned_gate_curation) by
-# token_mixture_plan; hard_negative_mining (retrieval) by
-# ann_rank_quality + matryoshka_funnel_topk; embedding_dim_profile +
-# ann_incremental_admission (ANN) by the eight in-window
-# index/quantization carriers; cdc_log_replay (CDC/merge) by
-# scd2_merge; the remaining five (cross_split_leakage,
-# constraint_quarantine, salary_percentiles, rollup_revenue,
-# corpus_curation_pipeline) carry no FAMILY_CARRIERS slot of their
-# own) FIRST, then the stalest r12-green cohort by
-# driver_history.json (46 queries — plan a 2-round drain).
-#   OUT (rotated to the tail; every one driver-green ≤3 rounds ago
-#       and guarded by the committed full local runs): the whole r14
-#       window except the three changed-contract keepers.
-#
-# Round 14 rotation (r13 narrative preserved below). The r13 window
-# re-greened the nine r13 newcomers + the complete 40-query r9 cohort
-# + checkpoint_restart_strikes (CORRECTNESS_r13.json: 50/50
-# hash-green). This round executes the r13 verdict's planned drain:
-#   IN (never green — r14 build-outs, full hash oracles):
-#       semantic_prune (X188 SemDeDup-shape prune: trained-centroid
-#       k-means bucket → within-cluster cosine ≥ 0.999 verify →
-#       keep-one representative; verdict item 2),
-#       semantic_prune_scorecard (X189 semantic-vs-lexical removal
-#       complementarity; item 2), mmr_diversified_topk_grouped (X187
-#       cogrouped applyInPandas greedy — re-ranking parallel in query
-#       count; item 3), matryoshka_recall_report (X190 truncation
-#       recall@10 vs the full-dim exact top-10 — the dimension-axis
-#       twin of X79).
-#   IN (the r14 drain — 45 of the 49 r10-green queries, verdict
-#       item 1): active_count_by_designation … zorder_layout_stats
-#       (see _PRIORITY).
-#   IN (re-confirmation keeper): checkpoint_restart_strikes — the
-#       timeless-strike ordering contract changed this round (verdict
-#       item 4), so stateful streaming + checkpoint recovery
-#       re-verifies in-window.
-# R15 QUEUE: the 4 deferred r10-green queries (ivf_topk_multiprobe,
-# quantized_ivf_topk, quantized_topk_rescore — quantized/IVF-ANN, and
-# binary_metadata — multimodal, whose family keeps
-# multimodal_frame_stats in-window) FIRST, then the stalest r11-green
-# cohort by driver_history.json.
-#   OUT (rotated to the tail; every one driver-green ≤3 rounds ago and
-#       guarded by the committed full local runs): the whole r13
-#       window except the keeper.
-#
-# Round 13 rotation (r12 narrative preserved below). The r12 window
-# re-greened the complete 34-query r8 block + the rows-only trio; the
-# r12 verdict (item 1) ordered in FIRST the complete 40-query r9-green
-# cohort (the final r13 entry in PROGRESS.jsonl). Nine newcomers hold
-# the head (verdict items 2-5 plus the five r13 build-outs: seasonal
-# decomposition, Mann-Kendall, RI audit, range-partition planner,
-# MMR), leaving ONE slot for the r10-green cohort (stale by r14/r15;
-# the 49 leftovers are scheduled FIRST for r14 in PROGRESS.jsonl —
-# plan a 2-round drain).
-#   IN (never green — new in r13, full hash oracles):
-#       gate_trained_eval (X178 held-out AUC/confusion of the
-#       X177-TRAINED weights vs the pinned X143 weights on a doc_id%5
-#       split — closes train→serve→eval; verdict item 2),
-#       bpe_merge_batched (X179 top-k non-overlapping merges per round
-#       — the 30k-merge scaling path; item 3), dedup_recall_sampled
-#       (X180 fixed-n seeded-sample scorecard — the scale-safe recall
-#       measurement; item 4), dedup_recall_curve (X181 cumulative
-#       recall/precision by Jaccard band over the pair memos; item 5).
-#   IN (never green — the five r13 build-outs, full hash oracles):
-#       seasonal_decompose_report (X182 weekly additive decomposition
-#       of daily revenue), mann_kendall_trend (X183 tie-corrected MK
-#       monotone-trend test per nation), referential_integrity_audit
-#       (X184 orphan-FK audit over the 7-edge star schema),
-#       range_partition_plan (X185 exact-rank range-partition
-#       boundaries + skew), mmr_diversified_topk (X186 greedy MMR
-#       re-rank of the brute-force top-10).
-#   IN (re-confirmation — the COMPLETE 40-query r9-green cohort):
-#       balanced_strata_sample … user_value_trend (see _PRIORITY).
-# R14 QUEUE (planned drain, 2 rounds): the 49 r10-green queries left
-# after checkpoint_restart_strikes re-greens in the r13 window —
-# schedule FIRST for r14 (≈40 fit; the remainder plus any r11-green
-# staleness rides r15):
-#   active_count_by_designation bigram_collocations binary_metadata
-#   boilerplate_scrub_stats bpe_merge_candidates char_bigram_entropy
-#   cluster_topic_terms compact_parquet_roundtrip context_pack_bins
-#   decile_lift_report dedup_clusters dsir_importance_weights
-#   embedding_quantize epoch_status_clean except_all_dupes
-#   ivf_topk_multiprobe keyed_upsert lm_doc_score
-#   multimodal_frame_stats nation_revenue_gini ndcg_mrr_report
-#   ordered_designation_report part_link_prediction pct_of_quota
-#   pq_adc_search pq_ivf_search price_qty_elasticity
-#   priority_price_mwu published_report_roundtrip purchase_asof_view
-#   quantized_ivf_topk quantized_topk_rescore repeated_substring_spans
-#   salted_skew_join segment_nation_chi2 session_window_counts
-#   shingle_containment_pairs snapshot_time_travel stream_dedup_counts
-#   stream_left_join_events streaming_upsert_dim supplier_communities
-#   supplier_triangles user_survival_km value_outliers
-#   weekly_cohort_retention winnow_fingerprint_pairs word_freq_topk
-#   zorder_layout_stats
-#   IN (re-confirmation — 1 of the 50 r10-green, family coverage):
-#       epoch_status_clean (reference core clean path), keyed_upsert
-#       (MERGE upsert), checkpoint_restart_strikes (stateful streaming
-#       + checkpoint recovery), pq_ivf_search (quantized ANN),
-#       winnow_fingerprint_pairs (winnowing dedup),
-#       supplier_communities (graph — the only family without an
-#       r13-window carrier otherwise).
-#   OUT (rotated to the tail; every one r10/r11/r12 driver-green and
-#       guarded by the committed full local runs): the whole r12
-#       window — X175-X177 newcomers now green, the rows-only trio,
-#       the 34-query r8 block, the 10 r9 picks — and the 44 remaining
-#       r10-green queries queued first for r14 (PROGRESS.jsonl r14
-#       schedule entry).
-#
-# Round 12 rotation (r11 narrative preserved below). The r11 window
-# re-greened the complete 26-query r7-stale block; the r11 verdict
-# (items 1-2) ordered in FIRST the 34-query r8-green block without
-# driver evidence since r8 (the final r12 entry in PROGRESS.jsonl)
-# plus the rows-only trio for rows>0 driver evidence
-# (column_profile_approx / salary_percentiles_approx NEVER windowed,
-# simhash_signatures not since r2). Newcomers are capped at three
-# (verdict items 3-5), so the remaining 10 slots start draining the
-# 50-query r9-green cohort (stale by r13/r14; the 40 leftovers are
-# scheduled FIRST for r13 in PROGRESS.jsonl).
-#   IN (never green — new in r12, full hash oracles):
-#       bpe_encode_stats (X175 BPE encoder application — tokens/word
-#       + compression per source, closes the X166/X167 tokenizer
-#       loop), dedup_recall_report (X176 detector recall/precision vs
-#       the X149 PPJoin exact pair truth), gate_training_rounds (X177
-#       fixed-round batch-GD logistic training — closes the
-#       X143/X144/X145 learned-gate loop).
-#   IN (rows-only trio — driver rows>0 evidence, verdict item 2):
-#       simhash_signatures, column_profile_approx,
-#       salary_percentiles_approx.
-#   IN (re-confirmation — the COMPLETE 34-query r8-green block):
-#       benford_digit_audit … weighted_sample_topk (see _PRIORITY).
-#   IN (re-confirmation — 10 of the 50 r9-green, family coverage +
-#       newcomer pairing): quality_gate_logistic (the gate the X177
-#       trainer learns), ppjoin_neardup_pairs (the truth set X176
-#       scores against), minhash_lsh_groups + simhash_hamming_pairs +
-#       exact_dedup (dedup), strike_stream_stateful (stateful
-#       streaming), embedding_topk + ivf_topk (ANN),
-#       supplier_pagerank (graph — re-green after its r11 top-k
-#       rework), multimodal_decode (Arrow decode seam).
-#   OUT (rotated to the tail; every one r9/r10/r11 driver-green and
-#       guarded by the committed full local runs): the whole r11
-#       window — X167-X174 newcomers now green, the 26-query r7
-#       block, the 16 r8 family picks — and the 40 remaining r9-green
-#       queries queued first for r13 (PROGRESS.jsonl r13 entry).
-#
-# Round 11 rotation (r10 narrative preserved below). The r10 window
-# re-greened the complete r6-stale deferral queue and 21 of 47
-# r7-green; the ONLY r7-stale block left is the 26-query must-include
-# the r10 verdict (item 2) ordered in first — all 26 are in. Newcomers
-# are capped at eight (verdict item 3) so the remaining 16 slots start
-# draining the 50-query r8-green cohort (stale by r12/r13); the 34
-# r8 queries left over are scheduled FIRST for r12 in PROGRESS.jsonl.
-#   IN (never green — new in r11, full hash oracles):
-#       bpe_merge_table (X167 iterative 10-round BPE trainer — verdict
-#       item 4), unicode_script_profile (X168 script-mixing screen —
-#       item 5), ann_incremental_admission (X169 pinned-centroid
-#       admission + recall — item 6), benchmark_decontamination (X170
-#       eval-split 8-gram collision screen), gopher_repetition_report
-#       (X171 within-doc repetition rules), cross_split_leakage (X172
-#       near-dup train/eval leakage over the shared pair memo),
-#       embedding_dim_profile (X173 dead-dimension QA),
-#       token_mixture_plan (X174 temperature-flattened source mixture).
-#   IN (re-confirmation — the complete 26-query r7-stale block):
-#       customers_without_urgent_orders, lang_id, event_transitions,
-#       ann_rank_quality, checkpoint_restart_windowed,
-#       constraint_quarantine, cube_order_stats,
-#       distinct_order_supp_pairs, incremental_agg_refresh,
-#       join_key_skew_report, json_props_stats,
-#       multi_touch_attribution, neardup_prune, promo_revenue_share,
-#       quality_score, region_supplier_volume, rollup_revenue,
-#       salary_percentiles, salary_rank_analytics, status_pivot_report,
-#       stratified_sample, strike_report_batch,
-#       top3_orders_per_customer, top_earner_per_designation,
-#       trailing_revenue_90d, value_winsorized_stats.
-#   IN (re-confirmation — 16 of the 50 r8-green, family coverage;
-#       orc_roundtrip / feature_drift_psi / revenue_cusum_shift
-#       yielded their slots to the three late newcomers and lead the
-#       r12 queue — their families stay covered in-window by
-#       json_lines_roundtrip, k_anonymity_report + stratified_sample,
-#       and part_covisitation_topk):
-#       streaming keeps strike_stream_from_wire + stream_static_enrich
-#       (checkpoint_restart_windowed above carries recovery); the
-#       flagship q1_pricing_summary; pipelines keep daily_pipeline +
-#       corpus_curation_pipeline; ANN keeps ann_recall_report +
-#       hard_negative_mining; dedup keeps dedup_clusters_star +
-#       ngram_jaccard_pairs; CDC keeps cdc_log_replay; formats/sinks
-#       keep json_lines_roundtrip; layout keeps
-#       partition_pruned_report; curation keeps k_anonymity_report;
-#       UDTF keeps doc_chunks; SCD keeps scd2_merge; analytics keep
-#       part_covisitation_topk.
-#   OUT (rotated to the tail; every one r8/r9/r10 driver-green and
-#       guarded by the committed full local runs): the whole r10
-#       window (X154-X166 newcomers now green, the r6 deferral queue,
-#       the 21 r7 re-greens) and the 34 remaining r8-green queries
-#       queued first for r12 (see PROGRESS.jsonl r12 schedule entry).
-#
-# Round 10 rotation. The r9 window re-greened the whole r5 cohort and
-# 21 of 37 r6-green queries; the ONLY remaining r6-stale block was the
-# 16-query deferral queue the r9 verdict ordered in FIRST. The rest of
-# the window started draining the 47-query r7-green cohort (stale by
-# r11/r12 otherwise — this pre-empted the crunch the r9 verdict's item
-# 5 warned about; the 26 r7 leftovers were scheduled for r11 in
-# PROGRESS.jsonl).
-#   IN (never green — new in r10, full hash oracles): the thirteen
-#       r10 operators X154-X166 — priority_price_mwu (X154 Mann-Whitney
-#       rank test), decile_lift_report (X155 gains/lift),
-#       segment_nation_chi2 (X156 chi²+Cramér's V),
-#       price_qty_elasticity (X157 log-log OLS), char_bigram_entropy
-#       (X158 per-doc Shannon), dsir_importance_weights (X159 DSIR
-#       resampling weights), ndcg_mrr_report (X160 graded retrieval
-#       eval — the r9 verdict's item 3), repeated_substring_spans
-#       (X161 exact LCS spans over winnowing candidates — item 4),
-#       shingle_containment_pairs (X162 asymmetric containment),
-#       part_link_prediction (X163 common-neighbor Jaccard),
-#       nation_revenue_gini (X164 revenue-concentration Gini),
-#       user_survival_km (X165 Kaplan-Meier churn with censoring),
-#       bpe_merge_candidates (X166 tokenizer first-merge statistic).
-#   IN (re-confirmation — the complete 16-query r6-stale deferral
-#       queue, the r9 verdict's item 1): embedding_quantize,
-#       ivf_topk_multiprobe, pq_adc_search, pq_ivf_search,
-#       quantized_ivf_topk, quantized_topk_rescore,
-#       cluster_topic_terms, context_pack_bins, bigram_collocations,
-#       boilerplate_scrub_stats, lm_doc_score, zorder_layout_stats,
-#       winnow_fingerprint_pairs, weekly_cohort_retention,
-#       value_outliers, supplier_triangles.
-#   IN (re-confirmation — 21 of the 47 r7-green, chosen for family
-#       coverage): streaming keeps five carriers
-#       (checkpoint_restart_strikes — the stateful strikes machine
-#       plus checkpoint recovery — session_window_counts,
-#       stream_dedup_counts, stream_left_join_events,
-#       streaming_upsert_dim); the reference core keeps
-#       active_count_by_designation, epoch_status_clean, keyed_upsert,
-#       pct_of_quota, except_all_dupes, ordered_designation_report;
-#       sinks/maintenance keep published_report_roundtrip,
-#       compact_parquet_roundtrip, snapshot_time_travel; joins keep
-#       salted_skew_join, purchase_asof_view; text keeps
-#       word_freq_topk; multimodal keeps binary_metadata,
-#       multimodal_frame_stats; graph keeps supplier_communities,
-#       dedup_clusters; temporal is carried by
-#       weekly_cohort_retention + user_survival_km.
-#   OUT (rotated to the tail; every one r8/r9 driver-green and
-#       guarded by the committed full local runs): the whole r9
-#       window — X141-X153, the r5 cohort, the 21 r6 re-greens — and
-#       the 26 r7-green queries deferred to r11
-#       (customers_without_urgent_orders, lang_id, event_transitions,
-#       checkpoint_restart_windowed, strike_report_batch,
-#       ann_rank_quality, constraint_quarantine, cube_order_stats,
-#       distinct_order_supp_pairs, incremental_agg_refresh,
-#       join_key_skew_report, json_props_stats,
-#       multi_touch_attribution, neardup_prune, promo_revenue_share,
-#       quality_score, region_supplier_volume, rollup_revenue,
-#       salary_percentiles, salary_rank_analytics,
-#       status_pivot_report, stratified_sample,
-#       top3_orders_per_customer, top_earner_per_designation,
-#       trailing_revenue_90d, value_winsorized_stats). Family coverage
-#       inside the window is carried by the blocks above: ANN by the
-#       six PQ/IVF variants, LLM-text by the five-query r6 block plus
-#       the retrieval-eval newcomers, dedup by winnow/spans/
-#       containment, stats by value_outliers plus the X154-X157
-#       newcomers.
-# ---------------------------------------------------------------------------
-_PRIORITY: tuple[str, ...] = (
-    # r17 drain head: 34 of the 35 remaining r12-green queries (the
-    # r16 verdict's recorded r17 queue, ask 8;
-    # calendar_completeness_report defers to lead r18 — see the
-    # rotation narrative above)
-    "brand_price_regression",
-    "cluster_safe_split",
-    "column_entropy_profile",
-    "customers_with_urgent_orders",
-    "dedup_last_write_wins",
-    "embedding_topk",
-    "fd_violation_report",
-    "feature_drift_psi",
-    "feature_woe_iv",
-    "frequent_shingles",
-    "gate_training_rounds",
-    "incremental_agg_refresh_minmax",
-    "lineitem_corr_matrix",
-    "longest_leave_streak",
-    "minhash_lsh_groups",
-    "multimodal_decode",
-    "multimodal_profile",
-    "neardup_admission",
-    "ppjoin_neardup_pairs",
-    "purchase_error_overlap",
-    "q3_shipping_priority",
-    "quality_gate_logistic",
-    "revenue_cusum_shift",
-    "salary_change_deltas",
-    "salted_revenue_join",
-    "simhash_hamming_pairs",
-    "snapshot_vacuum",
-    "staging_promote_roundtrip",
-    "stream_purchase_view_join",
-    "union_entities",
-    "user_path_topk",
-    "value_outliers_mad",
-    "weighted_median_by_flag",
-    "weighted_sample_topk",
-    # r17 drain tail: 12 r13-green picks, each restoring a family the
-    # r12 drain leaves uncovered (one per family; see narrative)
-    "kmeans_ivf_assign",
-    "bpe_merge_batched",
-    "gate_trained_eval",
-    "supplier_golden_record",
-    "strike_report_rlike",
-    "upcoming_leave_pct",
-    "hybrid_rrf_topk",
-    "bloom_pruned_join",
-    "format_roundtrips",
-    "event_sessions",
-    "text_profile",
-    "dedup_keep_best",
-    # family keepers: these four families have no r13-green member —
-    # their stalest members hold the coverage slots (semantic_prune
-    # and kmeans_ivf_assign above also re-verify this round's
-    # de-literalized centroid machinery in-window)
-    "supplier_communities",
-    "checkpoint_restart_strikes",
-    "mmr_diversified_topk_grouped",
-    "semantic_prune",
-)
-
-#: Queries whose driver check is rows-only BY CONTRACT (no SQL oracle
-#: exists); exempt from the "never-green must be in-window" audit.
-#: simhash_signatures: blake2b is SQL-inexpressible (pinned by a
-#: pure-Python bit-exact reference test in tests/test_dedup.py).
-#: column_profile_approx: HLL++ estimates are engine-specific (pinned
-#: by error-bound tests in tests/test_quality.py against the exact
-#: column_profile).
-#: salary_percentiles_approx: Greenwald-Khanna sketch quantiles are
-#: engine-specific (pinned by rank-error-bound tests in
-#: tests/test_quality.py against the exact salary_percentiles).
-ROWS_ONLY_BY_CONTRACT: frozenset[str] = frozenset(
-    {"simhash_signatures", "column_profile_approx", "salary_percentiles_approx"}
-)
-
-_HISTORY_PATH = pathlib.Path(__file__).with_name("driver_history.json")
-
-
-def driver_green_rounds() -> dict[str, list[int]]:
-    """Per-query driver hash-green rounds, from driver_history.json
-    (regenerate with tools/build_driver_history.py). Queries absent
-    from the file have never appeared in any driver check window."""
-    return json.loads(_HISTORY_PATH.read_text())
-
-
-def never_green() -> list[str]:
-    """Registered oracle-bearing queries with NO driver hash-green
-    verdict in any recorded round — the rotation policy requires every
-    one of these to sit inside the priority window."""
-    hist = driver_green_rounds()
-    return sorted(
-        name
-        for name in REGISTRY
-        if name not in ROWS_ONLY_BY_CONTRACT and not hist.get(name)
-    )
-
-
-def _reorder() -> None:
-    missing = [n for n in _PRIORITY if n not in REGISTRY]
-    if missing:
-        raise RuntimeError(f"priority list names unregistered queries: {missing}")
-    prioritized = set(_PRIORITY)
-    tail = [n for n in REGISTRY if n not in prioritized]
-    ordered = {n: REGISTRY[n] for n in (*_PRIORITY, *tail)}
-    REGISTRY.clear()
-    REGISTRY.update(ordered)
-
-
-_reorder()
-
-__all__ = [
-    "REGISTRY",
-    "ROWS_ONLY_BY_CONTRACT",
-    "driver_green_rounds",
-    "never_green",
-    "register",
-]
+__all__ = ["REGISTRY", "register"]

@@ -14,8 +14,11 @@ Usage: python tools/bench_scale.py [base_sf_dir] [replica_dir]
 
 from __future__ import annotations
 
+import pathlib
 import sys
 import time
+
+ROOT = pathlib.Path(__file__).resolve().parents[1]
 
 TARGETS = [
     "column_profile",
@@ -116,11 +119,11 @@ TARGETS = [
 
 def main() -> None:
     base = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    replica = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/.scale_sf1"
+    replica = sys.argv[2] if len(sys.argv) > 2 else str(ROOT / ".scale_sf1")
     if len(sys.argv) > 3:  # subset run: argv[3:] name the targets
         global TARGETS
         TARGETS = sys.argv[3:]
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(ROOT))
     from pyspark.sql import SparkSession
 
     from __spark_entry__ import queries

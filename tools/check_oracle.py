@@ -15,6 +15,7 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import pathlib
 import sys
 import time
 import traceback
@@ -23,7 +24,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 from __spark_entry__ import oracle_sql, queries  # noqa: E402
 

@@ -107,7 +107,8 @@ def replicate(spark: SparkSession, src: str, dest: str, copies: int) -> None:
 
 def main() -> None:
     src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    dest = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/.scale_sf1"
+    default_dest = pathlib.Path(__file__).resolve().parents[1] / ".scale_sf1"
+    dest = sys.argv[2] if len(sys.argv) > 2 else str(default_dest)
     copies = int(sys.argv[3]) if len(sys.argv) > 3 else 10
     spark = (
         SparkSession.builder.master("local[32]")

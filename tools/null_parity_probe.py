@@ -14,6 +14,7 @@ Usage: python tools/null_parity_probe.py [src_sf_dir] [query ...]
 
 from __future__ import annotations
 
+import pathlib
 import sys
 import tempfile
 
@@ -23,7 +24,7 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 from __spark_entry__ import oracle_sql, queries  # noqa: E402
 

@@ -313,34 +313,20 @@ def main() -> int:
 
 
 def bench_session(app_name: str = "eds-bench"):
-    """The bench's SparkSession — ``local[$SPARK_GRAFT_CPUS]`` with
-    matching shuffle partitions, AQE, an 8 GB driver, and TIMESTAMP(NANOS)
-    parquet columns read as long. tools/profile_queries.py builds its
+    """The bench's SparkSession: ``session.get_session`` on
+    ``local[$SPARK_GRAFT_CPUS]`` (32 when unset) with matching shuffle
+    partitions and an 8 GB driver. tools/profile_queries.py builds its
     session here too, so profiler and bench timings are comparable."""
-    from pyspark.sql import SparkSession
+    from employee_data_management_system_data_engineering_solution_spark import get_session
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "8g")
-        # Arrow batch sizing (guide §4.2): the Python-boundary operators
-        # (Misra-Gries fold, simhash/phash signatures, media decode)
-        # stream ONE narrow column; 64k-row batches amortize the
-        # per-batch pandas/Arrow overhead ~6x over the 10k default with
-        # negligible per-task memory (a few MB). Results are
-        # batch-size-independent (MG candidates stay a superset and are
-        # exactly rescored; signatures are per-row pure functions).
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .getOrCreate()
+    spark = get_session(
+        app_name,
+        master=f"local[{cpus}]",
+        shuffle_partitions=int(cpus),
+        extra_conf={"spark.driver.memory": "8g"},
     )
     spark.sparkContext.setLogLevel("ERROR")
-    # TIMESTAMP(NANOS) parquet columns read as long, session-wide — set
-    # once at startup (not inside a warm closure) so every plan,
-    # including a bench run with warm-ups disabled, sees the same conf
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return spark
 
 if __name__ == "__main__":

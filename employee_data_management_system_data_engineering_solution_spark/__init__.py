@@ -11,7 +11,16 @@ Import shorthand used throughout the repo::
     import employee_data_management_system_data_engineering_solution_spark as eds
 """
 
-from .session import get_session
-
 __all__ = ["get_session"]
 __version__ = "0.1.0"
+
+
+def __getattr__(name: str):
+    # ``get_session`` loads on first use (PEP 562): importing the package
+    # must not import pyspark, because ``python -m <package>.worker_daemon``
+    # runs this file before the daemon has fixed the worker's sys.path
+    if name == "get_session":
+        from .session import get_session
+
+        return get_session
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

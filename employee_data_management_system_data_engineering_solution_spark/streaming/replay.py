@@ -97,16 +97,19 @@ def _write_sentinel_file(src: str, path: str, rows: Sequence[dict], ts_ns: int) 
     pq.write_table(table, path)
 
 
-#: (applicationId, path) → StructType. Every carrier needs the events
-#: schema to declare the file stream; the footer-probe job is identical
-#: across the 7 streaming carriers in one session, so cache it.
-_SCHEMA_CACHE: dict[tuple[str, str], object] = {}
+#: (applicationId, path, size, mtime_ns) → StructType. Every carrier
+#: needs the events schema to declare the file stream; the footer-probe
+#: job is identical across the 7 streaming carriers in one session, so
+#: cache it. The file's size and mtime keep a file rewritten at the same
+#: path from being served its old schema.
+_SCHEMA_CACHE: dict[tuple[str, str, int, int], object] = {}
 
 
 def events_schema(spark: SparkSession, src: str):
     """Schema of ``src`` under the session's active parquet confs,
-    cached per (session, path)."""
-    key = (spark.sparkContext.applicationId, src)
+    cached per (session, path, file version)."""
+    st = os.stat(src)
+    key = (spark.sparkContext.applicationId, src, st.st_size, st.st_mtime_ns)
     if key not in _SCHEMA_CACHE:
         _SCHEMA_CACHE[key] = spark.read.parquet(src).schema
     return _SCHEMA_CACHE[key]

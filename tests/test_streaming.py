@@ -712,6 +712,23 @@ def test_stream_confs_restore_prior_values(spark):
     assert spark.conf.get(_PROVIDER_CONF, None) is None
 
 
+def test_events_schema_sees_a_file_rewritten_at_the_same_path(spark, tmp_path):
+    """The schema cache keys on the file's size and mtime too, so a
+    parquet file rewritten in place within one session is re-read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from employee_data_management_system_data_engineering_solution_spark.streaming.replay import (
+        events_schema,
+    )
+
+    path = str(tmp_path / "events.parquet")
+    pq.write_table(pa.table({"event_id": [1, 2]}), path)
+    assert events_schema(spark, path).fieldNames() == ["event_id"]
+    pq.write_table(pa.table({"event_id": [1, 2], "extra": ["a", "b"]}), path)
+    assert events_schema(spark, path).fieldNames() == ["event_id", "extra"]
+
+
 def test_bucket_fold_matches_per_employee_processor():
     """The vectorized bucket fold against the per-employee reference
     (StrikeProcessor: pandas counts, one state per key) over random

@@ -124,20 +124,18 @@ def main() -> None:
         global TARGETS
         TARGETS = sys.argv[3:]
     sys.path.insert(0, str(ROOT))
-    from pyspark.sql import SparkSession
-
     from __spark_entry__ import queries
+    from employee_data_management_system_data_engineering_solution_spark import get_session
 
     # a realistic heap for a 10x local run: the default 1g driver heap
     # models nothing (a real executor gets GBs); 8g keeps 32 concurrent
     # tasks' transient array allocations out of GC death spirals while
     # still far below the machine's memory
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.driver.memory", "8g")
-        .appName("bench-scale")
-        .getOrCreate()
+    spark = get_session(
+        "bench-scale",
+        master="local[32]",
+        shuffle_partitions=64,
+        extra_conf={"spark.driver.memory": "8g"},
     )
     qs = queries()
     # warm-up: run every target once at the smoke sf so codegen JIT,

@@ -107,16 +107,15 @@ def replicate(spark: SparkSession, src: str, dest: str, copies: int) -> None:
 
 def main() -> None:
     src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    default_dest = pathlib.Path(__file__).resolve().parents[1] / ".scale_sf1"
-    dest = sys.argv[2] if len(sys.argv) > 2 else str(default_dest)
+    root = pathlib.Path(__file__).resolve().parents[1]
+    dest = sys.argv[2] if len(sys.argv) > 2 else str(root / ".scale_sf1")
     copies = int(sys.argv[3]) if len(sys.argv) > 3 else 10
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .appName("scale-replica")
-        .getOrCreate()
-    )
+    sys.path.insert(0, str(root))
+    from employee_data_management_system_data_engineering_solution_spark import get_session
+
+    # get_session reads TIMESTAMP(NANOS) columns as long
+    # (spark.sql.legacy.parquet.nanosAsLong)
+    spark = get_session("scale-replica", master="local[32]", shuffle_partitions=32)
     replicate(spark, src, dest, copies)
 
 

@@ -90,13 +90,9 @@ def main() -> None:
     build_nullrow_wh(src, dest)
     print(f"null-injected warehouse at {dest} (from {src})")
 
-    from pyspark.sql import SparkSession
+    from employee_data_management_system_data_engineering_solution_spark import get_session
 
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .getOrCreate()
-    )
+    spark = get_session("null-parity-probe", master="local[16]", shuffle_partitions=16)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{dest}/{t}.parquet'")

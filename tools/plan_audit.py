@@ -46,16 +46,15 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    from pyspark.sql import SparkSession
+    from employee_data_management_system_data_engineering_solution_spark import get_session
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("eds-plan-audit")
-        .config("spark.sql.shuffle.partitions", "8")
+    spark = get_session(
+        "eds-plan-audit",
+        master="local[8]",
+        shuffle_partitions=8,
         # static plans: with AQE on, executedPlan() is the pre-final
         # adaptive wrapper and hides codegen spans + final join picks
-        .config("spark.sql.adaptive.enabled", "false")
-        .getOrCreate()
+        extra_conf={"spark.sql.adaptive.enabled": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
 

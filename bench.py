@@ -85,6 +85,9 @@ def main() -> int:
     from employee_data_management_system_data_engineering_solution_spark.plans.memo import (
         clear_session_memos,
     )
+    from employee_data_management_system_data_engineering_solution_spark.sources.io import (
+        read_table,
+    )
 
     qs = queries()
 
@@ -96,11 +99,12 @@ def main() -> int:
     warm_sf = "/root/testdata/sf0.001"
 
     def _touch(table: str):
-        # full scan into the noop sink: warms the OS page cache and the
-        # parquet reader for the bench-sf file so first-scan I/O isn't
-        # billed to whichever timed query happens to read it first
+        # full scan into the noop sink: warms the OS page cache, the
+        # parquet reader and the table's schema memo for the bench-sf
+        # file so first-scan costs aren't billed to whichever timed
+        # query happens to read it first
         def go():
-            spark.read.parquet(f"{sf_dir}/{table}.parquet").write.format("noop").mode(
+            read_table(spark, sf_dir, table).write.format("noop").mode(
                 "overwrite"
             ).save()
 

@@ -1269,7 +1269,7 @@ def snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(base, ignore_errors=True)
     write_version(v1, base, 1)
 
-    stored_v1 = read_version(spark, base, 1)
+    stored_v1 = read_version(spark, base, 1, v1.schema)
     # keep_old=True so incoming rows carry each side's RAW values: the
     # diff's coalesced main columns would resurrect the OLD value for
     # an update whose new value is genuinely NULL — the same discipline
@@ -1287,10 +1287,11 @@ def snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     v2 = stored_v1.join(removed_keys, "o_orderkey", "left_anti").unionByName(incoming)
     write_version(v2, base, 2)
 
+    schemas = {1: v1.schema, 2: v2.schema}
     reports = []
     for v in list_versions(base):
         reports.append(
-            read_version(spark, base, v).agg(
+            read_version(spark, base, v, schemas[v]).agg(
                 F.lit(v).alias("version"),
                 F.count("*").alias("n_rows"),
                 F.round(F.sum("price"), 2).cast("double").alias("revenue"),
@@ -1992,19 +1993,14 @@ def snapshot_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     tag = os.path.basename(sf_dir.rstrip(os.sep)).replace(".", "_")
     base = os.path.join(tempfile.gettempdir(), f"eds_vacuum_{tag}")
     shutil.rmtree(base, ignore_errors=True)
+    snapshot = orders.select("o_orderkey", money("o_totalprice").alias("price"))
     for v in (1, 2, 3, 4):
-        write_version(
-            orders.filter(k % 4 < v).select(
-                "o_orderkey", money("o_totalprice").alias("price")
-            ),
-            base,
-            v,
-        )
+        write_version(snapshot.filter(k % 4 < v), base, v)
     removed = vacuum_versions(base, keep_last=2)
     if removed != [1, 2]:  # a real raise: asserts vanish under -O
         raise RuntimeError(f"vacuum removed {removed}, expected [1, 2]")
     reports = [
-        read_version(spark, base, v).agg(
+        read_version(spark, base, v, snapshot.schema).agg(
             F.lit(v).alias("version"),
             F.count("*").alias("n_rows"),
             F.round(F.sum("price"), 2).cast("double").alias("revenue"),

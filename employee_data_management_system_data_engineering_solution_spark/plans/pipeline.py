@@ -150,7 +150,7 @@ def daily_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_dir = os.path.join(base, "dim_out")
     write_parquet(merged.orderBy("emp_id", "start_date"), out_dir)
 
-    return spark.read.parquet(out_dir).select(
+    return spark.read.schema(merged.schema).parquet(out_dir).select(
         "emp_id",
         "period_id",
         F.col("start_date").cast("string").alias("start_date"),
@@ -200,12 +200,13 @@ def staging_promote_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim_path = os.path.join(base, "dim")
     stg_path = os.path.join(base, "staging")
 
-    write_parquet(_scd_shape(orders, "O"), dim_path, mode="overwrite")
-    write_parquet(_scd_shape(orders, "F"), stg_path, mode="overwrite")
-    promote_staging(spark, stg_path, dim_path)
+    dim, stg = _scd_shape(orders, "O"), _scd_shape(orders, "F")
+    write_parquet(dim, dim_path, mode="overwrite")
+    write_parquet(stg, stg_path, mode="overwrite")
+    promote_staging(spark, stg_path, dim_path, stg.schema)
 
-    staging_left = spark.read.parquet(stg_path).count()  # 0 after truncate
-    return spark.read.parquet(dim_path).select(
+    staging_left = spark.read.schema(stg.schema).parquet(stg_path).count()  # 0 after truncate
+    return spark.read.schema(dim.schema).parquet(dim_path).select(
         "emp_id",
         "period_id",
         F.col("start_date").cast("string").alias("start_date"),
@@ -589,7 +590,7 @@ def published_report_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pq_path, csv_path = os.path.join(base, "report_pq"), os.path.join(base, "report_csv")
     publish_report(report, parquet_path=pq_path, csv_path=csv_path)
-    pq = spark.read.parquet(pq_path)
+    pq = spark.read.schema(report.schema).parquet(pq_path)
     cs = read_csv(spark, csv_path, schema=T.StructType([
         T.StructField("designation", T.StringType()),
         T.StructField("active_count", T.LongType()),
@@ -631,6 +632,7 @@ def schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders.filter(cut).select("o_totalprice", "o_orderstatus").write.mode(
         "overwrite"
     ).parquet(os.path.join(base, "batch=new"))
+    # keeps inference: merging the two batches' footers is the feature
     evolved = spark.read.option("mergeSchema", "true").parquet(
         os.path.join(base, "batch=old"), os.path.join(base, "batch=new")
     )
@@ -1494,7 +1496,7 @@ def compact_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     frag, dest = os.path.join(base, "frag"), os.path.join(base, "compact")
     li.repartition(64).write.mode("overwrite").parquet(frag)
     n_files = compact_parquet(spark, frag, dest, target_files=4)
-    return spark.read.parquet(dest).agg(
+    return spark.read.schema(li.schema).parquet(dest).agg(
         F.lit(n_files).cast("long").alias("n_files"),
         F.count("*").alias("n_rows"),
         money_sum(money("l_extendedprice"), "total_price"),

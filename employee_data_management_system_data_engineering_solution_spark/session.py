@@ -23,9 +23,11 @@ call at 0.20-0.35 s per task; under the daemon, which imports the
 directory install of pyspark the driver uses, it takes 0.14 ms. On the
 ``strike_stream`` benchmark (perfbench, ``local[4]`` on 4 vCPUs, 10
 alternating before/after pairs) the median ``write_latency_p50_s`` fell
-from 1.51 s to 1.17 s. Workers must be able to import this package, as
-every engine operator that ships a package function to them already
-requires.
+from 1.51 s to 1.17 s. The daemon is a module of this package, so every
+Python worker must import the package: the directory that holds it goes
+on the workers' ``PYTHONPATH`` (``spark.executorEnv.PYTHONPATH``), ahead
+of any value the caller passes there, and workers import the same tree
+as the driver without an environment variable.
 """
 
 from __future__ import annotations
@@ -33,6 +35,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_WORKER_PATH_CONF = "spark.executorEnv.PYTHONPATH"
 
 
 def get_session(
@@ -75,7 +79,12 @@ def get_session(
         .config("spark.driver.memory", os.environ.get("EDS_DRIVER_MEMORY", "24g"))
         .config("spark.python.daemon.module", f"{__package__}.worker_daemon")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    conf[_WORKER_PATH_CONF] = os.pathsep.join(
+        p for p in (root, conf.get(_WORKER_PATH_CONF)) if p
+    )
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -97,24 +97,6 @@ def _write_sentinel_file(src: str, path: str, rows: Sequence[dict], ts_ns: int) 
     pq.write_table(table, path)
 
 
-#: (applicationId, path, size, mtime_ns) → StructType. Every carrier
-#: needs the events schema to declare the file stream; the footer-probe
-#: job is identical across the 7 streaming carriers in one session, so
-#: cache it. The file's size and mtime keep a file rewritten at the same
-#: path from being served its old schema.
-_SCHEMA_CACHE: dict[tuple[str, str, int, int], object] = {}
-
-
-def events_schema(spark: SparkSession, src: str):
-    """Schema of ``src`` under the session's active parquet confs,
-    cached per (session, path, file version)."""
-    st = os.stat(src)
-    key = (spark.sparkContext.applicationId, src, st.st_size, st.st_mtime_ns)
-    if key not in _SCHEMA_CACHE:
-        _SCHEMA_CACHE[key] = spark.read.parquet(src).schema
-    return _SCHEMA_CACHE[key]
-
-
 @contextmanager
 def replayed_events(
     spark: SparkSession,
@@ -154,7 +136,7 @@ def replayed_events(
     at-scale RocksDB store); ``None`` keeps the session default
     (HDFS-backed in-memory). Every conf is restored on exit
     (:func:`stream_confs`)."""
-    from ..sources.io import normalize_nanos
+    from ..sources.io import normalize_nanos, parquet_schema
 
     stage_dir = tempfile.mkdtemp(prefix="eds_stream_")
     queries = []
@@ -168,7 +150,7 @@ def replayed_events(
                 p = os.path.join(stage_dir, f"z_sentinel_{i}.parquet")
                 _write_sentinel_file(src, p, rows, _SENTINEL_BASE_NS + i * _SENTINEL_STEP_NS)
                 os.utime(p, (base_mtime + 60 * (i + 1), base_mtime + 60 * (i + 1)))
-            reader = spark.readStream.schema(events_schema(spark, src))
+            reader = spark.readStream.schema(parquet_schema(spark, src))
             if max_files_per_trigger is not None:
                 reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
             stream = reader.parquet(stage_dir)

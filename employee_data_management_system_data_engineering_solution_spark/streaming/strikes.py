@@ -125,6 +125,21 @@ _OUTPUT_SCHEMA = StructType(
         StructField("month", StringType()),
     ]
 )
+#: What a durable pass's ``foreachBatch`` sink writes: the carrier's
+#: output plus the batch id. The read-backs declare these schemas, so
+#: they run no schema job and an output dir with no files yet reads as
+#: an empty frame.
+_BATCH_ID = StructField("__batch_id", IntegerType())
+_STRIKE_SINK_SCHEMA = StructType([*_OUTPUT_SCHEMA.fields, _BATCH_ID])
+_WINDOWED_SINK_SCHEMA = StructType(
+    [
+        StructField("window_start", StringType()),
+        StructField("window_end", StringType()),
+        StructField("emp_id", LongType()),
+        StructField("n_flagged", LongType()),
+        _BATCH_ID,
+    ]
+)
 
 
 def _coerce_state(raw) -> tuple[int, str, int]:
@@ -865,15 +880,15 @@ def _run_checkpointed_pass(
     import glob as _glob
     import os as _os
 
-    from ..sources.io import normalize_nanos
-    from .replay import events_schema, stream_confs
+    from ..sources.io import normalize_nanos, parquet_schema
+    from .replay import stream_confs
 
     with stream_confs(spark, state_partitions, state_store_provider):
         staged = sorted(_glob.glob(_os.path.join(stage_dir, "*.parquet")))
         if not staged:
             raise ValueError(f"no parquet files staged in {stage_dir}")
         stream = normalize_nanos(
-            spark.readStream.schema(events_schema(spark, staged[0]))
+            spark.readStream.schema(parquet_schema(spark, staged[0]))
             .option("maxFilesPerTrigger", 1)
             .parquet(stage_dir)
         )
@@ -952,7 +967,7 @@ def strike_final_state(spark: SparkSession, out_dir: str) -> DataFrame:
     directory: at most one emission per key per batch, newest batch
     wins."""
     return _latest_per_key(
-        spark.read.parquet(out_dir),
+        spark.read.schema(_STRIKE_SINK_SCHEMA).parquet(out_dir),
         ["emp_id"],
         ["emp_id", "strike_count", "status"],
     )
@@ -1007,7 +1022,7 @@ def windowed_final_counts(spark: SparkSession, out_dir: str) -> DataFrame:
     :func:`run_windowed_pass` output directory — newest batch wins, the
     update-mode mirror of :func:`strike_final_state`."""
     return _latest_per_key(
-        spark.read.parquet(out_dir),
+        spark.read.schema(_WINDOWED_SINK_SCHEMA).parquet(out_dir),
         ["window_start", "emp_id"],
         ["window_start", "window_end", "emp_id", "n_flagged"],
     )

@@ -28,6 +28,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.io import parquet_schema, read_parquet
+
 
 def _stage_batches(spark: SparkSession, sf_dir: str, stage_dir: str, n_batches: int) -> None:
     """Split events into n deterministic single-file micro-batches in
@@ -37,7 +39,7 @@ def _stage_batches(spark: SparkSession, sf_dir: str, stage_dir: str, n_batches: 
     one task, so each partition directory holds exactly one file."""
     part_root = os.path.join(stage_dir, "__parts")
     (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
+        read_parquet(spark, f"{sf_dir}/events.parquet")
         # pmod + coalesce: a NULL event_id lands in batch 0 and a
         # negative one in [0, n) — a plain % would route both to
         # partition dirs (__HIVE_DEFAULT_PARTITION__ / __b=-1) the
@@ -82,14 +84,15 @@ def run_upsert_stream(spark: SparkSession, sf_dir: str, n_batches: int = 2) -> D
 
     _stage_batches(spark, sf_dir, stage_dir, n_batches)
 
-    from .replay import events_schema
-
-    schema = events_schema(spark, f"{sf_dir}/events.parquet")
+    schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     stream = (
         spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(stage_dir)
     )
+    # the schema of the dim as last written: its read-backs declare it
+    dim_schema = None
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
+        nonlocal dim_schema
         # exact decimal partials: the cross-batch re-adds would
         # otherwise accumulate order-dependent double error (see
         # functions/money.py)
@@ -100,7 +103,7 @@ def run_upsert_stream(spark: SparkSession, sf_dir: str, n_batches: int = 2) -> D
             F.sum(money("value")).alias("sum_value"),
         )
         if os.path.isdir(dim_dir):
-            cur = spark.read.parquet(dim_dir)
+            cur = read_parquet(spark, dim_dir, dim_schema)
             merged = (
                 cur.alias("c")
                 .join(agg.alias("a"), "user_id", "full_outer")
@@ -122,6 +125,7 @@ def run_upsert_stream(spark: SparkSession, sf_dir: str, n_batches: int = 2) -> D
         merged.write.mode("overwrite").parquet(nxt)
         shutil.rmtree(dim_dir, ignore_errors=True)
         os.replace(nxt, dim_dir)
+        dim_schema = merged.schema
 
     q = (
         stream.writeStream.foreachBatch(merge_batch)
@@ -140,7 +144,7 @@ def run_upsert_stream(spark: SparkSession, sf_dir: str, n_batches: int = 2) -> D
             [], "user_id LONG, n_events LONG, total_value DOUBLE"
         )
 
-    out = spark.read.parquet(dim_dir).select(
+    out = read_parquet(spark, dim_dir, dim_schema).select(
         "user_id",
         "n_events",
         F.round("sum_value", 2).cast("double").alias("total_value"),

@@ -333,3 +333,102 @@ def test_arrow_batch_defaults_fills_unset_and_keeps_explicit(spark):
             spark.conf.unset(_ARROW_BATCH_CONF)
         else:
             spark.conf.set(_ARROW_BATCH_CONF, prior)
+
+
+def _jobs_launched(spark, fn) -> int:
+    """Spark jobs ``fn()`` launches. Jobs are counted by job group, after
+    a marker job in a second group shows up in the status tracker: the
+    tracker is fed asynchronously, in launch order."""
+    import uuid
+
+    sc, tracker = spark.sparkContext, spark.sparkContext.statusTracker()
+    group, marker = f"count-{uuid.uuid4().hex}", f"marker-{uuid.uuid4().hex}"
+    try:
+        sc.setJobGroup(group, "counted")
+        fn()
+        sc.setJobGroup(marker, "marker")
+        sc.parallelize([0], 1).count()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    for _ in range(200):
+        if tracker.getJobIdsForGroup(marker):
+            break
+        time.sleep(0.05)
+    return len(tracker.getJobIdsForGroup(group))
+
+
+def _write_orders(sf_dir, rows) -> None:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(sf_dir, exist_ok=True)
+    keys, prices = zip(*rows)
+    pq.write_table(
+        pa.table({"o_orderkey": list(keys), "o_totalprice": list(prices)}),
+        os.path.join(sf_dir, "orders.parquet"),
+    )
+
+
+def test_second_read_table_launches_no_schema_job(spark, tmp_path):
+    """The first read of a table version infers its schema (one job);
+    the second takes it from the memo and launches none."""
+    sf = str(tmp_path / "sf")
+    _write_orders(sf, [(1, 1.5), (2, 2.5)])
+    assert _jobs_launched(spark, lambda: read_table(spark, sf, "orders")) == 1
+    assert _jobs_launched(spark, lambda: read_table(spark, sf, "orders")) == 0
+    assert sorted(r.o_orderkey for r in read_table(spark, sf, "orders").collect()) == [1, 2]
+
+
+def test_parquet_schema_keys_on_schema_confs(spark, tmp_path):
+    """``binaryAsString`` changes the inferred schema of the same file,
+    so the memo must not serve one conf's schema to the other."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from employee_data_management_system_data_engineering_solution_spark.sources.io import (
+        parquet_schema,
+    )
+
+    path = str(tmp_path / "bin.parquet")
+    pq.write_table(pa.table({"b": pa.array([b"x", b"y"], pa.binary())}), path)
+    conf = "spark.sql.parquet.binaryAsString"
+    prior = spark.conf.get(conf, None)
+    try:
+        spark.conf.set(conf, "false")
+        assert parquet_schema(spark, path)["b"].dataType == T.BinaryType()
+        spark.conf.set(conf, "true")
+        assert parquet_schema(spark, path)["b"].dataType == T.StringType()
+        spark.conf.set(conf, "false")
+        assert parquet_schema(spark, path)["b"].dataType == T.BinaryType()
+    finally:
+        if prior is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, prior)
+
+
+def test_money_native_table_sees_a_rewritten_table(spark, tmp_path, monkeypatch):
+    """A fixture table rewritten within one process gets a fresh
+    decimal copy, not the copy of its old rows."""
+    import tempfile
+
+    from employee_data_management_system_data_engineering_solution_spark.sources.io import (
+        money_native_table,
+    )
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    sf = str(tmp_path / "sf")
+    _write_orders(sf, [(1, 1.25), (2, 2.5), (3, 3.75)])
+    first = money_native_table(spark, sf, "orders")
+    assert sorted(r.o_orderkey for r in first.collect()) == [1, 2, 3]
+    _write_orders(sf, [(7, 7.25), (8, 8.5), (9, 9.75)])
+    got = money_native_table(spark, sf, "orders")
+    assert dict(got.dtypes)["o_totalprice"] == "decimal(12,2)"
+    assert sorted((r.o_orderkey, str(r.o_totalprice)) for r in got.collect()) == [
+        (7, "7.25"),
+        (8, "8.50"),
+        (9, "9.75"),
+    ]
+    # the old copy's files are untouched, so a frame still reading it works
+    assert sorted(r.o_orderkey for r in first.collect()) == [1, 2, 3]

@@ -17,6 +17,8 @@ from employee_data_management_system_data_engineering_solution_spark.streaming.s
     STATE_BUCKETS,
     STRIKE_LIMIT,
     StrikeProcessor,
+    _STRIKE_SINK_SCHEMA,
+    _WINDOWED_SINK_SCHEMA,
     _coerce_state,
     _strike_state_fn,
     flag_messages,
@@ -263,6 +265,8 @@ def test_strike_pass_checkpoint_recovery(spark, tmp_path):
     # sink-level recovery proof: the restarted pass appended exactly one
     # new batch, containing only the keys present in the new file
     batches = spark.read.parquet(out)
+    # the schema strike_final_state declares is what the sink writes
+    assert batches.schema == _STRIKE_SINK_SCHEMA
     ids = sorted(r["__batch_id"] for r in batches.select("__batch_id").distinct().collect())
     assert ids == [0, 1]
     phase2_keys = {
@@ -471,6 +475,8 @@ def test_windowed_pass_checkpoint_recovery(spark, tmp_path):
     # batch, so ids need not be consecutive) re-emitted only the
     # windows the new file touched (emp 1 and 3, not emp 2)
     batches = spark.read.parquet(out)
+    # the schema windowed_final_counts declares is what the sink writes
+    assert batches.schema == _WINDOWED_SINK_SCHEMA
     last = batches.agg(F.max("__batch_id")).collect()[0][0]
     phase2 = {r.emp_id for r in batches.filter(F.col("__batch_id") == last).collect()}
     assert phase2 == {1, 3}
@@ -713,20 +719,34 @@ def test_stream_confs_restore_prior_values(spark):
 
 
 def test_events_schema_sees_a_file_rewritten_at_the_same_path(spark, tmp_path):
-    """The schema cache keys on the file's size and mtime too, so a
-    parquet file rewritten in place within one session is re-read."""
+    """The stream readers take the events schema from the
+    ``parquet_schema`` memo, which keys on every data file's size and
+    mtime too, so a file rewritten in place within one session is
+    re-read."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from employee_data_management_system_data_engineering_solution_spark.streaming.replay import (
-        events_schema,
+    from employee_data_management_system_data_engineering_solution_spark.sources.io import (
+        parquet_schema,
     )
 
     path = str(tmp_path / "events.parquet")
     pq.write_table(pa.table({"event_id": [1, 2]}), path)
-    assert events_schema(spark, path).fieldNames() == ["event_id"]
+    assert parquet_schema(spark, path).fieldNames() == ["event_id"]
     pq.write_table(pa.table({"event_id": [1, 2], "extra": ["a", "b"]}), path)
-    assert events_schema(spark, path).fieldNames() == ["event_id", "extra"]
+    assert parquet_schema(spark, path).fieldNames() == ["event_id", "extra"]
+
+
+def test_strike_final_state_of_an_empty_output_dir_is_empty(spark, tmp_path):
+    """The read-back declares the sink schema, so an output dir that no
+    batch has written to yet reads as an empty frame."""
+    from employee_data_management_system_data_engineering_solution_spark.streaming.strikes import (
+        strike_final_state,
+    )
+
+    got = strike_final_state(spark, str(tmp_path))
+    assert got.columns == ["emp_id", "strike_count", "status"]
+    assert got.collect() == []
 
 
 def test_bucket_fold_matches_per_employee_processor():

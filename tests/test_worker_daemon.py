@@ -118,3 +118,36 @@ def test_get_session_workers_import_pyspark_outside_archives():
         assert ".zip" not in file and ".jar" not in file, file
         spark_zips = [z for z in zips if "pyspark.zip" in z or "py4j-" in z or ".jar" in z]
         assert not spark_zips, spark_zips
+
+
+def test_get_session_workers_import_the_package_without_pythonpath(tmp_path):
+    """A driver that finds the package only through its own
+    ``sys.path`` (no ``PYTHONPATH``, run from outside the checkout) can
+    still run Python worker jobs: ``get_session`` puts the package root
+    on the workers' path."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    code = f"""
+        import sys
+        sys.path.insert(0, {str(ROOT)!r})
+        from {PKG} import get_session
+
+        spark = get_session(
+            "worker-path-probe",
+            master="local[1]",
+            shuffle_partitions=1,
+            extra_conf={{"spark.driver.memory": "1g"}},
+        )
+        n = spark.range(3).mapInPandas(lambda it: it, "id long").count()
+        spark.stop()
+        print(n)
+        """
+    proc = subprocess.run(
+        [sys.executable, "-c", textwrap.dedent(code)],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert proc.stdout.strip().splitlines()[-1] == "3"

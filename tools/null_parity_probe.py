@@ -14,7 +14,9 @@ Usage: python tools/null_parity_probe.py [src_sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import pathlib
+import shutil
 import sys
 import tempfile
 
@@ -85,10 +87,25 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
 
 def main() -> None:
     src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    only = set(sys.argv[2:])
-    dest = tempfile.mkdtemp(prefix="nullrow_wh_")
+    work = tempfile.mkdtemp(prefix="nullrow_wh_")
+    dest, tmp = os.path.join(work, "wh"), os.path.join(work, "tmp")
+    os.makedirs(dest)
+    os.makedirs(tmp)
+    # the plans put their work dirs under the temp dir, named after the
+    # warehouse; keep them inside ``work`` so they go with it
+    tempfile.tempdir = tmp
+    try:
+        probe(src, dest, set(sys.argv[2:]))
+    finally:
+        tempfile.tempdir = None
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def probe(src: str, dest: str, only: set[str]) -> None:
+    """Build the NULL-injected copy of ``src`` in ``dest`` and report
+    every query (or only those in ``only``) on both engines."""
     build_nullrow_wh(src, dest)
-    print(f"null-injected warehouse at {dest} (from {src})")
+    print(f"null-injected warehouse at {dest} (from {src}; removed on exit)")
 
     from employee_data_management_system_data_engineering_solution_spark import get_session
 

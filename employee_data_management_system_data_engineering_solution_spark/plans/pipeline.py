@@ -1224,6 +1224,42 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the real execution paths with full hash oracles.
 # --------------------------------------------------------------------------
 _TS_CUT = "2024-01-16"  # mid-range of the generated events (all of Jan 2024)
+_CKPT_PREFIX = "eds_ckpt_"
+_ckpt_dirs_removed_at_exit: set[str] = set()
+
+
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        return True  # another user's process
+    return True
+
+
+def _restart_work_dir(kind: str, sf_dir: str) -> str:
+    """Per-process work dir of a checkpoint-restart carrier:
+    ``<tmp>/eds_ckpt_<kind>_<sf tag>_<pid>``. One per PID, so a
+    concurrent pytest + check_oracle run never shares a checkpoint
+    (offset-log/state collisions fail both). The returned frame reads
+    the dir's ``out`` lazily, so the dir lives until the process exits
+    and is removed then; the dirs of processes that died without
+    running exit handlers are removed on the next call."""
+    import atexit
+    import shutil
+
+    tmp = tempfile.gettempdir()
+    for name in os.listdir(tmp):
+        pid = name.rsplit("_", 1)[-1]
+        if name.startswith(_CKPT_PREFIX) and pid.isdigit() and not _pid_alive(int(pid)):
+            shutil.rmtree(os.path.join(tmp, name), ignore_errors=True)
+    tag = os.path.basename(sf_dir.rstrip(os.sep)).replace(".", "_")
+    base = os.path.join(tmp, f"{_CKPT_PREFIX}{kind}_{tag}_{os.getpid()}")
+    if base not in _ckpt_dirs_removed_at_exit:
+        _ckpt_dirs_removed_at_exit.add(base)
+        atexit.register(shutil.rmtree, base, True)
+    return base
 
 
 def _stage_split_events(spark: SparkSession, sf_dir: str, base: str) -> str:
@@ -1281,10 +1317,7 @@ def checkpoint_restart_strikes(spark: SparkSession, sf_dir: str) -> DataFrame:
     processed ONLY the not-yet-committed file."""
     from ..streaming.strikes import run_strike_pass, strike_final_state
 
-    tag = os.path.basename(sf_dir.rstrip(os.sep)).replace(".", "_")
-    # per-PID dir: a concurrent pytest + check_oracle run must not
-    # share one checkpoint (offset-log/state collisions fail both)
-    base = os.path.join(tempfile.gettempdir(), f"eds_ckpt_strike_{tag}_{os.getpid()}")
+    base = _restart_work_dir("strike", sf_dir)
     stage = _stage_split_events(spark, sf_dir, base)
     ckpt, out = os.path.join(base, "ckpt"), os.path.join(base, "out")
 
@@ -1312,10 +1345,7 @@ def checkpoint_restart_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     recovery proof, sibling of ``checkpoint_restart_strikes``."""
     from ..streaming.strikes import run_windowed_pass, windowed_final_counts
 
-    tag = os.path.basename(sf_dir.rstrip(os.sep)).replace(".", "_")
-    # per-PID dir: a concurrent pytest + check_oracle run must not
-    # share one checkpoint (offset-log/state collisions fail both)
-    base = os.path.join(tempfile.gettempdir(), f"eds_ckpt_window_{tag}_{os.getpid()}")
+    base = _restart_work_dir("window", sf_dir)
     stage = _stage_split_events(spark, sf_dir, base)
     ckpt, out = os.path.join(base, "ckpt"), os.path.join(base, "out")
 

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.io import parquet_schema, read_parquet
+from .replay import stream_confs
 
 
 def _stage_batches(spark: SparkSession, sf_dir: str, stage_dir: str, n_batches: int) -> None:
@@ -127,14 +128,16 @@ def run_upsert_stream(spark: SparkSession, sf_dir: str, n_batches: int = 2) -> D
         os.replace(nxt, dim_dir)
         dim_schema = merged.schema
 
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    q.stop()
+    # no state: the merge keeps the session's shuffle partitions
+    with stream_confs(spark, None):
+        q = (
+            stream.writeStream.foreachBatch(merge_batch)
+            .option("checkpointLocation", os.path.join(root, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        q.stop()
 
     if not os.path.isdir(dim_dir):
         # empty replay: no batch ever fired, so no dim was written —

@@ -138,3 +138,48 @@ def test_streaming_upsert_matches_batch_aggregate(spark):
         .collect()
     }
     assert got == want
+
+
+def test_restart_work_dirs_are_removed_when_their_process_is_gone(tmp_path, monkeypatch):
+    """The checkpoint-restart carriers' per-PID work dirs do not pile up
+    in the temp dir: a process removes its own at exit, and the dirs of
+    processes that died without exit handlers go on the next call."""
+    import os
+    import subprocess
+    import sys
+    import tempfile
+    from pathlib import Path
+
+    from employee_data_management_system_data_engineering_solution_spark.plans.pipeline import (
+        _restart_work_dir,
+    )
+
+    gone = subprocess.Popen([sys.executable, "-c", "pass"])
+    gone.wait()
+    dead = tmp_path / f"eds_ckpt_strike_sf0_001_{gone.pid}"
+    live = tmp_path / f"eds_ckpt_window_sf0_001_{os.getppid()}"
+    other = tmp_path / "eds_ckpt_notes"
+    for d in (dead, live, other):
+        (d / "ckpt").mkdir(parents=True)
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    base = _restart_work_dir("strike", "/data/sf0.001/")
+    assert base == str(tmp_path / f"eds_ckpt_strike_sf0_001_{os.getpid()}")
+    assert not dead.exists() and live.exists() and other.exists()
+
+    root = Path(__file__).resolve().parents[1]
+    code = (
+        "import os\n"
+        "from employee_data_management_system_data_engineering_solution_spark.plans.pipeline "
+        "import _restart_work_dir\n"
+        "d = _restart_work_dir('window', 'sf0.01')\n"
+        "os.makedirs(os.path.join(d, 'out'))\n"
+        "print(d)\n"
+    )
+    env = dict(os.environ, TMPDIR=str(tmp_path), PYTHONPATH=str(root))
+    proc = subprocess.run(
+        [sys.executable, "-c", code], env=env, capture_output=True, text=True, timeout=120
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    made = proc.stdout.strip().splitlines()[-1]
+    assert made.startswith(str(tmp_path)) and not os.path.exists(made)

@@ -704,18 +704,23 @@ def test_stream_confs_restore_prior_values(spark):
     """Every conf a stream run pins is put back on exit: prior values
     restored, previously-unset keys unset again."""
     from employee_data_management_system_data_engineering_solution_spark.streaming.replay import (
+        FILESYSTEM_CHECKPOINT_MANAGER,
         ROCKSDB_PROVIDER,
+        _CHECKPOINT_MANAGER_CONF,
         _PROVIDER_CONF,
         stream_confs,
     )
 
     parts = spark.conf.get("spark.sql.shuffle.partitions")
     assert spark.conf.get(_PROVIDER_CONF, None) is None
+    assert spark.conf.get(_CHECKPOINT_MANAGER_CONF, None) is None
     with stream_confs(spark, 3, ROCKSDB_PROVIDER):
         assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
         assert spark.conf.get(_PROVIDER_CONF) == ROCKSDB_PROVIDER
+        assert spark.conf.get(_CHECKPOINT_MANAGER_CONF) == FILESYSTEM_CHECKPOINT_MANAGER
     assert spark.conf.get("spark.sql.shuffle.partitions") == parts
     assert spark.conf.get(_PROVIDER_CONF, None) is None
+    assert spark.conf.get(_CHECKPOINT_MANAGER_CONF, None) is None
 
 
 def test_events_schema_sees_a_file_rewritten_at_the_same_path(spark, tmp_path):

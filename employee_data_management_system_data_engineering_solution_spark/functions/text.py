@@ -97,26 +97,6 @@ def minhash_signature(text: Column, n_hashes: int = 8) -> list[Column]:
 MINHASH_PRIME = 2_147_483_647  # 2^31 - 1; (a + 7b) % P stays far below 2^63
 
 
-def char_ngrams(text: Column, n: int = 5) -> Column:
-    """Distinct character n-grams via sequence+transform (JVM-side;
-    no UDF).
-
-    PERF HAZARD: the normalize regex sits inside the ``transform``
-    lambda, and lambda bodies are excluded from codegen subexpression
-    elimination — it re-runs per element. Hot paths should use
-    ``operators.dedup.with_char_ngrams`` / ``char_ngram_rows``, which
-    materialize the normalized text in a separate projection first
-    (measured 8× faster at sf0.1). Kept for one-off expression use.
-    """
-    t = normalized(text)
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(F.length(t) - n, F.lit(0))),
-            lambda i: t.substr(i + 1, F.lit(n)),
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # PII scrubbing (training-data curation: redact before training)
 # ---------------------------------------------------------------------------

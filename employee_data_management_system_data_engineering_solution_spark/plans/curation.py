@@ -1238,13 +1238,11 @@ def snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     an as-of read is a path choice with zero overhead on current reads;
     the CDC apply is one anti-join + one union, shuffled on the
     natural key; nothing rewrites more than the changed snapshot."""
-    import os
     import shutil
-    import tempfile
 
     from ..functions.money import money
     from ..operators.cdc import CHANGE_COL
-    from ..sources.io import list_versions, read_version, write_version
+    from ..sources.io import list_versions, read_version, scratch_dir, write_version
 
     orders = read_table(spark, sf_dir, "orders")
     k = F.col("o_orderkey")
@@ -1264,8 +1262,7 @@ def snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("price"),
     )
 
-    tag = os.path.basename(sf_dir.rstrip(os.sep)).replace(".", "_")
-    base = os.path.join(tempfile.gettempdir(), f"eds_timetravel_{tag}")
+    base = scratch_dir("timetravel", sf_dir)
     shutil.rmtree(base, ignore_errors=True)
     write_version(v1, base, 1)
 
@@ -1981,17 +1978,20 @@ def snapshot_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     removed a survivor, spared a victim, or tore a surviving
     directory's data diverges. Pure metadata work; no table data is
     read to decide victims."""
-    import os
     import shutil
-    import tempfile
 
     from ..functions.money import money
-    from ..sources.io import list_versions, read_version, vacuum_versions, write_version
+    from ..sources.io import (
+        list_versions,
+        read_version,
+        scratch_dir,
+        vacuum_versions,
+        write_version,
+    )
 
     orders = read_table(spark, sf_dir, "orders")
     k = F.col("o_orderkey")
-    tag = os.path.basename(sf_dir.rstrip(os.sep)).replace(".", "_")
-    base = os.path.join(tempfile.gettempdir(), f"eds_vacuum_{tag}")
+    base = scratch_dir("vacuum", sf_dir)
     shutil.rmtree(base, ignore_errors=True)
     snapshot = orders.select("o_orderkey", money("o_totalprice").alias("price"))
     for v in (1, 2, 3, 4):

@@ -22,7 +22,6 @@ carrier, driven through real Structured Streaming.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,6 +35,7 @@ from ..sources.io import (
     latest_file,
     read_csv,
     read_table,
+    scratch_dir,
     write_csv,
     write_parquet,
 )
@@ -117,13 +117,11 @@ def daily_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage CSV drop → newest-file gate → schema'd CSV read → W1 dedup →
     SCD-2 close-out → ordered parquet dim write → read-back.
 
-    Deterministic paths under the system temp dir, overwrite mode — a
-    rerun replaces, never accumulates.
+    Fixed paths under the process's ``scratch_dir``, overwrite mode —
+    a rerun replaces, never accumulates.
     """
     orders = read_table(spark, sf_dir, "orders")
-    base = os.path.join(
-        tempfile.gettempdir(), f"eds_pipeline_{os.path.basename(sf_dir.rstrip(os.sep))}"
-    )
+    base = scratch_dir("pipeline", sf_dir)
     in_dir = os.path.join(base, "incoming")
 
     # simulate the S3 drop zone: an older decoy batch plus the real
@@ -195,8 +193,7 @@ def staging_promote_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.io import promote_staging
 
     orders = read_table(spark, sf_dir, "orders")
-    tag = os.path.basename(sf_dir.rstrip(os.sep)).replace(".", "_")
-    base = os.path.join(tempfile.gettempdir(), f"eds_promote_{tag}")
+    base = scratch_dir("promote", sf_dir)
     dim_path = os.path.join(base, "dim")
     stg_path = os.path.join(base, "staging")
 
@@ -361,9 +358,7 @@ def partition_pruned_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_extendedprice"
     )
-    base = os.path.join(
-        tempfile.gettempdir(), f"eds_part_{os.path.basename(sf_dir.rstrip(os.sep))}"
-    )
+    base = scratch_dir("part", sf_dir)
     write_parquet(li, base, partition_by=["l_returnflag"])
     return (
         # explicit schema: skips footer-sampling inference on read-back
@@ -472,9 +467,9 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     once at write time, never again at read time. The ``merge`` hint
     pins SMJ so the demo isn't silently converted to broadcast on the
     small test dim."""
-    tag = os.path.basename(sf_dir.rstrip(os.sep)).replace(".", "_")
-    base = os.path.join(tempfile.gettempdir(), f"eds_bucketed_{tag}")
-    t_orders, t_cust = f"eds_b_orders_{tag}", f"eds_b_customer_{tag}"
+    base = scratch_dir("bucketed", sf_dir)
+    tag = os.path.basename(base)
+    t_orders, t_cust = f"eds_{tag}_orders", f"eds_{tag}_customer"
 
     orders = read_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_totalprice", "o_orderstatus"
@@ -580,8 +575,7 @@ def published_report_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     checks the values themselves."""
     from ..sources.io import publish_report, read_csv
 
-    tag = os.path.basename(sf_dir.rstrip(os.sep)).replace(".", "_")
-    base = os.path.join(tempfile.gettempdir(), f"eds_publish_{tag}")
+    base = scratch_dir("publish", sf_dir)
     report = (
         read_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus") == "O")
@@ -622,8 +616,7 @@ def schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata pass — at 100 TB pin the unified schema in a catalog and
     skip per-read merging; the read-side semantics stay exactly
     these."""
-    tag = os.path.basename(sf_dir.rstrip(os.sep)).replace(".", "_")
-    base = os.path.join(tempfile.gettempdir(), f"eds_evolve_{tag}")
+    base = scratch_dir("evolve", sf_dir)
     orders = read_table(spark, sf_dir, "orders")
     cut = F.col("o_orderdate").cast("date") >= F.to_date(F.lit("1997-01-01"))
     orders.filter(~cut).select("o_totalprice").write.mode("overwrite").parquet(
@@ -687,8 +680,7 @@ def json_lines_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     original table, so a lossy round-trip (type drift, dropped rows)
     breaks the hash. Covers the JSON source format alongside
     parquet/CSV (SURVEY §2.1 breadth)."""
-    tag = os.path.basename(sf_dir.rstrip(os.sep)).replace(".", "_")
-    path = os.path.join(tempfile.gettempdir(), f"eds_jsonl_{tag}")
+    path = scratch_dir("jsonl", sf_dir)
     slim = (
         read_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus") == "F")
@@ -725,8 +717,7 @@ def orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     same predicate-pushdown/column-pruning story): write the filtered
     lineitem slice as ORC, read it back, aggregate; oracle runs on the
     original table so any round-trip loss breaks the hash."""
-    tag = os.path.basename(sf_dir.rstrip(os.sep)).replace(".", "_")
-    path = os.path.join(tempfile.gettempdir(), f"eds_orc_{tag}")
+    path = scratch_dir("orc", sf_dir)
     slim = (
         read_table(spark, sf_dir, "lineitem")
         .filter(F.col("l_shipdate") >= F.to_date(F.lit("1997-01-01")))
@@ -1224,51 +1215,15 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the real execution paths with full hash oracles.
 # --------------------------------------------------------------------------
 _TS_CUT = "2024-01-16"  # mid-range of the generated events (all of Jan 2024)
-_CKPT_PREFIX = "eds_ckpt_"
-_ckpt_dirs_removed_at_exit: set[str] = set()
 
 
-def _pid_alive(pid: int) -> bool:
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        return True  # another user's process
-    return True
+def _split_at_cut(df: DataFrame, ts_col: str, early: str, late: str) -> None:
+    """Write ``df`` as TWO single-file, time-ordered parquet halves:
+    rows before ``_TS_CUT`` to the file ``early``, the rest to
+    ``late``. The parent dirs need not exist.
 
-
-def _restart_work_dir(kind: str, sf_dir: str) -> str:
-    """Per-process work dir of a checkpoint-restart carrier:
-    ``<tmp>/eds_ckpt_<kind>_<sf tag>_<pid>``. One per PID, so a
-    concurrent pytest + check_oracle run never shares a checkpoint
-    (offset-log/state collisions fail both). The returned frame reads
-    the dir's ``out`` lazily, so the dir lives until the process exits
-    and is removed then; the dirs of processes that died without
-    running exit handlers are removed on the next call."""
-    import atexit
-    import shutil
-
-    tmp = tempfile.gettempdir()
-    for name in os.listdir(tmp):
-        pid = name.rsplit("_", 1)[-1]
-        if name.startswith(_CKPT_PREFIX) and pid.isdigit() and not _pid_alive(int(pid)):
-            shutil.rmtree(os.path.join(tmp, name), ignore_errors=True)
-    tag = os.path.basename(sf_dir.rstrip(os.sep)).replace(".", "_")
-    base = os.path.join(tmp, f"{_CKPT_PREFIX}{kind}_{tag}_{os.getpid()}")
-    if base not in _ckpt_dirs_removed_at_exit:
-        _ckpt_dirs_removed_at_exit.add(base)
-        atexit.register(shutil.rmtree, base, True)
-    return base
-
-
-def _stage_split_events(spark: SparkSession, sf_dir: str, base: str) -> str:
-    """Stage the events table as TWO single-file, ts-ordered halves for
-    the two-phase checkpoint-restart carriers, in a freshly wiped work
-    dir (stale checkpoints/offset logs would make a rerun a no-op).
-
-    The split is on event time so the concatenation of phase-1 and
-    phase-2 files preserves global time order — the invariant the
+    The split is on event time so the concatenation of the early and
+    late files preserves global time order — the invariant the
     monthly-cooldown fold and the watermarked windows rely on: no event
     in the second file predates the watermark the first pass left
     behind. Single file per half ⇒ with ``maxFilesPerTrigger=1`` each
@@ -1277,24 +1232,35 @@ def _stage_split_events(spark: SparkSession, sf_dir: str, base: str) -> str:
     import glob
     import shutil
 
-    shutil.rmtree(base, ignore_errors=True)
-    stage = os.path.join(base, "stage")
-    os.makedirs(stage)
-    ev = read_table(spark, sf_dir, "events")
-    work = os.path.join(base, "__writer")
-    for name, half in (
-        # NULL-ts rows ride the EARLY half: `ts < cut` and `ts >= cut`
+    t = F.col(ts_col)
+    work = os.path.join(os.path.dirname(early), "_writer")
+    for path, half in (
+        # NULL-time rows ride the EARLY half: `t < cut` and `t >= cut`
         # are both false for NULL, so without the isNull arm a
         # malformed row would fall into NEITHER file — silent row loss
         # in the staging split (the r12 event_id%n lesson again)
-        ("a_early", ev.filter((F.col("ts") < _TS_CUT) | F.col("ts").isNull())),
-        ("b_late", ev.filter(F.col("ts") >= _TS_CUT)),
+        (early, df.filter((t < _TS_CUT) | t.isNull())),
+        (late, df.filter(t >= _TS_CUT)),
     ):
         half.coalesce(1).write.mode("overwrite").parquet(work)
-        part = glob.glob(os.path.join(work, "part-*.parquet"))[0]
-        shutil.move(part, os.path.join(stage, f"{name}.parquet"))
+        shutil.move(glob.glob(os.path.join(work, "part-*.parquet"))[0], path)
     shutil.rmtree(work)
-    return stage
+
+
+def _restart_stage(spark: SparkSession, sf_dir: str, kind: str) -> tuple[str, str, str]:
+    """Wipe the ``kind`` carrier's scratch dir (a stale checkpoint or
+    offset log would make a rerun a no-op) and split the events table
+    into ``stage/a_early.parquet`` and a held-back late file next to
+    the stage dir. Returns ``(base, stage, held late file)``."""
+    import shutil
+
+    base = scratch_dir(kind, sf_dir)
+    shutil.rmtree(base, ignore_errors=True)
+    stage, held = os.path.join(base, "stage"), os.path.join(base, "b_late.parquet")
+    _split_at_cut(
+        read_table(spark, sf_dir, "events"), "ts", os.path.join(stage, "a_early.parquet"), held
+    )
+    return base, stage, held
 
 
 @register(
@@ -1317,15 +1283,11 @@ def checkpoint_restart_strikes(spark: SparkSession, sf_dir: str) -> DataFrame:
     processed ONLY the not-yet-committed file."""
     from ..streaming.strikes import run_strike_pass, strike_final_state
 
-    base = _restart_work_dir("strike", sf_dir)
-    stage = _stage_split_events(spark, sf_dir, base)
+    base, stage, held = _restart_stage(spark, sf_dir, "ckpt_strike")
     ckpt, out = os.path.join(base, "ckpt"), os.path.join(base, "out")
 
-    early = os.path.join(stage, "b_late.parquet")
-    held = os.path.join(base, "b_late.parquet")
-    os.rename(early, held)  # phase 1: only the early file is visible
-    run_strike_pass(spark, stage, ckpt, out, state_partitions=4)
-    os.rename(held, early)  # phase 2: stage the late file, restart
+    run_strike_pass(spark, stage, ckpt, out, state_partitions=4)  # early file only
+    os.rename(held, os.path.join(stage, "b_late.parquet"))  # stage the late file, restart
     run_strike_pass(spark, stage, ckpt, out, state_partitions=4)
     return strike_final_state(spark, out)
 
@@ -1345,15 +1307,11 @@ def checkpoint_restart_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     recovery proof, sibling of ``checkpoint_restart_strikes``."""
     from ..streaming.strikes import run_windowed_pass, windowed_final_counts
 
-    base = _restart_work_dir("window", sf_dir)
-    stage = _stage_split_events(spark, sf_dir, base)
+    base, stage, held = _restart_stage(spark, sf_dir, "ckpt_window")
     ckpt, out = os.path.join(base, "ckpt"), os.path.join(base, "out")
 
-    early = os.path.join(stage, "b_late.parquet")
-    held = os.path.join(base, "b_late.parquet")
-    os.rename(early, held)
     run_windowed_pass(spark, stage, ckpt, out, state_partitions=4)
-    os.rename(held, early)
+    os.rename(held, os.path.join(stage, "b_late.parquet"))
     run_windowed_pass(spark, stage, ckpt, out, state_partitions=4)
     return windowed_final_counts(spark, out).select(
         "window_start", "window_end", "emp_id", "n_flagged"
@@ -1521,8 +1479,7 @@ def compact_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice"
     )
-    tag = os.path.basename(sf_dir.rstrip(os.sep)).replace(".", "_")
-    base = os.path.join(tempfile.gettempdir(), f"eds_compact_{tag}")
+    base = scratch_dir("compact", sf_dir)
     frag, dest = os.path.join(base, "frag"), os.path.join(base, "compact")
     li.repartition(64).write.mode("overwrite").parquet(frag)
     n_files = compact_parquet(spark, frag, dest, target_files=4)
@@ -1560,7 +1517,6 @@ def strike_stream_from_wire(spark: SparkSession, sf_dir: str) -> DataFrame:
     state to match the closed-form oracle. One line differs from a
     cluster deployment: the source reads the staged dir instead of
     ``kafka_reader(...).load()``."""
-    import glob
     import shutil
 
     from ..streaming.kafka import KAFKA_WIRE_SCHEMA, run_strike_stream_from_wire
@@ -1593,26 +1549,13 @@ def strike_stream_from_wire(spark: SparkSession, sf_dir: str) -> DataFrame:
     for f in KAFKA_WIRE_SCHEMA.fields:
         wire = wire.withColumn(f.name, F.col(f.name).cast(f.dataType))
 
-    tag = os.path.basename(sf_dir.rstrip(os.sep)).replace(".", "_")
-    base = os.path.join(tempfile.gettempdir(), f"eds_wire_{tag}")
+    base = scratch_dir("wire", sf_dir)
     shutil.rmtree(base, ignore_errors=True)
     stage = os.path.join(base, "topic")
-    os.makedirs(stage)
-    work = os.path.join(base, "__writer")
-    for name, half in (
-        # NULL-timestamp frames ride segment 0 (see _stage_split_events)
-        (
-            "seg_00",
-            wire.filter(
-                (F.col("timestamp") < _TS_CUT) | F.col("timestamp").isNull()
-            ),
-        ),
-        ("seg_01", wire.filter(F.col("timestamp") >= _TS_CUT)),
-    ):
-        half.coalesce(1).write.mode("overwrite").parquet(work)
-        part = glob.glob(os.path.join(work, "part-*.parquet"))[0]
-        shutil.move(part, os.path.join(stage, f"{name}.parquet"))
-    shutil.rmtree(work)
+    _split_at_cut(
+        wire, "timestamp", os.path.join(stage, "seg_00.parquet"),
+        os.path.join(stage, "seg_01.parquet"),
+    )
     return run_strike_stream_from_wire(spark, stage)
 
 

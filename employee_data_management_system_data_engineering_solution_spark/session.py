@@ -95,6 +95,11 @@ def get_session(
     ``spark.hadoop.fs.file.impl`` unless ``extra_conf`` names another.
     Any other master leaves both unset: its executors are separate
     JVMs that do not load the driver's class path.
+
+    The streaming state store is chosen here too, not per stream run:
+    pass ``spark.sql.streaming.stateStore.providerClass`` in
+    ``extra_conf`` (``streaming.replay.ROCKSDB_PROVIDER`` for RocksDB);
+    stream runs leave that conf as the session has it.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:

@@ -4,9 +4,10 @@ The reference reads the newest CSV from S3 (boto3 ``list_objects_v2``
 sorted by LastModified — ``clean_load_2_tf_staging.py:35-44``,
 4 copies) and writes via JDBC to Postgres. This engine is
 Parquet-native: columnar scans get predicate pushdown + column pruning
-from Catalyst for free; "staging/dim tables" are parquet directories or
-temp views. No JDBC connector is bundled — an external RDBMS caller
-would use stock ``spark.read.jdbc`` directly.
+from Catalyst for free; "staging/dim tables" are parquet directories,
+and a query's scratch files live under :func:`scratch_dir`. No JDBC
+connector is bundled — an external RDBMS caller would use stock
+``spark.read.jdbc`` directly.
 """
 
 from __future__ import annotations
@@ -15,19 +16,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
 
 
 def fan_out(df: DataFrame, parallelism: int | None = None) -> DataFrame:
@@ -350,12 +338,6 @@ def table_fingerprint(sf_dir: str, *names: str) -> str:
     return hashlib.md5("|".join(parts).encode()).hexdigest()
 
 
-def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:
-    """Register every table as a temp view so queries can use spark.sql."""
-    for name in names:
-        read_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def read_csv(
     spark: SparkSession,
     path: str,
@@ -394,6 +376,50 @@ def latest_file(path: str, suffix: str = "") -> str | None:
     # sub-ms tie must break deterministically (lexicographically-last),
     # never on listing order
     return fs.join(path, max(cands, key=lambda e: (e.mtime, e.name)).name)
+
+
+_SCRATCH_PREFIX = "eds_scratch_"
+#: temp-dir roots this process has swept and set to remove at exit
+_SCRATCH_ROOTS: set[str] = set()
+
+
+def scratch_dir(kind: str, sf_dir: str) -> str:
+    """The directory where a write-path query keeps its staging files,
+    sinks and checkpoints for ``sf_dir``:
+    ``<tmp>/eds_scratch_<pid>/<kind>_<sf tag>``, the tag being the
+    basename of ``sf_dir`` with ``.`` turned into ``_``.
+
+    One root per process, so two processes never share a staging file
+    or a stream checkpoint (the checkpoint location is the unit of
+    exactly-once restart). A frame a query returns may still read its
+    dir lazily, so the root lives until the process exits and is
+    removed then. The first call under a temp dir also removes the
+    roots of processes that died without running exit handlers. The
+    temp dir is read on every call, so a caller that redirects
+    ``tempfile.tempdir`` gets its root there. Nothing inside the root
+    is created or wiped here: a query that needs a clean dir wipes it
+    itself, the others write in overwrite mode."""
+    import atexit
+    import shutil
+    import tempfile
+
+    tmp = tempfile.gettempdir()
+    root = os.path.join(tmp, f"{_SCRATCH_PREFIX}{os.getpid()}")
+    if root not in _SCRATCH_ROOTS:
+        _SCRATCH_ROOTS.add(root)
+        for name in os.listdir(tmp):
+            pid = name[len(_SCRATCH_PREFIX):]
+            if not (name.startswith(_SCRATCH_PREFIX) and pid.isdigit()):
+                continue
+            try:
+                os.kill(int(pid), 0)
+            except ProcessLookupError:
+                shutil.rmtree(os.path.join(tmp, name), ignore_errors=True)
+            except PermissionError:
+                pass  # another user's live process
+        atexit.register(shutil.rmtree, root, True)
+    tag = os.path.basename(sf_dir.rstrip(os.sep)).replace(".", "_")
+    return os.path.join(root, f"{kind}_{tag}")
 
 
 def write_parquet(df: DataFrame, path: str, mode: str = "overwrite", partition_by: list[str] | None = None) -> None:

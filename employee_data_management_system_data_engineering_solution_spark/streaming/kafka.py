@@ -145,14 +145,6 @@ def parse_kafka_events(raw: DataFrame) -> DataFrame:
     )
 
 
-def events_from_kafka(
-    spark: SparkSession, bootstrap_servers: str, topic: str, **kwargs
-) -> DataFrame:
-    """The one-call production source: configured reader → load →
-    parse. Requires a reachable broker; see module docstring."""
-    return parse_kafka_events(kafka_reader(spark, bootstrap_servers, topic, **kwargs).load())
-
-
 #: Kafka's full wire schema, as ``readStream.format("kafka")`` delivers
 #: it. A file-backed replay dir written in this shape is plug-compatible
 #: with the broker source, so the composed topology below is testable
@@ -187,36 +179,19 @@ def run_strike_stream_from_wire(
     multi-file dir exercises cross-batch state continuation exactly as
     a long-lived topic would.
     """
-    from .replay import stream_confs
+    from .replay import run_memory_sink, stream_confs
     from .strikes import _latest_state, _strike_states, flag_messages
 
-    name = "kafka_wire_strikes_sink"
-    q = None
-    try:
-        with stream_confs(spark, state_partitions):
-            wire = (
-                spark.readStream.schema(KAFKA_WIRE_SCHEMA)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(wire_dir)
-            )
-            prepared = flag_messages(parse_kafka_events(wire), "props").select(
-                F.col("user_id").alias("emp_id"),
-                "flagged",
-                F.date_format("ts", "yyyy-MM").alias("month"),
-            )
-            q = (
-                _strike_states(prepared)
-                .writeStream.outputMode("update")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            out = spark.table(name)
-            out = spark.createDataFrame(out.collect(), schema=out.schema)
-    finally:
-        if q is not None:
-            q.stop()
-        spark.catalog.dropTempView(name)
+    with stream_confs(spark, state_partitions):
+        wire = (
+            spark.readStream.schema(KAFKA_WIRE_SCHEMA)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(wire_dir)
+        )
+        prepared = flag_messages(parse_kafka_events(wire), "props").select(
+            F.col("user_id").alias("emp_id"),
+            "flagged",
+            F.date_format("ts", "yyyy-MM").alias("month"),
+        )
+        out = run_memory_sink(spark, _strike_states(prepared), "kafka_wire_strikes_sink")
     return _latest_state(out)

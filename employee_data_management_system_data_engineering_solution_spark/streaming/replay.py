@@ -8,9 +8,15 @@ changes (``spark.readStream.format("kafka")``).
 
 ``replayed_events`` centralizes the shared mechanics: NANOS-safe
 schema, state-partition sizing (per-partition state-store + Arrow
-worker setup dominates small-key batches), deterministic sink naming,
-and guaranteed cleanup of the staging dir, stream query, temp view,
-and shuffle-partition conf.
+worker setup dominates small-key batches), and guaranteed cleanup of
+the staging dir and the pinned confs. :func:`run_memory_sink` runs one
+plan through a named memory sink and stops its query and drops its
+view before it returns.
+
+The state-store provider is a session conf, not a parameter: a session
+built with ``spark.sql.streaming.stateStore.providerClass`` set to
+:data:`ROCKSDB_PROVIDER` runs every stateful carrier on RocksDB, and
+:func:`stream_confs` leaves that key alone.
 
 Cost anatomy (measured at sf0.1): staging (mkdtemp + symlink +
 sentinel write) is 0.03-0.14 s; essentially the whole per-carrier cost
@@ -41,6 +47,7 @@ import shutil
 import tempfile
 from collections.abc import Callable, Iterator, Sequence
 from contextlib import contextmanager
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -49,11 +56,10 @@ from pyspark.sql import DataFrame, SparkSession
 #: full key space — the standard choice for production stateful
 #: streams (large key cardinality, changelog checkpointing). The
 #: default HDFS-backed provider keeps every key in executor memory.
+#: Select it on the session (``spark.sql.streaming.stateStore.providerClass``).
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
-
-_PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
 
 _CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
 #: Spark's stock manager for filesystems without FileContext support;
@@ -65,15 +71,13 @@ FILESYSTEM_CHECKPOINT_MANAGER = (
 
 
 @contextmanager
-def stream_confs(
-    spark: SparkSession, state_partitions: int | None, state_store_provider: str | None = None
-) -> Iterator[None]:
+def stream_confs(spark: SparkSession, state_partitions: int | None) -> Iterator[None]:
     """Session confs every stream run pins: NANOS-safe parquet reads,
     the stateful exchange's partition count (left alone when
-    ``state_partitions`` is None), the ``FileSystem``-based checkpoint
-    manager, and (optionally) the state-store provider.
-    Each is restored to its prior value — or unset, if it had none —
-    on exit.
+    ``state_partitions`` is None) and the ``FileSystem``-based
+    checkpoint manager. Each is restored to its prior value — or
+    unset, if it had none — on exit. The state-store provider is the
+    session's own.
 
     The default ``FileContext``-based manager reaches Hadoop's
     ``RawLocalFs.getFileLinkStatus`` on every rename and status check,
@@ -88,8 +92,6 @@ def stream_confs(
     }
     if state_partitions is not None:
         pinned["spark.sql.shuffle.partitions"] = str(state_partitions)
-    if state_store_provider is not None:
-        pinned[_PROVIDER_CONF] = state_store_provider
     prior = {k: spark.conf.get(k, None) for k in pinned}
     for k, v in pinned.items():
         spark.conf.set(k, v)
@@ -129,6 +131,39 @@ def _write_sentinel_file(src: str, path: str, rows: Sequence[dict], ts_ns: int) 
     pq.write_table(table, path)
 
 
+def run_memory_sink(
+    spark: SparkSession, result: DataFrame, name: str, output_mode: str = "update"
+) -> DataFrame:
+    """Run the streaming plan ``result`` to completion through a memory
+    sink named ``name`` (availableNow trigger; update mode by default,
+    session-window aggregations need complete/append) and return the
+    sink table detached from its view. The query is stopped and the
+    view dropped before this returns, whether or not the run failed."""
+    q = None
+    try:
+        q = (
+            result.writeStream.outputMode(output_mode)
+            .format("memory")
+            .queryName(name)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        out = spark.table(name)
+        # DRIVER-BOUNDED collect: the memory sink already holds the
+        # result on the driver, and every carrier aggregates before
+        # sinking (per-key/window counts, <= a few thousand rows at any
+        # tested sf). The round-trip only detaches the frame from the
+        # temp view dropped below. Do NOT lift this into a production
+        # sink path — raw/unaggregated streams must go to a file/Kafka
+        # sink instead.
+        return spark.createDataFrame(out.collect(), schema=out.schema)
+    finally:
+        if q is not None:
+            q.stop()
+        spark.catalog.dropTempView(name)
+
+
 @contextmanager
 def replayed_events(
     spark: SparkSession,
@@ -136,14 +171,13 @@ def replayed_events(
     state_partitions: int = 4,
     sentinel_batches: Sequence[Sequence[dict]] = (),
     max_files_per_trigger: int | None = 1,
-    state_store_provider: str | None = None,
-) -> Iterator[tuple[DataFrame, Callable[[DataFrame, str], DataFrame]]]:
+) -> Iterator[tuple[DataFrame, Callable[..., DataFrame]]]:
     """Yield ``(stream_df, run)`` where ``stream_df`` is the streaming
-    view of ``{sf_dir}/events.parquet`` and ``run(result_df, name, output_mode)``
-    executes the streaming plan through a memory sink (update mode by
-    default; session-window aggregations require complete/append)
-    (availableNow trigger) and returns the sink table, materialized so
-    it survives the cleanup that follows the ``with`` block.
+    view of ``{sf_dir}/events.parquet`` and ``run(result_df, name,
+    output_mode="update")`` is :func:`run_memory_sink` on this session:
+    it executes the streaming plan and returns the sink table,
+    materialized so it survives the cleanup that follows the ``with``
+    block.
 
     ``sentinel_batches``: optional extra micro-batches staged AFTER the
     real file (ascending mtime), each a list of row dicts written at a
@@ -163,18 +197,12 @@ def replayed_events(
     each dropped batch saves a full stateful-commit cycle across every
     state partition and operator.
 
-    ``state_store_provider``: fully-qualified provider class for the
-    stateful operators' state store (``ROCKSDB_PROVIDER`` for the
-    at-scale RocksDB store); ``None`` keeps the session default
-    (HDFS-backed in-memory). Every conf is restored on exit
-    (:func:`stream_confs`)."""
+    Every conf is restored on exit (:func:`stream_confs`)."""
     from ..sources.io import normalize_nanos, parquet_schema
 
     stage_dir = tempfile.mkdtemp(prefix="eds_stream_")
-    queries = []
-    names = []
     try:
-        with stream_confs(spark, state_partitions, state_store_provider):
+        with stream_confs(spark, state_partitions):
             src = f"{sf_dir}/events.parquet"
             os.symlink(src, f"{stage_dir}/events.parquet")
             base_mtime = os.path.getmtime(f"{stage_dir}/events.parquet")
@@ -186,32 +214,6 @@ def replayed_events(
             if max_files_per_trigger is not None:
                 reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
             stream = reader.parquet(stage_dir)
-
-            def run(result: DataFrame, name: str, output_mode: str = "update") -> DataFrame:
-                q = (
-                    result.writeStream.outputMode(output_mode)
-                    .format("memory")
-                    .queryName(name)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                queries.append(q)
-                names.append(name)
-                q.awaitTermination()
-                out = spark.table(name)
-                # DRIVER-BOUNDED collect: the memory sink already holds the
-                # result on the driver, and every carrier aggregates before
-                # sinking (per-key/window counts, <= a few thousand rows at
-                # any tested sf). The round-trip only detaches the frame
-                # from the temp view dropped below. Do NOT lift this into a
-                # production sink path — raw/unaggregated streams must go
-                # to a file/Kafka sink instead.
-                return spark.createDataFrame(out.collect(), schema=out.schema)
-
-            yield normalize_nanos(stream), run
+            yield normalize_nanos(stream), partial(run_memory_sink, spark)
     finally:
-        for q in queries:
-            q.stop()
-        for name in names:
-            spark.catalog.dropTempView(name)
         shutil.rmtree(stage_dir, ignore_errors=True)

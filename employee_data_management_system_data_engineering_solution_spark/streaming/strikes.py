@@ -569,7 +569,6 @@ def run_strike_stream(
     spark: SparkSession,
     sf_dir: str,
     state_partitions: int = 4,
-    state_store_provider: str | None = None,
 ) -> DataFrame:
     """Drive the stateful strike pipeline over the ``events`` table
     replayed as a file-source micro-batch stream; returns the final
@@ -588,16 +587,12 @@ def run_strike_stream(
     slower than 8 on a 1,500-key batch, and 4 is another ~15-30%
     cheaper across the carriers at sf0.1 with identical results. Size
     it to executor count in production (at most ``STATE_BUCKETS``).
-
-    ``state_store_provider``: state-store implementation for the
-    stateful operator (``replay.ROCKSDB_PROVIDER`` is the at-scale
-    choice); ``None`` keeps the default HDFS-backed store.
+    The state store is the session's provider
+    (``replay.ROCKSDB_PROVIDER`` is the at-scale choice).
     """
     from .replay import replayed_events
 
-    with replayed_events(
-        spark, sf_dir, state_partitions, state_store_provider=state_store_provider
-    ) as (stream, run):
+    with replayed_events(spark, sf_dir, state_partitions) as (stream, run):
         out = run(_strike_states(_prepared_events(stream)), "strikes_stream_sink")
     return _latest_state(out)
 
@@ -610,18 +605,17 @@ class StrikeProcessor:
     evolution, instead of one opaque state tuple. Keeps one state per
     employee and runs the SAME per-employee fold
     (:func:`_fold_employee`) as the bucketed legacy-API machine, so
-    the two tiers cannot drift; tier parity is pinned in
-    tests/test_streaming.py by driving this processor's
+    the two tiers cannot drift; tests/test_streaming.py uses it as
+    the per-employee reference for the bucketed machine, driving
     init/handleInputRows against a fake typed-state handle.
 
-    Deployment notes: transformWithState requires (a) the RocksDB
-    state-store provider (``replay.ROCKSDB_PROVIDER`` — the at-scale
-    choice anyway) and (b) the ``protobuf`` python package on workers
-    (its state-server protocol is protobuf-framed). This sandbox ships
-    neither a broker nor protobuf, so :func:`run_strike_stream_tws`
-    gates on the import — same discipline as the Kafka source
-    (``streaming/kafka.py``): the plumbing is real and unit-tested,
-    the ``.start()`` is cluster-only."""
+    Nothing in this package starts it as a stream: transformWithState
+    needs the RocksDB state-store provider (``replay.ROCKSDB_PROVIDER``)
+    and the ``protobuf`` package on every worker (its state-server
+    protocol is protobuf-framed), which this package does not depend
+    on. On a cluster that has both, a ``StatefulProcessor`` subclass
+    with these methods plugs into
+    ``groupBy("emp_id").transformWithStateInPandas``."""
 
     def init(self, handle) -> None:  # StatefulProcessorHandle
         self._state = handle.getValueState("strike", _STATE_SCHEMA)
@@ -644,51 +638,6 @@ class StrikeProcessor:
 
     def close(self) -> None:
         pass
-
-
-def run_strike_stream_tws(
-    spark: SparkSession,
-    sf_dir: str,
-    state_partitions: int = 4,
-) -> DataFrame:
-    """:func:`run_strike_stream` on the Spark-4 transformWithState API
-    — identical topology and output contract, with the stateful
-    operator swapped for :class:`StrikeProcessor` and the state store
-    pinned to RocksDB (a transformWithState requirement). Kept as a
-    separate runner so both API tiers stay first-class: the legacy
-    tier is what most deployed 3.x pipelines run; this is the forward
-    path (typed state, timers, TTL, state schema evolution). Raises
-    ``ImportError`` where the ``protobuf`` package is absent (the TWS
-    state protocol needs it on every worker) — see
-    :class:`StrikeProcessor` for the gating rationale."""
-    import importlib.util
-
-    if importlib.util.find_spec("google.protobuf") is None:
-        raise ImportError(
-            "transformWithStateInPandas requires the 'protobuf' package "
-            "(its state-server protocol is protobuf-framed); install it "
-            "on the cluster. The processor logic itself is unit-tested "
-            "without it (tests/test_streaming.py)."
-        )
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    # subclass dynamically so importing this module never hard-depends
-    # on the Spark-4-only ABC (the class body above is plain Python)
-    proc = type("_StrikeTWS", (StatefulProcessor,), dict(StrikeProcessor.__dict__))()
-
-    from .replay import ROCKSDB_PROVIDER, replayed_events
-
-    with replayed_events(
-        spark, sf_dir, state_partitions, state_store_provider=ROCKSDB_PROVIDER
-    ) as (stream, run):
-        result = _prepared_events(stream).groupBy("emp_id").transformWithStateInPandas(
-            proc,
-            outputStructType=_OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-        out = run(result, "strikes_tws_sink")
-    return _latest_state(out)
 
 
 def run_stream_stream_join(
@@ -867,7 +816,6 @@ def _run_checkpointed_pass(
     out_dir: str,
     plan_fn,
     state_partitions: int = 4,
-    state_store_provider: str | None = None,
 ) -> dict | None:
     """Shared scaffolding for every durable-checkpoint availableNow
     pass: pinned stream confs (:func:`replay.stream_confs`), staged-file
@@ -883,7 +831,7 @@ def _run_checkpointed_pass(
     from ..sources.io import normalize_nanos, parquet_schema
     from .replay import stream_confs
 
-    with stream_confs(spark, state_partitions, state_store_provider):
+    with stream_confs(spark, state_partitions):
         staged = sorted(_glob.glob(_os.path.join(stage_dir, "*.parquet")))
         if not staged:
             raise ValueError(f"no parquet files staged in {stage_dir}")
@@ -928,7 +876,6 @@ def run_strike_pass(
     ckpt_dir: str,
     out_dir: str,
     state_partitions: int = 4,
-    state_store_provider: str | None = None,
 ) -> dict | None:
     """ONE availableNow pass of the stateful strike pipeline over the
     files currently staged in ``stage_dir``, with a DURABLE checkpoint.
@@ -958,7 +905,7 @@ def run_strike_pass(
     return _run_checkpointed_pass(
         spark, stage_dir, ckpt_dir, out_dir,
         lambda stream: _strike_states(_prepared_events(stream)),
-        state_partitions, state_store_provider,
+        state_partitions,
     )
 
 

@@ -23,12 +23,11 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.io import parquet_schema, read_parquet
+from ..sources.io import parquet_schema, read_parquet, scratch_dir
 from .replay import stream_confs
 
 
@@ -77,8 +76,7 @@ def run_upsert_stream(spark: SparkSession, sf_dir: str, n_batches: int = 2) -> D
     full read-dim→union→rewrite cycle — ~0.8 s at sf0.1 — so the
     default stays at 2; raise it to stress repeated-merge behavior."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    tag = os.path.basename(sf_dir.rstrip(os.sep)).replace(".", "_")
-    root = os.path.join(tempfile.gettempdir(), f"eds_upsert_{tag}")
+    root = scratch_dir("upsert", sf_dir)
     stage_dir, dim_dir = os.path.join(root, "stage"), os.path.join(root, "dim")
     shutil.rmtree(root, ignore_errors=True)
     os.makedirs(stage_dir)

@@ -3,6 +3,9 @@ streaming carrier."""
 
 from __future__ import annotations
 
+import os
+from pathlib import Path
+
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -141,45 +144,74 @@ def test_streaming_upsert_matches_batch_aggregate(spark):
 
 
 def test_restart_work_dirs_are_removed_when_their_process_is_gone(tmp_path, monkeypatch):
-    """The checkpoint-restart carriers' per-PID work dirs do not pile up
-    in the temp dir: a process removes its own at exit, and the dirs of
-    processes that died without exit handlers go on the next call."""
-    import os
+    """Scratch roots (``sources.io.scratch_dir``, which holds the
+    checkpoint-restart carriers' work dirs too) do not pile up in the
+    temp dir: a process removes its own at exit, and the roots of
+    processes that died without exit handlers go on the first call
+    under that temp dir. Live roots and unrelated names stay."""
     import subprocess
     import sys
     import tempfile
-    from pathlib import Path
 
-    from employee_data_management_system_data_engineering_solution_spark.plans.pipeline import (
-        _restart_work_dir,
+    from employee_data_management_system_data_engineering_solution_spark.sources.io import (
+        scratch_dir,
     )
 
     gone = subprocess.Popen([sys.executable, "-c", "pass"])
     gone.wait()
-    dead = tmp_path / f"eds_ckpt_strike_sf0_001_{gone.pid}"
-    live = tmp_path / f"eds_ckpt_window_sf0_001_{os.getppid()}"
-    other = tmp_path / "eds_ckpt_notes"
-    for d in (dead, live, other):
+    dead = tmp_path / f"eds_scratch_{gone.pid}"
+    live = tmp_path / f"eds_scratch_{os.getppid()}"
+    others = [tmp_path / "eds_scratch_notes", tmp_path / f"eds_ckpt_strike_sf0_001_{gone.pid}"]
+    for d in (dead, live, *others):
         (d / "ckpt").mkdir(parents=True)
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
-    base = _restart_work_dir("strike", "/data/sf0.001/")
-    assert base == str(tmp_path / f"eds_ckpt_strike_sf0_001_{os.getpid()}")
-    assert not dead.exists() and live.exists() and other.exists()
+    base = scratch_dir("ckpt_strike", "/data/sf0.001/")
+    assert base == str(tmp_path / f"eds_scratch_{os.getpid()}" / "ckpt_strike_sf0_001")
+    assert not dead.exists() and live.exists() and all(d.exists() for d in others)
 
-    root = Path(__file__).resolve().parents[1]
+    made = _scratch_dir_in_subprocess(tmp_path, "window", "sf0.01")
+    assert made.startswith(str(tmp_path)) and not os.path.exists(os.path.dirname(made))
+
+
+def _scratch_dir_in_subprocess(tmp: Path, kind: str, sf_dir: str) -> str:
+    """``scratch_dir(kind, sf_dir)`` as a fresh Python process under
+    the temp dir ``tmp`` returns it, after writing a file into it."""
+    import subprocess
+    import sys
+
     code = (
-        "import os\n"
-        "from employee_data_management_system_data_engineering_solution_spark.plans.pipeline "
-        "import _restart_work_dir\n"
-        "d = _restart_work_dir('window', 'sf0.01')\n"
+        "import os, sys\n"
+        "from employee_data_management_system_data_engineering_solution_spark.sources.io "
+        "import scratch_dir\n"
+        "d = scratch_dir(sys.argv[1], sys.argv[2])\n"
         "os.makedirs(os.path.join(d, 'out'))\n"
         "print(d)\n"
     )
-    env = dict(os.environ, TMPDIR=str(tmp_path), PYTHONPATH=str(root))
+    env = dict(os.environ, TMPDIR=str(tmp), PYTHONPATH=str(Path(__file__).resolve().parents[1]))
     proc = subprocess.run(
-        [sys.executable, "-c", code], env=env, capture_output=True, text=True, timeout=120
+        [sys.executable, "-c", code, kind, sf_dir],
+        env=env, capture_output=True, text=True, timeout=120,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
-    made = proc.stdout.strip().splitlines()[-1]
-    assert made.startswith(str(tmp_path)) and not os.path.exists(made)
+    return proc.stdout.strip().splitlines()[-1]
+
+
+def test_scratch_dir_is_per_process(tmp_path, monkeypatch):
+    """Two processes get different scratch dirs for the same query kind
+    and sf dir, so concurrent runs never share a staging file or a
+    stream checkpoint; one process gets the same dir on every call, so
+    a query's write and its read-back meet."""
+    import tempfile
+
+    from employee_data_management_system_data_engineering_solution_spark.sources.io import (
+        scratch_dir,
+    )
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    mine = scratch_dir("compact", "/data/sf0.001")
+    assert scratch_dir("compact", "/data/sf0.001") == mine
+    a = _scratch_dir_in_subprocess(tmp_path, "compact", "/data/sf0.001")
+    b = _scratch_dir_in_subprocess(tmp_path, "compact", "/data/sf0.001")
+    assert len({mine, a, b}) == 3
+    assert {os.path.basename(d) for d in (mine, a, b)} == {"compact_sf0_001"}

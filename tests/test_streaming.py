@@ -8,6 +8,7 @@ import datetime as dt
 import glob
 import os
 import shutil
+from contextlib import contextmanager
 
 import pandas as pd
 from pyspark.sql import Row
@@ -310,7 +311,7 @@ def test_tws_processor_matches_legacy_state_fn_across_batches():
     this drives both through the same three-batch feed (two months, a
     timeless strike, an INACTIVE latch) and pins identical emissions
     and state. The full streaming run is cluster-only (TWS needs the
-    protobuf package on workers — gated in run_strike_stream_tws)."""
+    protobuf package on workers, which this package does not depend on)."""
     from employee_data_management_system_data_engineering_solution_spark.streaming.strikes import (
         StrikeProcessor,
     )
@@ -385,10 +386,24 @@ def test_timeless_strike_survives_cross_batch_reset(spark, tmp_path):
     assert got[1].strike_count == 2 and got[1].status == "ACTIVE"
 
 
+_PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
+
+
+@contextmanager
+def _session_provider(spark, provider):
+    """Select the state-store provider on the session, the way a caller
+    does, and unset it on exit."""
+    spark.conf.set(_PROVIDER_CONF, provider)
+    try:
+        yield
+    finally:
+        spark.conf.unset(_PROVIDER_CONF)
+
+
 def test_strike_stream_rocksdb_provider_matches_default(spark, tmp_path):
-    """The documented at-scale state store (RocksDB) must produce
-    identical results to the default HDFS-backed store on the same
-    replay."""
+    """The documented at-scale state store (RocksDB), selected on the
+    session, must produce identical results to the default HDFS-backed
+    store on the same replay."""
     from employee_data_management_system_data_engineering_solution_spark.streaming.replay import (
         ROCKSDB_PROVIDER,
     )
@@ -400,15 +415,11 @@ def test_strike_stream_rocksdb_provider_matches_default(spark, tmp_path):
         r.emp_id: (r.strike_count, r.status)
         for r in run_strike_stream(spark, str(tmp_path), state_partitions=2).collect()
     }
-    rocks = {
-        r.emp_id: (r.strike_count, r.status)
-        for r in run_strike_stream(
-            spark,
-            str(tmp_path),
-            state_partitions=2,
-            state_store_provider=ROCKSDB_PROVIDER,
-        ).collect()
-    }
+    with _session_provider(spark, ROCKSDB_PROVIDER):
+        rocks = {
+            r.emp_id: (r.strike_count, r.status)
+            for r in run_strike_stream(spark, str(tmp_path), state_partitions=2).collect()
+        }
     assert rocks == base
     assert rocks[2] == (15, "INACTIVE")
 
@@ -546,16 +557,11 @@ def test_strike_pass_recovery_under_rocksdb_store(spark, tmp_path):
     stage_dir.mkdir()
     ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
 
-    _stage_file(spark, tmp_path, jan, str(stage_dir / "a_jan.parquet"))
-    run_strike_pass(
-        spark, str(stage_dir), ckpt, out,
-        state_partitions=2, state_store_provider=ROCKSDB_PROVIDER,
-    )
-    _stage_file(spark, tmp_path, feb, str(stage_dir / "b_feb.parquet"))
-    run_strike_pass(
-        spark, str(stage_dir), ckpt, out,
-        state_partitions=2, state_store_provider=ROCKSDB_PROVIDER,
-    )
+    with _session_provider(spark, ROCKSDB_PROVIDER):
+        _stage_file(spark, tmp_path, jan, str(stage_dir / "a_jan.parquet"))
+        run_strike_pass(spark, str(stage_dir), ckpt, out, state_partitions=2)
+        _stage_file(spark, tmp_path, feb, str(stage_dir / "b_feb.parquet"))
+        run_strike_pass(spark, str(stage_dir), ckpt, out, state_partitions=2)
     got = {
         r.emp_id: (r.strike_count, r.status)
         for r in strike_final_state(spark, out).collect()
@@ -702,22 +708,24 @@ def test_strike_pass_state_rows_bounded_by_buckets(spark, tmp_path):
 
 def test_stream_confs_restore_prior_values(spark):
     """Every conf a stream run pins is put back on exit: prior values
-    restored, previously-unset keys unset again."""
+    restored, previously-unset keys unset again. The state-store
+    provider is the caller's: a session's choice is left as it is."""
     from employee_data_management_system_data_engineering_solution_spark.streaming.replay import (
         FILESYSTEM_CHECKPOINT_MANAGER,
         ROCKSDB_PROVIDER,
         _CHECKPOINT_MANAGER_CONF,
-        _PROVIDER_CONF,
         stream_confs,
     )
 
     parts = spark.conf.get("spark.sql.shuffle.partitions")
     assert spark.conf.get(_PROVIDER_CONF, None) is None
     assert spark.conf.get(_CHECKPOINT_MANAGER_CONF, None) is None
-    with stream_confs(spark, 3, ROCKSDB_PROVIDER):
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+    with _session_provider(spark, ROCKSDB_PROVIDER):
+        with stream_confs(spark, 3):
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+            assert spark.conf.get(_PROVIDER_CONF) == ROCKSDB_PROVIDER
+            assert spark.conf.get(_CHECKPOINT_MANAGER_CONF) == FILESYSTEM_CHECKPOINT_MANAGER
         assert spark.conf.get(_PROVIDER_CONF) == ROCKSDB_PROVIDER
-        assert spark.conf.get(_CHECKPOINT_MANAGER_CONF) == FILESYSTEM_CHECKPOINT_MANAGER
     assert spark.conf.get("spark.sql.shuffle.partitions") == parts
     assert spark.conf.get(_PROVIDER_CONF, None) is None
     assert spark.conf.get(_CHECKPOINT_MANAGER_CONF, None) is None

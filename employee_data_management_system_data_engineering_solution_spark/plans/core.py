@@ -1269,8 +1269,8 @@ def revenue_cube_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # Join-key skew diagnosis (X112): the report you run BEFORE deciding on
-# salting/AQE for a join — operators/skew.py is the mitigation, this is
-# the measurement
+# salting/AQE for a join — operators.joins.salted_join is the
+# mitigation, this is the measurement
 # --------------------------------------------------------------------------
 @register(
     "join_key_skew_report",
@@ -1293,7 +1293,7 @@ def join_key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     the heaviest key's row count relative to the mean (1.0 = perfectly
     uniform; the number that tells you whether a plain hash join's
     slowest partition will straggle and whether to reach for
-    ``operators/skew.salted_join`` or trust AQE's skew split). The
+    ``operators.joins.salted_join`` or trust AQE's skew split). The
     measurement every 100 TB join plan should start from — shuffle
     sizing from table stats alone misses exactly this.
 

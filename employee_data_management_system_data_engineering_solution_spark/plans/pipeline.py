@@ -538,8 +538,8 @@ def salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier key spreads over 8 shuffle partitions. Result is EXACTLY
     the plain inner join — the oracle checks that equivalence. (AQE
     skew-split handles most cases automatically; explicit salting is
-    the deterministic fallback — see operators/skew.py.)"""
-    from ..operators.skew import salted_join
+    the deterministic fallback — see ``operators.joins.salted_join``.)"""
+    from ..operators.joins import salted_join
 
     li = read_table(spark, sf_dir, "lineitem").select(
         F.col("l_suppkey").alias("suppkey"), "l_extendedprice"
@@ -548,7 +548,7 @@ def salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("s_suppkey").alias("suppkey"), "s_nationkey"
     )
     return (
-        salted_join(li, sup, on=["suppkey"], salt=8)
+        salted_join(li, sup, ["suppkey"], salts=8)
         .groupBy("s_nationkey")
         .agg(
             F.count(F.lit(1)).alias("n_items"),
@@ -1286,9 +1286,9 @@ def checkpoint_restart_strikes(spark: SparkSession, sf_dir: str) -> DataFrame:
     base, stage, held = _restart_stage(spark, sf_dir, "ckpt_strike")
     ckpt, out = os.path.join(base, "ckpt"), os.path.join(base, "out")
 
-    run_strike_pass(spark, stage, ckpt, out, state_partitions=4)  # early file only
+    run_strike_pass(spark, stage, ckpt, out)  # early file only
     os.rename(held, os.path.join(stage, "b_late.parquet"))  # stage the late file, restart
-    run_strike_pass(spark, stage, ckpt, out, state_partitions=4)
+    run_strike_pass(spark, stage, ckpt, out)
     return strike_final_state(spark, out)
 
 
@@ -1310,9 +1310,9 @@ def checkpoint_restart_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     base, stage, held = _restart_stage(spark, sf_dir, "ckpt_window")
     ckpt, out = os.path.join(base, "ckpt"), os.path.join(base, "out")
 
-    run_windowed_pass(spark, stage, ckpt, out, state_partitions=4)
+    run_windowed_pass(spark, stage, ckpt, out)
     os.rename(held, os.path.join(stage, "b_late.parquet"))
-    run_windowed_pass(spark, stage, ckpt, out, state_partitions=4)
+    run_windowed_pass(spark, stage, ckpt, out)
     return windowed_final_counts(spark, out).select(
         "window_start", "window_end", "emp_id", "n_flagged"
     )

@@ -87,7 +87,8 @@ def get_session(
     """Build (or fetch) the shared SparkSession.
 
     Defaults follow $SPARK_GRAFT_CPUS when set (the driver's bench
-    contract), else all local cores.
+    contract), else all local cores. The driver gets 24g unless
+    ``extra_conf`` sets ``spark.driver.memory``.
 
     A ``local[...]`` master also gets the in-process-chmod local
     filesystem (module docstring): its jar goes first on
@@ -127,7 +128,7 @@ def get_session(
         # rejects by default; read them as long and convert in the reader
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("EDS_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", "24g")
         .config("spark.python.daemon.module", f"{__package__}.worker_daemon")
     )
     conf = dict(extra_conf or {})

@@ -195,11 +195,14 @@ def money_native_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame
     wrong-at-scale) double path.
 
     On first use per (process, sf_dir, table) the fixture is rewritten
-    once into a decimal-typed warehouse copy under the system temp dir
-    — standing in for the ingest-time conversion a real deployment does
-    exactly once. The memo is process-local on purpose: a stale copy
-    from an earlier process (e.g. regenerated fixtures) must not leak
-    in. Its key and the copy's directory carry the table's
+    once into a decimal-typed warehouse copy under this process's
+    :func:`scratch_dir` — standing in for the ingest-time conversion a
+    real deployment does exactly once. The memo and the copy are
+    process-local on purpose: a stale copy from an earlier process
+    (e.g. regenerated fixtures) must not leak in, and two processes
+    never write one copy. The copy's name carries a digest of the
+    resolved ``sf_dir`` (two warehouses with one basename get two
+    copies) and, like the memo key, the table's
     :func:`table_fingerprint`, so a table rewritten within the process
     gets a fresh copy, and frames still reading the old copy keep their
     files. The copy is read back with the schema it was written with,
@@ -214,23 +217,12 @@ def money_native_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame
     hit = _MONEY_NATIVE_CACHE.get(key)
     if hit is None:
         import hashlib
-        import tempfile
 
         from pyspark.sql import functions as F
 
-        # the tag embeds a digest of the FULL resolved path, not just
-        # the basename: two different warehouses named sf0.1 must not
-        # share (and silently cross-overwrite) one memoized copy —
-        # unlike the self-healing overwrite-per-invocation work dirs,
-        # this memo claims the path stays valid for the process
-        real = os.path.realpath(sf_dir)
-        tag = (
-            os.path.basename(real).replace(".", "_")
-            + "_"
-            + hashlib.md5(real.encode()).hexdigest()[:8]
-        )
+        digest = hashlib.md5(os.path.realpath(sf_dir).encode()).hexdigest()[:8]
         path = os.path.join(
-            tempfile.gettempdir(), f"eds_decwh_{tag}", f"{name}_{fingerprint[:12]}"
+            scratch_dir("decwh", sf_dir), f"{name}_{digest}_{fingerprint[:12]}"
         )
         df = read_table(spark, sf_dir, name)
         # Write with real scan parallelism: a fixture that arrives as

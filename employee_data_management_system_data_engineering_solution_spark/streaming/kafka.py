@@ -162,9 +162,7 @@ KAFKA_WIRE_SCHEMA = T.StructType(
 )
 
 
-def run_strike_stream_from_wire(
-    spark: SparkSession, wire_dir: str, state_partitions: int = 4
-) -> DataFrame:
+def run_strike_stream_from_wire(spark: SparkSession, wire_dir: str) -> DataFrame:
     """The COMPLETE production Kafka topology in one call: wire frames →
     ``parse_kafka_events`` → reserved-word ``flag_messages`` over the
     message payload (the production path, not the ``event_type``
@@ -179,10 +177,10 @@ def run_strike_stream_from_wire(
     multi-file dir exercises cross-batch state continuation exactly as
     a long-lived topic would.
     """
-    from .replay import run_memory_sink, stream_confs
+    from .replay import STATE_PARTITIONS, run_memory_sink, stream_confs
     from .strikes import _latest_state, _strike_states, flag_messages
 
-    with stream_confs(spark, state_partitions):
+    with stream_confs(spark, STATE_PARTITIONS):
         wire = (
             spark.readStream.schema(KAFKA_WIRE_SCHEMA)
             .option("maxFilesPerTrigger", 1)

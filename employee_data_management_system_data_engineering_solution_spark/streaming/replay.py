@@ -7,11 +7,10 @@ returns the materialized result. In production only the source line
 changes (``spark.readStream.format("kafka")``).
 
 ``replayed_events`` centralizes the shared mechanics: NANOS-safe
-schema, state-partition sizing (per-partition state-store + Arrow
-worker setup dominates small-key batches), and guaranteed cleanup of
-the staging dir and the pinned confs. :func:`run_memory_sink` runs one
-plan through a named memory sink and stops its query and drops its
-view before it returns.
+schema, the state-partition count (:data:`STATE_PARTITIONS`), and
+guaranteed cleanup of the staging dir and the pinned confs.
+:func:`run_memory_sink` runs one plan through a named memory sink and
+stops its query and drops its view before it returns.
 
 The state-store provider is a session conf, not a parameter: a session
 built with ``spark.sql.streaming.stateStore.providerClass`` set to
@@ -22,10 +21,9 @@ Cost anatomy (measured at sf0.1): staging (mkdtemp + symlink +
 sentinel write) is 0.03-0.14 s; essentially the whole per-carrier cost
 is the streaming query itself — planning, offset/commit logs, and one
 state-store commit cycle per partition per stateful operator per
-batch. Hence the levers that matter are state_partitions (default 4
-here; sized to key cardinality in production) and batch count, NOT
-staging reuse — a shared staging dir across carriers was measured and
-rejected as noise-level.
+batch. Hence the levers that matter are :data:`STATE_PARTITIONS` and
+batch count, NOT staging reuse — a shared staging dir across carriers
+was measured and rejected as noise-level.
 
 On a host without Hadoop's native library (``libhadoop``; pip pyspark
 ships none) the log and state commits were mostly spent starting
@@ -60,6 +58,21 @@ from pyspark.sql import DataFrame, SparkSession
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
+
+#: Shuffle partitions of every stateful stream run, and so its state
+#: store count. Each partition carries a state store and an Arrow
+#: Python worker, a fixed per-partition setup cost per batch. The
+#: strike operator groups by ``strikes.STATE_BUCKETS`` key buckets, so
+#: at most that many groups spread over the partitions whatever the
+#: key count; more partitions than buckets leave some idle. 32
+#: partitions measured 5x slower than 8 on a 1,500-key batch, and 4 is
+#: another ~15-30% cheaper across the carriers at sf0.1 with identical
+#: results. Size it to the executor count in production (at most
+#: ``STATE_BUCKETS``). A checkpoint pins it: its offset log records
+#: ``spark.sql.shuffle.partitions`` and a restart runs with the
+#: recorded value, so a new value takes effect only on a fresh
+#: checkpoint.
+STATE_PARTITIONS = 4
 
 _CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
 #: Spark's stock manager for filesystems without FileContext support;
@@ -168,7 +181,6 @@ def run_memory_sink(
 def replayed_events(
     spark: SparkSession,
     sf_dir: str,
-    state_partitions: int = 4,
     sentinel_batches: Sequence[Sequence[dict]] = (),
     max_files_per_trigger: int | None = 1,
 ) -> Iterator[tuple[DataFrame, Callable[..., DataFrame]]]:
@@ -202,7 +214,7 @@ def replayed_events(
 
     stage_dir = tempfile.mkdtemp(prefix="eds_stream_")
     try:
-        with stream_confs(spark, state_partitions):
+        with stream_confs(spark, STATE_PARTITIONS):
             src = f"{sf_dir}/events.parquet"
             os.symlink(src, f"{stage_dir}/events.parquet")
             base_mtime = os.path.getmtime(f"{stage_dir}/events.parquet")

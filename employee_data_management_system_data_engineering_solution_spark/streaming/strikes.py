@@ -353,17 +353,52 @@ def _latest_state(out: DataFrame) -> DataFrame:
     )
 
 
-def run_windowed_flag_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    window_duration: str = "1 day",
-    watermark_delay: str = "1 day",
-    state_partitions: int = 4,
-) -> DataFrame:
+#: Event-time settings of the carriers: one topology, one value each.
+#: The DuckDB oracles in ``plans/pipeline.py`` spell the same durations
+#: in SQL (``INTERVAL 1 DAY``, ``15 MINUTE``/``1 HOUR``, ``30 MINUTE``,
+#: ``1 HOUR``), so changing one here means changing its oracle too.
+#: Watermark of the windowed, sliding, session and dedup carriers:
+WATERMARK_DELAY = "1 day"
+#: Tumbling window of the flagged counter, memory sink and durable pass:
+FLAG_WINDOW = "1 day"
+#: Sliding window and slide of the trend counter (4 windows per event):
+SLIDING_WINDOW = "1 hour"
+SLIDE = "15 minutes"
+#: Inactivity gap that closes an activity session:
+SESSION_GAP = "30 minutes"
+#: Views a purchase joins reach back this far, on both join carriers:
+JOIN_WINDOW = "1 hour"
+JOIN_WATERMARK_DELAY = "2 hours"
+
+
+def _window_bounds(df: DataFrame, *cols: str) -> DataFrame:
+    """Project a window-keyed frame's ``w`` struct to string
+    (window_start, window_end) columns, followed by ``cols``."""
+    return df.select(
+        F.col("w.start").cast("string").alias("window_start"),
+        F.col("w.end").cast("string").alias("window_end"),
+        *cols,
+    )
+
+
+def _flag_window_counts(stream: DataFrame) -> DataFrame:
+    """Flagged events per (tumbling :data:`FLAG_WINDOW` window ``w``,
+    emp_id) under a :data:`WATERMARK_DELAY` watermark: the plan the
+    memory-sink carrier and the durable windowed pass share."""
+    return (
+        stream.filter(flagged_expr())
+        .select(F.col("user_id").alias("emp_id"), "ts")
+        .withWatermark("ts", WATERMARK_DELAY)
+        .groupBy(F.window("ts", FLAG_WINDOW).alias("w"), "emp_id")
+        .agg(F.count("*").alias("n_flagged"))
+    )
+
+
+def run_windowed_flag_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked tumbling-window flagged-message counts per employee
     (SURVEY.md §2.9's standard carrier: ``withWatermark`` + ``window()``
     — the idiomatic Structured Streaming shape for the strike counter,
-    tolerant of late data up to ``watermark_delay``).
+    tolerant of late data up to :data:`WATERMARK_DELAY`).
 
     Returns (window_start, window_end, emp_id, n_flagged) as a batch
     DataFrame. The post-stream MAX collapse keeps the latest emission
@@ -371,114 +406,75 @@ def run_windowed_flag_stream(
     """
     from .replay import replayed_events
 
-    with replayed_events(spark, sf_dir, state_partitions) as (stream, run):
-        flagged = stream.filter(flagged_expr()).select(
-            F.col("user_id").alias("emp_id"), "ts"
-        )
-        agg = (
-            flagged.withWatermark("ts", watermark_delay)
-            .groupBy(F.window("ts", window_duration).alias("w"), "emp_id")
-            .agg(F.count("*").alias("n_flagged"))
-        )
-        out = run(agg, "flag_window_sink")
-    return (
-        out.groupBy("w", "emp_id")
-        .agg(F.max("n_flagged").alias("n_flagged"))
-        .select(
-            F.col("w.start").cast("string").alias("window_start"),
-            F.col("w.end").cast("string").alias("window_end"),
-            "emp_id",
-            "n_flagged",
-        )
+    with replayed_events(spark, sf_dir) as (stream, run):
+        out = run(_flag_window_counts(stream), "flag_window_sink")
+    return _window_bounds(
+        out.groupBy("w", "emp_id").agg(F.max("n_flagged").alias("n_flagged")),
+        "emp_id",
+        "n_flagged",
     )
 
 
-def run_sliding_window_counts(
-    spark: SparkSession,
-    sf_dir: str,
-    window_duration: str = "1 hour",
-    slide_duration: str = "15 minutes",
-    watermark_delay: str = "1 day",
-    state_partitions: int = 4,
-) -> DataFrame:
+def run_sliding_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked SLIDING-window flagged-event counts — the window
     tier the tumbling carrier cannot express: each event contributes
-    to duration/slide (= 4) overlapping windows, so the count surface
-    is a smooth 15-minute-granularity trend instead of disjoint
-    buckets (the shape an alerting monitor reads). Spark implements
-    the multi-assignment with the same Expand machinery as CUBE;
-    state is one row per open (window, key) and watermark eviction
-    closes duration/slide windows per slide tick.
+    to :data:`SLIDING_WINDOW` / :data:`SLIDE` (= 4) overlapping
+    windows, so the count surface is a smooth 15-minute-granularity
+    trend instead of disjoint buckets (the shape an alerting monitor
+    reads). Spark implements the multi-assignment with the same Expand
+    machinery as CUBE; state is one row per open (window, key) and
+    watermark eviction closes window/slide windows per slide tick.
 
     Returns (window_start, window_end, n_flagged) as a batch frame;
     the post-stream MAX collapse keeps the latest emission per window
     should the replay split into micro-batches."""
     from .replay import replayed_events
 
-    with replayed_events(spark, sf_dir, state_partitions) as (stream, run):
-        flagged = stream.filter(flagged_expr()).select("ts")
+    with replayed_events(spark, sf_dir) as (stream, run):
         agg = (
-            flagged.withWatermark("ts", watermark_delay)
-            .groupBy(F.window("ts", window_duration, slide_duration).alias("w"))
+            stream.filter(flagged_expr())
+            .select("ts")
+            .withWatermark("ts", WATERMARK_DELAY)
+            .groupBy(F.window("ts", SLIDING_WINDOW, SLIDE).alias("w"))
             .agg(F.count("*").alias("n_flagged"))
         )
         out = run(agg, "sliding_window_sink")
-    return (
-        out.groupBy("w")
-        .agg(F.max("n_flagged").alias("n_flagged"))
-        .select(
-            F.col("w.start").cast("string").alias("window_start"),
-            F.col("w.end").cast("string").alias("window_end"),
-            "n_flagged",
-        )
+    return _window_bounds(
+        out.groupBy("w").agg(F.max("n_flagged").alias("n_flagged")), "n_flagged"
     )
 
 
-def run_dedup_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    watermark_delay: str = "1 day",
-    state_partitions: int = 4,
-    within_watermark: bool = False,
-) -> DataFrame:
+def run_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exact-once deduplication: ``dropDuplicates`` on the
     event id under a watermark, then per-type counts — the standard
     at-least-once-source → effectively-once-pipeline shape (a training
     -data ingest dedupe, run as a stream).
 
-    ``within_watermark=True`` switches to
-    ``dropDuplicatesWithinWatermark``: dedup state is evicted once the
-    watermark passes an id's event time, so state size is bounded by
-    the watermark window instead of growing with every key ever seen —
-    the production choice for unbounded streams (plain
-    ``dropDuplicates`` keeps ALL keys forever; on an infinite feed that
-    is an unbounded state store). Results are identical whenever true
-    duplicates arrive within ``watermark_delay`` of each other — the
-    at-least-once-redelivery case the operator exists for.
+    Plain ``dropDuplicates`` keeps every id it has seen; on an infinite
+    feed that is an unbounded state store, and
+    ``dropDuplicatesWithinWatermark`` (state evicted once the watermark
+    passes an id's event time) is the production choice. The two agree
+    whenever true duplicates arrive within :data:`WATERMARK_DELAY` of
+    each other — the at-least-once-redelivery case the operator exists
+    for; tests/test_streaming.py pins that on the replay.
 
     Returns (event_type, n_events) with duplicates collapsed.
     """
     from .replay import replayed_events
 
-    with replayed_events(spark, sf_dir, state_partitions) as (stream, run):
-        keyed = stream.select("event_id", "event_type", "ts").withWatermark(
-            "ts", watermark_delay
+    with replayed_events(spark, sf_dir) as (stream, run):
+        agg = (
+            stream.select("event_id", "event_type", "ts")
+            .withWatermark("ts", WATERMARK_DELAY)
+            .dropDuplicates(["event_id"])
+            .groupBy("event_type")
+            .agg(F.count("*").alias("n_events"))
         )
-        deduped = (
-            keyed.dropDuplicatesWithinWatermark(["event_id"])
-            if within_watermark
-            else keyed.dropDuplicates(["event_id"])
-        )
-        agg = deduped.groupBy("event_type").agg(F.count("*").alias("n_events"))
         out = run(agg, "dedup_stream_sink")
     return out.groupBy("event_type").agg(F.max("n_events").alias("n_events"))
 
 
-def run_stream_static_enrich(
-    spark: SparkSession,
-    sf_dir: str,
-    state_partitions: int = 4,
-) -> DataFrame:
+def run_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-STATIC broadcast enrichment: the purchase stream joins
     the customer dimension read as a plain batch table — the standard
     dimension-lookup topology (clickstream x user profile). Unlike the
@@ -505,9 +501,7 @@ def run_stream_static_enrich(
         F.col("c_custkey").alias("user_id"),
         F.col("c_mktsegment").alias("mktsegment"),
     )
-    with replayed_events(
-        spark, sf_dir, state_partitions, max_files_per_trigger=None
-    ) as (stream, run):
+    with replayed_events(spark, sf_dir, max_files_per_trigger=None) as (stream, run):
         enriched = (
             stream.filter(F.col("event_type") == "purchase")
             .select("user_id", "value")
@@ -526,29 +520,23 @@ def run_stream_static_enrich(
     )
 
 
-def run_session_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    gap: str = "30 minutes",
-    watermark_delay: str = "1 day",
-    state_partitions: int = 4,
-) -> DataFrame:
+def run_session_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-employee activity sessions via ``session_window`` — the
-    data-dependent-boundary window (merges events closer than ``gap``;
-    session end = last event + gap). Batch-equivalent: gaps-and-islands
-    with a strictly-greater-than-gap break, so a DuckDB oracle can
-    reproduce the exact sessions.
+    data-dependent-boundary window (merges events closer than
+    :data:`SESSION_GAP`; session end = last event + gap).
+    Batch-equivalent: gaps-and-islands with a strictly-greater-than-gap
+    break, so a DuckDB oracle can reproduce the exact sessions.
 
     Returns (emp_id, session_start, session_end, n_events).
     """
     from .replay import replayed_events
 
-    with replayed_events(spark, sf_dir, state_partitions) as (stream, run):
+    with replayed_events(spark, sf_dir) as (stream, run):
         agg = (
             stream.filter(flagged_expr())
             .select(F.col("user_id").alias("emp_id"), "ts")
-            .withWatermark("ts", watermark_delay)
-            .groupBy(F.session_window("ts", gap).alias("w"), "emp_id")
+            .withWatermark("ts", WATERMARK_DELAY)
+            .groupBy(F.session_window("ts", SESSION_GAP).alias("w"), "emp_id")
             .agg(F.count("*").alias("n_events"))
         )
         out = run(agg, "session_stream_sink", output_mode="complete")
@@ -565,34 +553,20 @@ def run_session_stream(
     )
 
 
-def run_strike_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    state_partitions: int = 4,
-) -> DataFrame:
+def run_strike_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drive the stateful strike pipeline over the ``events`` table
     replayed as a file-source micro-batch stream; returns the final
     per-employee state as a batch DataFrame.
 
     In production the source line changes to
     ``spark.readStream.format("kafka")`` — the rest of the plan is
-    identical.
-
-    ``state_partitions`` sizes the stateful exchange: each shuffle
-    partition carries an HDFS-backed state store + an Arrow python
-    worker, a fixed per-partition setup cost. The strike operator
-    groups by ``STATE_BUCKETS`` key buckets, so at most that many
-    groups spread over the partitions whatever the key count; more
-    partitions than buckets leave some idle. 32 partitions measured 5×
-    slower than 8 on a 1,500-key batch, and 4 is another ~15-30%
-    cheaper across the carriers at sf0.1 with identical results. Size
-    it to executor count in production (at most ``STATE_BUCKETS``).
-    The state store is the session's provider
+    identical. The stateful exchange runs ``replay.STATE_PARTITIONS``
+    partitions, and the state store is the session's provider
     (``replay.ROCKSDB_PROVIDER`` is the at-scale choice).
     """
     from .replay import replayed_events
 
-    with replayed_events(spark, sf_dir, state_partitions) as (stream, run):
+    with replayed_events(spark, sf_dir) as (stream, run):
         out = run(_strike_states(_prepared_events(stream)), "strikes_stream_sink")
     return _latest_state(out)
 
@@ -640,16 +614,55 @@ class StrikeProcessor:
         pass
 
 
-def run_stream_stream_join(
-    spark: SparkSession,
-    sf_dir: str,
-    join_window: str = "1 hour",
-    watermark_delay: str = "2 hours",
-    state_partitions: int = 4,
-) -> DataFrame:
+#: The join carriers' one sentinel batch: a view and a purchase of
+#: unmatchable users (-1, -2) at a far-future event time. It joins
+#: nothing and only advances both watermarks past every real event.
+_JOIN_SENTINELS = (
+    (
+        {"event_id": -1, "user_id": -1, "event_type": "view"},
+        {"event_id": -2, "user_id": -2, "event_type": "purchase"},
+    ),
+)
+
+
+def _purchase_view_pairs(stream: DataFrame, how: str) -> DataFrame:
+    """Each purchase range-joined (``how``) to the same user's views
+    from the preceding :data:`JOIN_WINDOW`. Both sides carry a
+    :data:`JOIN_WATERMARK_DELAY` watermark, so the join state is
+    bounded and evicted once the watermark passes. Columns: p_user,
+    p_ts, purchase_id, v_user, view_ts, view_id."""
+    views = (
+        stream.filter(F.col("event_type") == "view")
+        .select(
+            F.col("user_id").alias("v_user"),
+            F.col("ts").alias("view_ts"),
+            F.col("event_id").alias("view_id"),
+        )
+        .withWatermark("view_ts", JOIN_WATERMARK_DELAY)
+    )
+    purchases = (
+        stream.filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("user_id").alias("p_user"),
+            F.col("ts").alias("p_ts"),
+            F.col("event_id").alias("purchase_id"),
+        )
+        .withWatermark("p_ts", JOIN_WATERMARK_DELAY)
+    )
+    return purchases.join(
+        views,
+        F.expr(
+            f"p_user = v_user AND "
+            f"view_ts >= p_ts - INTERVAL {JOIN_WINDOW} AND view_ts <= p_ts"
+        ),
+        how,
+    )
+
+
+def run_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream inner join with event-time range condition: each
     'purchase' joins the same user's 'view' events from the preceding
-    ``join_window``. Both sides carry watermarks, so the join state
+    :data:`JOIN_WINDOW`. Both sides carry watermarks, so the join state
     (buffered views waiting for possible purchases) is bounded and
     evicted once the watermark passes — the canonical attribution
     topology where BOTH sides arrive as streams.
@@ -669,51 +682,21 @@ def run_stream_stream_join(
     """
     from .replay import replayed_events
 
-    sentinel = [
-        {"event_id": -1, "user_id": -1, "event_type": "view"},
-        {"event_id": -2, "user_id": -2, "event_type": "purchase"},
-    ]
     with replayed_events(
         spark,
         sf_dir,
-        state_partitions,
-        sentinel_batches=(sentinel,),
+        sentinel_batches=_JOIN_SENTINELS,
         # one batch may ingest data + sentinel together: the join pairs
         # within the batch, the watermark jumps at batch end, and the
         # no-data flush emits every finalized group — identical output,
         # one fewer stateful-commit cycle across both operators
         max_files_per_trigger=None,
     ) as (stream, run):
-        views = (
-            stream.filter(F.col("event_type") == "view")
-            .select(
-                F.col("user_id").alias("v_user"),
-                F.col("ts").alias("view_ts"),
-                F.col("event_id").alias("view_id"),
-            )
-            .withWatermark("view_ts", watermark_delay)
-        )
-        purchases = (
-            stream.filter(F.col("event_type") == "purchase")
-            .select(
-                F.col("user_id").alias("p_user"),
-                F.col("ts").alias("p_ts"),
-                F.col("event_id").alias("purchase_id"),
-            )
-            .withWatermark("p_ts", watermark_delay)
-        )
-        pairs = purchases.join(
-            views,
-            F.expr(
-                f"p_user = v_user AND "
-                f"view_ts >= p_ts - INTERVAL {join_window} AND view_ts <= p_ts"
-            ),
-            "inner",
-        )
+        pairs = _purchase_view_pairs(stream, "inner")
         # in-stream per-purchase count; the window on the propagated
         # purchase event time is what lets append mode finalize groups
         per_purchase = pairs.groupBy(
-            F.window("p_ts", join_window).alias("__w"), "purchase_id", "p_user"
+            F.window("p_ts", JOIN_WINDOW).alias("__w"), "purchase_id", "p_user"
         ).agg(F.count(F.lit(1)).alias("n_views"))
         out = run(per_purchase, "stream_join_sink", output_mode="append")
     # append mode emits each finalized group exactly once; just project
@@ -723,20 +706,15 @@ def run_stream_stream_join(
 
 
 def run_stream_stream_left_join(
-    spark: SparkSession,
-    sf_dir: str,
-    join_window: str = "1 hour",
-    watermark_delay: str = "2 hours",
-    state_partitions: int = 4,
-    join_type: str = "leftOuter",
+    spark: SparkSession, sf_dir: str, join_type: str = "leftOuter"
 ) -> DataFrame:
     """LEFT-OUTER stream-stream join: every purchase emits — matched
-    against the same user's preceding-``join_window`` views when they
-    exist, or ONCE with a NULL view once the watermark proves no match
-    can still arrive. The null-emission path is the capability the
-    inner join (:func:`run_stream_stream_join`) cannot express: "which
-    purchases had NO preceding engagement" as a stream, with join state
-    still bounded and watermark-evicted on both sides.
+    against the same user's preceding-:data:`JOIN_WINDOW` views when
+    they exist, or ONCE with a NULL view once the watermark proves no
+    match can still arrive. The null-emission path is the capability
+    the inner join (:func:`run_stream_stream_join`) cannot express:
+    "which purchases had NO preceding engagement" as a stream, with
+    join state still bounded and watermark-evicted on both sides.
 
     ``join_type="fullOuter"`` upgrades the null-emission guarantee to
     BOTH sides: unmatched views (no purchase within the window) also
@@ -754,43 +732,10 @@ def run_stream_stream_left_join(
     """
     from .replay import replayed_events
 
-    sentinel = [
-        {"event_id": -1, "user_id": -1, "event_type": "view"},
-        {"event_id": -2, "user_id": -2, "event_type": "purchase"},
-    ]
     with replayed_events(
-        spark,
-        sf_dir,
-        state_partitions,
-        sentinel_batches=(sentinel,),
-        max_files_per_trigger=None,
+        spark, sf_dir, sentinel_batches=_JOIN_SENTINELS, max_files_per_trigger=None
     ) as (stream, run):
-        views = (
-            stream.filter(F.col("event_type") == "view")
-            .select(
-                F.col("user_id").alias("v_user"),
-                F.col("ts").alias("view_ts"),
-                F.col("event_id").alias("view_id"),
-            )
-            .withWatermark("view_ts", watermark_delay)
-        )
-        purchases = (
-            stream.filter(F.col("event_type") == "purchase")
-            .select(
-                F.col("user_id").alias("p_user"),
-                F.col("ts").alias("p_ts"),
-                F.col("event_id").alias("purchase_id"),
-            )
-            .withWatermark("p_ts", watermark_delay)
-        )
-        pairs = purchases.join(
-            views,
-            F.expr(
-                f"p_user = v_user AND "
-                f"view_ts >= p_ts - INTERVAL {join_window} AND view_ts <= p_ts"
-            ),
-            join_type,
-        )
+        pairs = _purchase_view_pairs(stream, join_type)
         # fullOuter also emits watermark-expired unmatched VIEWS, whose
         # p_user is NULL — the caller-facing user_id is whichever side
         # exists (they agree on matched rows by the join condition)
@@ -815,7 +760,6 @@ def _run_checkpointed_pass(
     ckpt_dir: str,
     out_dir: str,
     plan_fn,
-    state_partitions: int = 4,
 ) -> dict | None:
     """Shared scaffolding for every durable-checkpoint availableNow
     pass: pinned stream confs (:func:`replay.stream_confs`), staged-file
@@ -829,9 +773,9 @@ def _run_checkpointed_pass(
     import os as _os
 
     from ..sources.io import normalize_nanos, parquet_schema
-    from .replay import stream_confs
+    from .replay import STATE_PARTITIONS, stream_confs
 
-    with stream_confs(spark, state_partitions):
+    with stream_confs(spark, STATE_PARTITIONS):
         staged = sorted(_glob.glob(_os.path.join(stage_dir, "*.parquet")))
         if not staged:
             raise ValueError(f"no parquet files staged in {stage_dir}")
@@ -871,11 +815,7 @@ def _latest_per_key(df: DataFrame, key_cols: list, out_cols: list) -> DataFrame:
 
 
 def run_strike_pass(
-    spark: SparkSession,
-    stage_dir: str,
-    ckpt_dir: str,
-    out_dir: str,
-    state_partitions: int = 4,
+    spark: SparkSession, stage_dir: str, ckpt_dir: str, out_dir: str
 ) -> dict | None:
     """ONE availableNow pass of the stateful strike pipeline over the
     files currently staged in ``stage_dir``, with a DURABLE checkpoint.
@@ -905,7 +845,6 @@ def run_strike_pass(
     return _run_checkpointed_pass(
         spark, stage_dir, ckpt_dir, out_dir,
         lambda stream: _strike_states(_prepared_events(stream)),
-        state_partitions,
     )
 
 
@@ -921,13 +860,7 @@ def strike_final_state(spark: SparkSession, out_dir: str) -> DataFrame:
 
 
 def run_windowed_pass(
-    spark: SparkSession,
-    stage_dir: str,
-    ckpt_dir: str,
-    out_dir: str,
-    window_duration: str = "1 day",
-    watermark_delay: str = "1 day",
-    state_partitions: int = 4,
+    spark: SparkSession, stage_dir: str, ckpt_dir: str, out_dir: str
 ) -> None:
     """ONE availableNow pass of the WATERMARK + TUMBLING-WINDOW flagged
     counter over the files staged in ``stage_dir``, with a durable
@@ -944,23 +877,9 @@ def run_windowed_pass(
     with the batch id; :func:`windowed_final_counts` takes the newest
     emission per (window, employee).
     """
-    def _plan(stream: DataFrame) -> DataFrame:
-        return (
-            stream.filter(flagged_expr())
-            .select(F.col("user_id").alias("emp_id"), "ts")
-            .withWatermark("ts", watermark_delay)
-            .groupBy(F.window("ts", window_duration).alias("w"), "emp_id")
-            .agg(F.count("*").alias("n_flagged"))
-            .select(
-                F.col("w.start").cast("string").alias("window_start"),
-                F.col("w.end").cast("string").alias("window_end"),
-                "emp_id",
-                "n_flagged",
-            )
-        )
-
     _run_checkpointed_pass(
-        spark, stage_dir, ckpt_dir, out_dir, _plan, state_partitions
+        spark, stage_dir, ckpt_dir, out_dir,
+        lambda stream: _window_bounds(_flag_window_counts(stream), "emp_id", "n_flagged"),
     )
 
 

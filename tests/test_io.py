@@ -432,3 +432,24 @@ def test_money_native_table_sees_a_rewritten_table(spark, tmp_path, monkeypatch)
     ]
     # the old copy's files are untouched, so a frame still reading it works
     assert sorted(r.o_orderkey for r in first.collect()) == [1, 2, 3]
+
+
+def test_money_native_table_copy_is_under_this_process_scratch_root(
+    spark, tmp_path, monkeypatch
+):
+    """The decimal copy lives under this process's ``eds_scratch_<pid>``
+    root, so two processes that reach one money table at the same
+    moment never write (and clobber) one shared copy."""
+    import tempfile
+    from urllib.parse import urlparse
+
+    from employee_data_management_system_data_engineering_solution_spark.sources.io import (
+        money_native_table,
+    )
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    sf = str(tmp_path / "sf")
+    _write_orders(sf, [(1, 1.25), (2, 2.5)])
+    root = os.path.join(str(tmp_path), f"eds_scratch_{os.getpid()}") + os.sep
+    files = money_native_table(spark, sf, "orders").inputFiles()
+    assert files and all(urlparse(f).path.startswith(root) for f in files)

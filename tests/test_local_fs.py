@@ -12,6 +12,9 @@ import sys
 import textwrap
 from pathlib import Path
 
+from employee_data_management_system_data_engineering_solution_spark.streaming.replay import (
+    STATE_PARTITIONS,
+)
 from tools import build_localfs_jar
 
 ROOT = Path(__file__).resolve().parents[1]
@@ -73,7 +76,7 @@ def test_strike_passes_and_parquet_writes_start_no_process(tmp_path):
                 }}),
                 os.path.join(stage, name),
             )
-            run_strike_pass(spark, stage, ckpt, out, state_partitions=2)
+            run_strike_pass(spark, stage, ckpt, out)
         rows = strike_final_state(spark, out).count()
         write_parquet(spark.range(10), os.path.join(work, "written"))
         with open({str(log)!r}) as fh:
@@ -134,7 +137,7 @@ def test_strike_passes_and_parquet_writes_start_no_process(tmp_path):
         "sticky": oct(0o1777),
     }
     # Hadoop's .crc beside every sink file; Spark's N.delta.crc beside
-    # each state delta (2 partitions x 2 versions)
+    # each state delta (STATE_PARTITIONS partitions x 2 versions)
     assert got["sink_crc"] > 0
-    assert got["delta_crc"] == 4
+    assert got["delta_crc"] == STATE_PARTITIONS * 2
     assert got["secret_crc"]

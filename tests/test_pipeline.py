@@ -53,7 +53,7 @@ def test_stream_dedup_collapses_duplicate_event_ids(spark, tmp_path):
     shutil.move(part, str(tmp_path / "events.parquet"))
     got = {
         r.event_type: r.n_events
-        for r in run_dedup_stream(spark, str(tmp_path), state_partitions=2).collect()
+        for r in run_dedup_stream(spark, str(tmp_path)).collect()
     }
     assert got == {"click": 2, "view": 1}
 
@@ -84,7 +84,7 @@ def test_session_stream_boundaries(spark, tmp_path):
     shutil.move(part, str(tmp_path / "events.parquet"))
 
     got = sorted(
-        map(tuple, run_session_stream(spark, str(tmp_path), state_partitions=2).collect())
+        map(tuple, run_session_stream(spark, str(tmp_path)).collect())
     )
     assert got == [
         (1, "2021-01-01 00:00:00", "2021-01-01 01:00:00", 2),
@@ -102,7 +102,7 @@ def test_windowed_flag_stream_matches_batch_counts(spark):
     )
 
     sf = "/root/testdata/sf0.001"
-    got = run_windowed_flag_stream(spark, sf, state_partitions=2)
+    got = run_windowed_flag_stream(spark, sf)
     want = (
         read_table(spark, sf, "events")
         .filter(F.col("event_type") == "error")

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import Row
 
-from employee_data_management_system_data_engineering_solution_spark.operators.skew import (
+from employee_data_management_system_data_engineering_solution_spark.operators.joins import (
     salted_join,
 )
 
@@ -16,14 +16,14 @@ def test_salted_join_equals_plain_join(spark):
     )
     dim = spark.createDataFrame([Row(k=i, name=f"d{i}") for i in range(1, 7)])
     plain = sorted(map(tuple, fact.join(dim, on="k").collect()))
-    salted = sorted(map(tuple, salted_join(fact, dim, on=["k"], salt=4).collect()))
+    salted = sorted(map(tuple, salted_join(fact, dim, ["k"], salts=4).collect()))
     assert salted == plain
 
 
 def test_salted_join_spreads_hot_key(spark):
     fact = spark.createDataFrame([Row(k=1, v=i) for i in range(100)])
     dim = spark.createDataFrame([Row(k=1, name="hot")])
-    out = salted_join(fact, dim, on=["k"], salt=8)
+    out = salted_join(fact, dim, ["k"], salts=8)
     assert out.count() == 100
     # the salt must actually take multiple values for the hot key
     n_salts = (

@@ -208,7 +208,7 @@ def test_run_strike_stream_matches_state_semantics(spark, tmp_path):
 
     got = {
         r.emp_id: r
-        for r in run_strike_stream(spark, str(tmp_path), state_partitions=2).collect()
+        for r in run_strike_stream(spark, str(tmp_path)).collect()
     }
     assert got[1].strike_count == 2 and got[1].status == "ACTIVE"
     assert got[2].strike_count == 15 and got[2].status == "INACTIVE"
@@ -250,14 +250,14 @@ def test_strike_pass_checkpoint_recovery(spark, tmp_path):
     ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
 
     _stage_file(spark, tmp_path, jan, str(stage_dir / "a_jan.parquet"))
-    run_strike_pass(spark, str(stage_dir), ckpt, out, state_partitions=2)
+    run_strike_pass(spark, str(stage_dir), ckpt, out)
     p1 = {r.emp_id: r for r in strike_final_state(spark, out).collect()}
     assert p1[1].strike_count == 3 and p1[1].status == "ACTIVE"
     assert p1[2].strike_count == 12 and p1[2].status == "INACTIVE"
     assert 3 not in p1
 
     _stage_file(spark, tmp_path, feb, str(stage_dir / "b_feb.parquet"))
-    run_strike_pass(spark, str(stage_dir), ckpt, out, state_partitions=2)
+    run_strike_pass(spark, str(stage_dir), ckpt, out)
     got = {r.emp_id: r for r in strike_final_state(spark, out).collect()}
     assert got[1].strike_count == 2 and got[1].status == "ACTIVE"
     assert got[2].strike_count == 15 and got[2].status == "INACTIVE"
@@ -277,7 +277,7 @@ def test_strike_pass_checkpoint_recovery(spark, tmp_path):
 
     # single-run reference: both files staged up front, fresh checkpoint
     ckpt2, out2 = str(tmp_path / "ckpt2"), str(tmp_path / "out2")
-    run_strike_pass(spark, str(stage_dir), ckpt2, out2, state_partitions=2)
+    run_strike_pass(spark, str(stage_dir), ckpt2, out2)
     ref = {r.emp_id: r for r in strike_final_state(spark, out2).collect()}
     assert {k: (v.strike_count, v.status) for k, v in got.items()} == {
         k: (v.strike_count, v.status) for k, v in ref.items()
@@ -373,7 +373,7 @@ def test_timeless_strike_survives_cross_batch_reset(spark, tmp_path):
     ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
 
     _stage_file(spark, tmp_path, batch1, str(stage_dir / "a.parquet"))
-    run_strike_pass(spark, str(stage_dir), ckpt, out, state_partitions=2)
+    run_strike_pass(spark, str(stage_dir), ckpt, out)
     p1 = {
         r.emp_id: r.strike_count
         for r in strike_final_state(spark, out).collect()
@@ -381,7 +381,7 @@ def test_timeless_strike_survives_cross_batch_reset(spark, tmp_path):
     assert p1[1] == 3  # 2 dated + 1 timeless
 
     _stage_file(spark, tmp_path, batch2, str(stage_dir / "b.parquet"))
-    run_strike_pass(spark, str(stage_dir), ckpt, out, state_partitions=2)
+    run_strike_pass(spark, str(stage_dir), ckpt, out)
     got = {r.emp_id: r for r in strike_final_state(spark, out).collect()}
     assert got[1].strike_count == 2 and got[1].status == "ACTIVE"
 
@@ -413,12 +413,12 @@ def test_strike_stream_rocksdb_provider_matches_default(spark, tmp_path):
 
     base = {
         r.emp_id: (r.strike_count, r.status)
-        for r in run_strike_stream(spark, str(tmp_path), state_partitions=2).collect()
+        for r in run_strike_stream(spark, str(tmp_path)).collect()
     }
     with _session_provider(spark, ROCKSDB_PROVIDER):
         rocks = {
             r.emp_id: (r.strike_count, r.status)
-            for r in run_strike_stream(spark, str(tmp_path), state_partitions=2).collect()
+            for r in run_strike_stream(spark, str(tmp_path)).collect()
         }
     assert rocks == base
     assert rocks[2] == (15, "INACTIVE")
@@ -426,9 +426,14 @@ def test_strike_stream_rocksdb_provider_matches_default(spark, tmp_path):
 
 def test_dedup_within_watermark_matches_plain_dedup(spark):
     """dropDuplicatesWithinWatermark (state bounded by the watermark
-    window — the unbounded-stream production variant) must agree with
-    plain dropDuplicates when duplicates arrive inside the window."""
+    window — the unbounded-stream production variant), run here on the
+    same replay and watermark, must agree with the plain dropDuplicates
+    of run_dedup_stream when duplicates arrive inside the window."""
+    from employee_data_management_system_data_engineering_solution_spark.streaming.replay import (
+        replayed_events,
+    )
     from employee_data_management_system_data_engineering_solution_spark.streaming.strikes import (
+        WATERMARK_DELAY,
         run_dedup_stream,
     )
 
@@ -436,9 +441,18 @@ def test_dedup_within_watermark_matches_plain_dedup(spark):
     plain = {
         r.event_type: r.n_events for r in run_dedup_stream(spark, sf).collect()
     }
+    with replayed_events(spark, sf) as (stream, run):
+        agg = (
+            stream.select("event_id", "event_type", "ts")
+            .withWatermark("ts", WATERMARK_DELAY)
+            .dropDuplicatesWithinWatermark(["event_id"])
+            .groupBy("event_type")
+            .agg(F.count("*").alias("n_events"))
+        )
+        out = run(agg, "dedup_within_watermark_sink")
     bounded = {
         r.event_type: r.n_events
-        for r in run_dedup_stream(spark, sf, within_watermark=True).collect()
+        for r in out.groupBy("event_type").agg(F.max("n_events").alias("n_events")).collect()
     }
     assert bounded == plain and sum(plain.values()) > 0
 
@@ -468,12 +482,12 @@ def test_windowed_pass_checkpoint_recovery(spark, tmp_path):
     ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
 
     _stage_file(spark, tmp_path, first, str(stage_dir / "a_first.parquet"))
-    run_windowed_pass(spark, str(stage_dir), ckpt, out, state_partitions=2)
+    run_windowed_pass(spark, str(stage_dir), ckpt, out)
     p1 = {r.emp_id: r.n_flagged for r in windowed_final_counts(spark, out).collect()}
     assert p1 == {1: 3, 2: 1}
 
     _stage_file(spark, tmp_path, late, str(stage_dir / "b_late.parquet"))
-    run_windowed_pass(spark, str(stage_dir), ckpt, out, state_partitions=2)
+    run_windowed_pass(spark, str(stage_dir), ckpt, out)
     rows = windowed_final_counts(spark, out).collect()
     got = {r.emp_id: r.n_flagged for r in rows}
     # emp 1's window count CONTINUED from recovered state (3+2), emp 2
@@ -494,7 +508,7 @@ def test_windowed_pass_checkpoint_recovery(spark, tmp_path):
 
     # single-run reference: both files staged up front, fresh checkpoint
     ckpt2, out2 = str(tmp_path / "ckpt2"), str(tmp_path / "out2")
-    run_windowed_pass(spark, str(stage_dir), ckpt2, out2, state_partitions=2)
+    run_windowed_pass(spark, str(stage_dir), ckpt2, out2)
     ref = {r.emp_id: r.n_flagged for r in windowed_final_counts(spark, out2).collect()}
     assert got == ref
 
@@ -559,9 +573,9 @@ def test_strike_pass_recovery_under_rocksdb_store(spark, tmp_path):
 
     with _session_provider(spark, ROCKSDB_PROVIDER):
         _stage_file(spark, tmp_path, jan, str(stage_dir / "a_jan.parquet"))
-        run_strike_pass(spark, str(stage_dir), ckpt, out, state_partitions=2)
+        run_strike_pass(spark, str(stage_dir), ckpt, out)
         _stage_file(spark, tmp_path, feb, str(stage_dir / "b_feb.parquet"))
-        run_strike_pass(spark, str(stage_dir), ckpt, out, state_partitions=2)
+        run_strike_pass(spark, str(stage_dir), ckpt, out)
     got = {
         r.emp_id: (r.strike_count, r.status)
         for r in strike_final_state(spark, out).collect()
@@ -640,7 +654,7 @@ def test_strike_pass_null_and_huge_emp_ids_match_oracle(spark, tmp_path):
     ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
     for name, rows in (("a.parquet", batch1), ("b.parquet", batch2)):
         _stage_events(spark, tmp_path, rows, str(stage_dir / name))
-        run_strike_pass(spark, str(stage_dir), ckpt, out, state_partitions=2)
+        run_strike_pass(spark, str(stage_dir), ckpt, out)
         assert _final_state(spark, out) == _oracle_state(stage_dir), name
     assert _final_state(spark, out) == {
         (None, 2, "ACTIVE"),
@@ -666,10 +680,10 @@ def test_strike_pass_emits_only_new_or_changed_employees(spark, tmp_path):
     stage_dir.mkdir()
     ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
     _stage_events(spark, tmp_path, batch1, str(stage_dir / "a.parquet"))
-    run_strike_pass(spark, str(stage_dir), ckpt, out, state_partitions=2)
+    run_strike_pass(spark, str(stage_dir), ckpt, out)
     before = _final_state(spark, out)
     _stage_events(spark, tmp_path, batch2, str(stage_dir / "b.parquet"))
-    run_strike_pass(spark, str(stage_dir), ckpt, out, state_partitions=2)
+    run_strike_pass(spark, str(stage_dir), ckpt, out)
 
     emitted = spark.read.parquet(out).filter(F.col("__batch_id") == 1)
     assert {r.emp_id for r in emitted.collect()} == {2, 3}
@@ -699,11 +713,40 @@ def test_strike_pass_state_rows_bounded_by_buckets(spark, tmp_path):
         glob.glob(os.path.join(work, "part-*.parquet"))[0], str(stage_dir / "a.parquet")
     )
     ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
-    progress = run_strike_pass(spark, str(stage_dir), ckpt, out, state_partitions=2)
+    progress = run_strike_pass(spark, str(stage_dir), ckpt, out)
     assert progress["numInputRows"] == 3000
     assert 0 < progress["stateOperators"][0]["numRowsTotal"] <= STATE_BUCKETS
     final = _final_state(spark, out)
     assert len(final) == 1500 and final == _oracle_state(stage_dir)
+
+
+def test_strike_checkpoint_records_state_partitions(spark, tmp_path):
+    """A strike checkpoint pins its partition count: the offset log's
+    metadata records ``spark.sql.shuffle.partitions`` as
+    ``STATE_PARTITIONS``, and a restart runs with the recorded value,
+    not the session's. 4 is the format of every strike checkpoint
+    written so far; a new value needs a fresh checkpoint, so change
+    this pin together with the constant."""
+    import json
+
+    from employee_data_management_system_data_engineering_solution_spark.streaming.replay import (
+        STATE_PARTITIONS,
+    )
+    from employee_data_management_system_data_engineering_solution_spark.streaming.strikes import (
+        run_strike_pass,
+    )
+
+    jan, _ = _jan_feb_rows()
+    stage_dir = tmp_path / "stage"
+    stage_dir.mkdir()
+    _stage_file(spark, tmp_path, jan, str(stage_dir / "a_jan.parquet"))
+    ckpt = str(tmp_path / "ckpt")
+    run_strike_pass(spark, str(stage_dir), ckpt, str(tmp_path / "out"))
+    with open(os.path.join(ckpt, "offsets", "0")) as fh:
+        version, metadata = fh.read().splitlines()[:2]
+    recorded = json.loads(metadata)["conf"]["spark.sql.shuffle.partitions"]
+    assert version == "v1"
+    assert recorded == str(STATE_PARTITIONS) == "4"
 
 
 def test_stream_confs_restore_prior_values(spark):
